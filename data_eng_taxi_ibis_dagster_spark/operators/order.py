@@ -1,26 +1,45 @@
-"""Deterministic global ordering without a single-partition sort.
+"""Deterministic global and per-group ordering without a single-partition sort.
 
 A global ``row_number() OVER (ORDER BY …)`` in Spark collapses to ONE
-window partition — the whole dataset funnels through a single task,
-which is exactly the anti-pattern a 100 TB engine cannot contain.
-``repartitionByRange`` + ``zipWithIndex`` is the folk fix, but the range
-partitioner picks boundaries by *sampling with a per-job seed*, so the
-counts job and the indexing job can disagree unless the intermediate is
-persisted — fragile and cache-hungry at scale.
+window partition — the whole dataset funnels through a single task.
+``repartitionByRange`` + ``zipWithIndex`` is the folk fix, but its
+range boundaries come from a sampling pass with a per-job seed, so two
+consumers of the same input can disagree on a row's partition.
 
-:func:`global_sort_index` instead derives the range buckets
-deterministically from the data itself: when the sort key is (or leads
-with) a hex-encoded hash, its first ``prefix_chars`` characters are a
-monotone function of the key, so bucket id = int(prefix, 16) yields
-up to 16^prefix_chars ordered, statistically balanced buckets with NO
-sampling pass. Global position is then
+Every ordered analytic here is one range-bucketed scan, :func:`_scan`,
+with deterministic buckets derived from the data itself:
 
-    pos = (rows in all lower buckets) + rank within bucket
+1. a ``(lo, hi)`` range relation — a global (or per-group) ``min``/``max``
+   aggregate over the input, or over caller-supplied ``bounds``;
+2. an affine bucket id, a clamped monotone function of the score, so
+   equal scores always share a bucket (NULL scores lead in bucket −1);
+3. a per-(group, bucket) aggregate and an offsets window over those
+   ≤ ``buckets`` rows per group — each bucket's combine over all lower
+   buckets (plus, optionally, the group total);
+4. a within-(group, bucket) window, combined with the offset.
 
-computed with one hash shuffle on the bucket id (the per-bucket window)
-plus one tiny aggregate (bucket → count, 16^prefix rows) whose running
-sum is broadcast back. Every step is deterministic, so the result equals
-the oracle's global ``row_number`` exactly, run after run.
+The public functions differ only in three ways:
+
+* the combiner — row count (rank/ntile), sum (prefix sum) or max
+  (prefix max);
+* the frame — inclusive for count and sum, exclusive for max;
+* the grouping — none (``distributed_*``) or ``group_cols``
+  (``grouped_*``).
+
+The only single-partition work is the offsets window over ``buckets``
+rows, and every broadcast of the scan goes through :func:`_group_join`:
+the 1-row (or |groups|-row) range relation and the ≤ ``buckets`` ×
+|groups| offsets relation.
+
+Inputs must be deterministic: the range probe and the staged relation
+both consume the input, so its upstream plan runs once per consumer and
+both runs must see the same rows. Pinning the input with
+``localCheckpoint`` is not an option — under AQE it executes the input's
+shuffle stages at plan build, outside the caller's action.
+
+:func:`global_sort_index` is the hash-prefix variant: when the sort key
+leads with a hex hash, its first characters already are balanced,
+ordered buckets, with no range probe at all.
 """
 
 from __future__ import annotations
@@ -28,57 +47,153 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Name of the range-bucket column :func:`_scan` partitions its windows
+#: by (and orders its offsets windows by).
+BUCKET_COL = "_scan_bucket"
 
-def _lo_hi(df: DataFrame, score: Column,
-           bounds: DataFrame | None) -> DataFrame:
-    """The 1-row ``(_lo, _hi)`` range relation the affine bucketing
-    broadcasts. By default it is ``min/max(score)`` over ``df`` itself;
-    ``bounds`` lets the CALLER supply a cheaper deterministic probe
-    (round 13, guide §1.2/§8 "use what you know"): e.g. min/max over
-    the RAW scan feeding a pre-aggregation, instead of re-evaluating
-    the aggregate subtree a third time just to learn its range.
-
-    Correctness is INSENSITIVE to the values: the bucket id is clamped
-    to ``[0, buckets-1]`` and remains a monotone function of the score
-    for ANY (lo, hi), so wrong bounds only unbalance bucket loads —
-    they can never reorder, drop, or duplicate a row. ``bounds`` must
-    be a deterministic 1-row relation (first column = low, second =
-    high) that is non-NULL whenever ``df`` is non-empty; as a
-    belt-and-braces guard the bucket expression coalesces a NULL
-    affine result (NULL lo/hi) to bucket 0 — still monotone-constant,
-    merely serial."""
-    if bounds is None:
-        return df.select(
-            F.min(score).cast("double").alias("_lo"),
-            F.max(score).cast("double").alias("_hi"),
-        )
-    lo_c, hi_c = bounds.columns[:2]
-    return bounds.select(F.col(lo_c).cast("double").alias("_lo"),
-                         F.col(hi_c).cast("double").alias("_hi"))
+#: combiner → the aggregate that rolls rows (and buckets) up.
+_ROLL = {"count": F.sum, "sum": F.sum, "max": F.max}
 
 
-def _group_join(left: DataFrame, right: DataFrame,
-                group_cols: list[str], hint,
-                bucket_col: str | None = None) -> DataFrame:
-    """Equi-join ``left`` to ``right`` on the group columns with
-    NULL-AS-EQUAL semantics (plus, optionally, a non-null bucket
-    column). ``PARTITION BY`` windows keep NULL group keys as their
-    own partition, so the grouped_* machinery's internal joins back to
-    the per-group (min, max) / offsets relations must too — a plain
-    null-unsafe equi-join would silently DROP every NULL-group row
-    (round-6 advisor finding). The right side's join columns are
-    renamed before the ``eqNullSafe`` condition so self-derived
-    lineage stays unambiguous; EqualNullSafe keys still plan as hash
-    joins (no nested loop)."""
-    cols = [*group_cols] + ([bucket_col] if bucket_col else [])
+def _group_join(left: DataFrame, right: DataFrame, cols: list[str],
+                hint: bool) -> DataFrame:
+    """Equi-join ``left`` to ``right`` on ``cols`` with NULL-AS-EQUAL
+    semantics (a cross join when ``cols`` is empty), broadcasting
+    ``right`` when ``hint`` is set. ``PARTITION BY`` keeps NULL group
+    keys as their own partition, so the joins back to the range and
+    offsets relations must too — a plain equi-join would drop every
+    NULL-group row. The bucket column is never NULL and joins
+    with plain equality, which keeps the planner's uniqueness-based size
+    estimate for the join (a ``<=>`` key hides it, and the estimate falls
+    back to the product of both sides). The right side's join columns
+    are renamed first so self-derived lineage stays unambiguous;
+    EqualNullSafe keys still plan as hash joins."""
     ren = {c: f"_nsj_{c}" for c in cols}
-    for c, rc in ren.items():
-        right = right.withColumnRenamed(c, rc)
-    cond = None
-    for c, rc in ren.items():
-        e = left[c].eqNullSafe(right[rc])
-        cond = e if cond is None else (cond & e)
-    return left.join(hint(right), cond).drop(*ren.values())
+    right = right.withColumnsRenamed(ren)
+    cond = [left[c] == right[rc] if c == BUCKET_COL
+            else left[c].eqNullSafe(right[rc]) for c, rc in ren.items()]
+    right = F.broadcast(right) if hint else right
+    return left.join(right, cond or None).drop(*ren.values())
+
+
+def _merge(combiner: str, lower: Column, within: Column) -> Column:
+    """A row's result from its lower-part offset and within-part value
+    (``greatest`` skips NULLs, as an empty max frame is NULL)."""
+    return F.greatest(lower, within) if combiner == "max" else lower + within
+
+
+def _offsets(rel: DataFrame, keys: list[str], order: str, col: str,
+             combiner: str, name: str, total: str | None) -> DataFrame:
+    """Per row of ``rel``: the combine of ``col`` over every strictly
+    lower ``order`` row of its ``keys`` partition as ``name`` (0 for an
+    empty count/sum), plus the partition's sum as ``total``."""
+    w = Window.partitionBy(*keys).orderBy(order)
+    lower = _ROLL[combiner](col).over(
+        w.rowsBetween(Window.unboundedPreceding, -1))
+    if combiner != "max":
+        lower = F.coalesce(lower, F.lit(0).cast("long"))
+    tot = [] if total is None else [F.sum(col).over(w.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing)).alias(total)]
+    return rel.select(*keys, order, lower.alias(name), *tot)
+
+
+def _scan(df: DataFrame, group_cols: list[str], score: Column,
+          value: Column | None, tiebreaks: tuple[Column, ...],
+          combiner: str, *, buckets: int, name: str,
+          total_name: str | None = None, bounds: DataFrame | None = None,
+          hint: bool = True) -> DataFrame:
+    """The range-bucketed scan behind every public function (see the
+    module docstring). ``value`` is ignored by the count combiner.
+
+    ``bounds`` replaces the per-group range probe with one global range
+    taken from a caller relation (first column = low, second = high).
+    It is normalized by the same aggregate as the probe, so it always
+    yields one row with lo ≤ hi. Correctness is insensitive to the range
+    values: the bucket stays a clamped monotone function of the score,
+    so a poor range only unbalances bucket loads, and a NULL range puts
+    every non-NULL score in bucket 0.
+
+    ``hint=False`` hash-joins the per-group range and offsets
+    relations instead of broadcasting them, for when |groups| itself
+    scales with the input (the recursive ``tie_split`` path)."""
+    g, b = [*group_cols], BUCKET_COL
+    roll = _ROLL[combiner]
+    if bounds is None:
+        src, keys, lo, hi = df, g, score, score
+    else:
+        src, keys = bounds, []
+        lo, hi = (F.col(c) for c in bounds.columns[:2])
+    rng = src.groupBy(*keys).agg(
+        F.min(F.least(lo, hi)).cast("double").alias("_scan_lo"),
+        F.max(F.greatest(lo, hi)).cast("double").alias("_scan_hi"))
+    s, lo, hi = F.col("_scan_s"), F.col("_scan_lo"), F.col("_scan_hi")
+    affine = F.floor((s.cast("double") - lo) / ((hi - lo) + F.lit(1e-12))
+                     * buckets)
+    cols = {"_scan_s": score} if combiner == "count" else {
+        "_scan_s": score, "_scan_v": value}
+    staged = (
+        _group_join(df.withColumns(cols), rng, keys, hint or not keys)
+        .withColumn(b, F.when(s.isNull(), F.lit(-1)).otherwise(F.coalesce(
+            F.least(F.lit(buckets - 1), F.greatest(F.lit(0), affine)),
+            F.lit(0))).cast("long"))
+        .drop("_scan_lo", "_scan_hi"))
+    agg, within = ((F.count("*"), F.row_number()) if combiner == "count"
+                   else (roll("_scan_v"), roll("_scan_v")))
+    offsets = _offsets(
+        staged.groupBy(*g, b).agg(agg.alias("_scan_agg")),
+        g, b, "_scan_agg", combiner, "_scan_off",
+        None if total_name is None else "_scan_tot")
+    w = Window.partitionBy(*g, b).orderBy(s, *tiebreaks).rowsBetween(
+        Window.unboundedPreceding,
+        -1 if combiner == "max" else Window.currentRow)
+    out = _group_join(staged, offsets, [*g, b], hint or not g) \
+        .withColumn(name, _merge(combiner, F.col("_scan_off"), within.over(w)))
+    if total_name is not None:
+        out = out.withColumn(total_name, F.col("_scan_tot"))
+    return out.drop(b, "_scan_s", "_scan_v", "_scan_off", "_scan_tot")
+
+
+def _tie_split(df: DataFrame, score: Column, value: Column,
+               tiebreaks: tuple[Column, ...], tie_split: Column,
+               combiner: str, *, buckets: int, name: str,
+               total_name: str | None, bounds: DataFrame | None,
+               tie_bounds: DataFrame | None,
+               bounded_scores: bool) -> DataFrame:
+    """The point-mass decomposition of a global prefix sum or max,
+    ordered by ``(score, tie_split, *tiebreaks)``: per-score aggregates;
+    an exclusive cross-score prefix over that DISTINCT-score relation
+    (which cannot carry a point mass); and a within-score prefix that
+    range-buckets ``tie_split`` per score. Exact because SUM and MAX are
+    order-insensitive within a tie group.
+
+    The cross-score prefix is a recursive :func:`_scan` over the
+    distinct scores (``bounds`` is its range), joined back by hash —
+    |distinct scores| may scale with the input. With ``bounded_scores``
+    the caller declares the score domain bounded (calendar days, an
+    enum): the prefix is then one window over the per-score relation and
+    every join back broadcasts. ``tie_bounds`` is the within-score range
+    (over ``tie_split``)."""
+    roll = _ROLL[combiner]
+    df = df.withColumn("_ts_s", score).withColumn("_ts_v", value)
+    per = df.groupBy("_ts_s").agg(roll("_ts_v").alias("_ts_tot"))
+    tot = None if total_name is None else "_ts_gtot"
+    if bounded_scores:
+        off = _offsets(per, [], "_ts_s", "_ts_tot", combiner, "_ts_off", tot)
+    else:
+        off = _scan(per, [], F.col("_ts_s"), F.col("_ts_tot"), (), combiner,
+                    buckets=buckets, name="_ts_off", total_name=tot,
+                    bounds=bounds)
+        if combiner == "sum":  # inclusive → exclusive
+            off = off.withColumn("_ts_off", F.col("_ts_off") - F.col("_ts_tot"))
+        off = off.select("_ts_s", "_ts_off", *([tot] if tot else []))
+    within = _scan(df, ["_ts_s"], tie_split, F.col("_ts_v"), tiebreaks,
+                   combiner, buckets=buckets, name="_ts_win",
+                   bounds=tie_bounds, hint=bounded_scores)
+    out = _group_join(within, off, ["_ts_s"], bounded_scores).withColumn(
+        name, _merge(combiner, F.col("_ts_off"), F.col("_ts_win")))
+    if total_name is not None:
+        out = out.withColumn(total_name, F.col(tot))
+    return out.drop("_ts_s", "_ts_v", "_ts_off", "_ts_win", "_ts_gtot")
 
 
 def global_sort_index(
@@ -93,10 +208,12 @@ def global_sort_index(
     hex string (e.g. ``F.md5(...)``). ``tiebreaks`` must make the full
     ordering unique for the rank to be well-defined.
 
-    ``prefix_chars=2`` → 256 buckets; raise it when executor-count or
-    skew demands finer granularity (3 → 4096). The offsets window runs
-    on a single partition but over only 16^prefix_chars rows —
-    driver-trivial at any data scale.
+    Bucket id = int(first ``prefix_chars`` hex chars): a monotone
+    function of the key giving 16^prefix_chars ordered, statistically
+    balanced buckets with no sampling pass. ``prefix_chars=2`` → 256
+    buckets; raise it when executor count or skew demands (3 → 4096).
+    The offsets window runs on a single partition but over only
+    16^prefix_chars rows.
     """
     staged = df.withColumn("_gsi_h", hash_col).withColumn(
         "_gsi_bucket",
@@ -135,93 +252,18 @@ def distributed_rank(
     """Global ``row_number() OVER (ORDER BY score, *tiebreaks)`` without
     a single-partition sort, for an arbitrary numeric-monotone key.
 
-    ``score`` must be a numeric column that is monotone in the desired
-    leading sort order (cast dates to days, decimals to double — exact
-    order only matters *between* buckets, within a bucket the full
-    ``(score, *tiebreaks)`` ordering decides). Buckets come from an
-    affine map of the broadcast (min, max) range — deterministic and
-    order-independent, unlike ``repartitionByRange``'s sampled
-    boundaries, so the counts branch and the rank branch of the plan
-    can never disagree on a row's bucket.
-
-    pos = (rows in all lower buckets) + row_number within bucket. The
-    only single-partition work is the offsets running sum over
-    ``buckets`` rows. Heavily-skewed scores concentrate buckets (all
-    ties share one bucket by construction — rank cannot be salted);
-    production feeds real quantile boundaries instead of min/max when
-    skew is known.
-
-    ``total_name`` additionally broadcasts the overall row count onto
-    every row — the denominator :func:`distributed_ntile` needs.
+    ``score`` must be numeric and monotone in the desired leading sort
+    order (cast dates to days, decimals to double — exact order only
+    matters *between* buckets; within a bucket the full
+    ``(score, *tiebreaks)`` ordering decides). NULL scores sort first.
+    All ties share one bucket by construction (rank cannot be salted),
+    so a heavily skewed score concentrates work; feed a (near-)unique
+    score. ``total_name`` adds the overall row count to every row — the
+    denominator :func:`distributed_ntile` needs. ``bounds``: see
+    :func:`_scan`.
     """
-    # NO input checkpoint (round 12, measured): the (min, max) probe
-    # and the staged relation both consume the input, so the caller's
-    # upstream plan evaluates once per consumer — but the round-11
-    # ``localCheckpoint(eager=False)`` that pinned it to one
-    # evaluation turned out to MATERIALIZE AT PLAN-BUILD TIME under
-    # AQE (Dataset.checkpoint builds the RDD, which adaptively
-    # executes every shuffle stage as a serial job; only the final
-    # pass stays lazy).  That silently moved real computation out of
-    # any caller's timed action, and the serialized stage jobs
-    # measured as-slow-or-slower than the duplicated consumers, which
-    # run CONCURRENTLY inside one action (sf0.1 A/B over the five
-    # benched callers: checkpoint 0.74–3.19 s vs none 0.75–3.32 s —
-    # a wash).  Correctness without the checkpoint requires the input
-    # to be DETERMINISTIC (both consumers must see the same rows) —
-    # already the registry-wide contract; rand()-derived inputs are
-    # banned (SPARK-38388 class).
-    lo_hi = _lo_hi(df, score, bounds)
-    staged = (
-        df.withColumn("_dr_s", score)
-        .join(F.broadcast(lo_hi))
-        .withColumn(
-            "_dr_bucket",
-            # NULL scores → leading bucket −1 (ASC NULLS FIRST): a NULL
-            # bucket id would silently drop the row at the offsets
-            # equi-join (NULL never equals NULL). A NULL affine result
-            # (NULL lo/hi from caller bounds — contract breach) lands
-            # in bucket 0: monotone-constant, correct, merely serial.
-            F.when(F.col("_dr_s").isNull(), F.lit(-1)).otherwise(
-                F.coalesce(
-                    F.least(
-                        F.lit(buckets - 1),
-                        F.greatest(
-                            F.lit(0),
-                            F.floor(
-                                (F.col("_dr_s").cast("double") - F.col("_lo"))
-                                / ((F.col("_hi") - F.col("_lo")) + F.lit(1e-12))
-                                * buckets
-                            ),
-                        ),
-                    ),
-                    F.lit(0),
-                )
-            ).cast("long"),
-        )
-        .drop("_lo", "_hi")
-    )
-    counts = staged.groupBy("_dr_bucket").agg(F.count("*").alias("_dr_cnt"))
-    w_off = (
-        Window.orderBy("_dr_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "_dr_bucket",
-        F.coalesce(F.sum("_dr_cnt").over(w_off), F.lit(0).cast("long"))
-        .alias("_dr_offset"),
-        F.sum("_dr_cnt").over(
-            Window.orderBy("_dr_bucket").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("_dr_total"),
-    )
-    w_loc = Window.partitionBy("_dr_bucket").orderBy(F.col("_dr_s"), *tiebreaks)
-    out = (
-        staged.join(F.broadcast(offsets), "_dr_bucket")
-        .withColumn(name, F.col("_dr_offset") + F.row_number().over(w_loc))
-    )
-    if total_name is not None:
-        out = out.withColumn(total_name, F.col("_dr_total"))
-    return out.drop("_dr_bucket", "_dr_s", "_dr_offset", "_dr_total")
+    return _scan(df, [], score, None, tiebreaks, "count", buckets=buckets,
+                 name=name, total_name=total_name, bounds=bounds)
 
 
 def ntile_from_rank(pos: Column, total: Column, k: int) -> Column:
@@ -272,127 +314,21 @@ def distributed_prefix_max(
 ) -> DataFrame:
     """EXCLUSIVE global running ``MAX(value) OVER (ORDER BY score,
     *tiebreaks ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)``
-    without a single-partition sort — the prefix-max companion of
-    :func:`distributed_prefix_sum` (skyline/Pareto frontier scans,
-    monotone envelope detection). ``name`` is NULL for the global first
-    row, exactly like the window form.
+    without a single-partition sort (skyline/Pareto frontier scans).
+    ``name`` is NULL for the global first row, exactly like the window.
 
-    Same affine range-bucketing: per bucket one MAX aggregate, an
-    offsets window over ``buckets`` rows computing each bucket's
-    strictly-lower-bucket max, and a within-bucket exclusive running
-    max; a row's prefix max is ``greatest`` of the two (Spark's
-    ``greatest`` skips NULLs). Equal scores always share a bucket (the
-    bucket id is a function of the score), so the cross-bucket max can
-    never split a tie group. MAX is idempotent, so — unlike the sum
-    variant — the same machinery is safe for any merge-idempotent
-    aggregate (min works by negation).
-
-    **Point-mass caveat** (measured: ``scripts/skew_stress.py
-    point_mass`` / SCALE.md): a score value carrying most rows stays
-    in one bucket, one task. Mitigations, in preference order: collapse
-    to one row per score first when the semantics allow (max value wins
-    under an exclusive prefix-max — every registered consumer feeds a
-    DISTINCT-score relation already: skyline's per-price max, Pareto
-    envelopes), or pass ``tie_split`` exactly as on
-    :func:`distributed_prefix_sum` — the prefix max decomposes the
-    same way (MAX is commutative/idempotent): per-score maxima, an
-    exclusive cross-score prefix max over the DISTINCT-score relation
-    (recursively), a within-score exclusive running max via
-    :func:`grouped_prefix_max`, combined with a NULL-skipping
-    ``greatest``."""
+    **Point mass** (``scripts/skew_stress.py point_mass``): a score
+    value carrying most rows stays in one bucket, one task. Collapse to
+    one row per score first where the semantics allow, or pass
+    ``tie_split`` as on :func:`distributed_prefix_sum` (MAX decomposes
+    the same way; see :func:`_tie_split`)."""
     if tie_split is not None:
-        # no input checkpoint — see distributed_rank (round 12)
-        df = df.withColumn("_tm_s", score).withColumn("_tm_v", value)
-        per = df.groupBy("_tm_s").agg(F.max("_tm_v").alias("_tm_tot"))
-        if bounded_scores:
-            # Caller-DECLARED bounded distinct-score domain (round 13,
-            # guide §2.1/§2.4 "remove shuffles outright"): when the
-            # score is an attribute-domain value (a calendar date, an
-            # enum) the per-score relation is bounded by the DOMAIN —
-            # it grows with wall-clock span, never with corpus size
-            # (the forecast_seasonal_naive precedent). The exclusive
-            # cross-score prefix max is then ONE single-partition
-            # window over that bounded relation instead of the full
-            # recursive bucket machinery (~6 serial stage rounds), and
-            # the offsets join back to the corpus is a BROADCAST — the
-            # corpus-side exchange of the final group join disappears.
-            w_bs = (Window.orderBy("_tm_s")
-                    .rowsBetween(Window.unboundedPreceding, -1))
-            off = per.select(
-                "_tm_s", F.max("_tm_tot").over(w_bs).alias("_tm_off"))
-            within = grouped_prefix_max(
-                df, ["_tm_s"], tie_split, F.col("_tm_v"), *tiebreaks,
-                buckets=buckets, name="_tm_win", broadcast_joins=True,
-                bounds=tie_bounds)
-            return (
-                _group_join(within, off, ["_tm_s"], F.broadcast)
-                .withColumn(name, F.greatest("_tm_off", "_tm_win"))
-                .drop("_tm_s", "_tm_v", "_tm_off", "_tm_win")
-            )
-        off = distributed_prefix_max(
-            per, F.col("_tm_s"), F.col("_tm_tot"), buckets=buckets,
-            name="_tm_off", bounds=bounds).select("_tm_s", "_tm_off")
-        within = grouped_prefix_max(
-            df, ["_tm_s"], tie_split, F.col("_tm_v"), *tiebreaks,
-            buckets=buckets, name="_tm_win", broadcast_joins=False,
-            bounds=tie_bounds)
-        return (
-            _group_join(within, off, ["_tm_s"], lambda d: d)
-            .withColumn(name, F.greatest("_tm_off", "_tm_win"))
-            .drop("_tm_s", "_tm_v", "_tm_off", "_tm_win")
-        )
-    # no input checkpoint — see distributed_rank (round 12)
-    lo_hi = _lo_hi(df, score, bounds)
-    staged = (
-        df.withColumn("_pm_s", score)
-        .withColumn("_pm_v", value)
-        .join(F.broadcast(lo_hi))
-        .withColumn(
-            "_pm_bucket",
-            # NULL scores lead (bucket −1, ASC NULLS FIRST) — a NULL
-            # bucket id would silently drop the row at the equi-join.
-            # NULL lo/hi (caller-bounds breach) → bucket 0, see _lo_hi.
-            F.when(F.col("_pm_s").isNull(), F.lit(-1)).otherwise(
-                F.coalesce(
-                    F.least(
-                        F.lit(buckets - 1),
-                        F.greatest(
-                            F.lit(0),
-                            F.floor(
-                                (F.col("_pm_s").cast("double") - F.col("_lo"))
-                                / ((F.col("_hi") - F.col("_lo")) + F.lit(1e-12))
-                                * buckets
-                            ),
-                        ),
-                    ),
-                    F.lit(0),
-                )
-            ).cast("long"),
-        )
-        .drop("_lo", "_hi")
-    )
-    maxes = staged.groupBy("_pm_bucket").agg(F.max("_pm_v").alias("_pm_max"))
-    w_off = (
-        Window.orderBy("_pm_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = maxes.select(
-        "_pm_bucket",
-        F.max("_pm_max").over(w_off).alias("_pm_lower"),
-    )
-    w_loc = (
-        Window.partitionBy("_pm_bucket")
-        .orderBy(F.col("_pm_s"), *tiebreaks)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        staged.join(F.broadcast(offsets), "_pm_bucket")
-        .withColumn(
-            name,
-            F.greatest(F.col("_pm_lower"), F.max("_pm_v").over(w_loc)),
-        )
-        .drop("_pm_bucket", "_pm_s", "_pm_v", "_pm_lower")
-    )
+        return _tie_split(df, score, value, tiebreaks, tie_split, "max",
+                          buckets=buckets, name=name, total_name=None,
+                          bounds=bounds, tie_bounds=tie_bounds,
+                          bounded_scores=bounded_scores)
+    return _scan(df, [], score, value, tiebreaks, "max", buckets=buckets,
+                 name=name, bounds=bounds)
 
 
 def distributed_prefix_sum(
@@ -409,148 +345,26 @@ def distributed_prefix_sum(
     bounded_scores: bool = False,
 ) -> DataFrame:
     """Global running ``SUM(value) OVER (ORDER BY score, *tiebreaks
-    ROWS UNBOUNDED PRECEDING)`` without a single-partition sort — the
-    value-cumulative companion of :func:`distributed_rank` (cumulative
-    revenue share, ABC classification, Lorenz/Gini curves).
+    ROWS UNBOUNDED PRECEDING)`` without a single-partition sort
+    (cumulative revenue share, ABC classification, Lorenz/Gini curves).
+    NULL scores sort first. ``value`` should be an integer/decimal
+    column (exact under reordering); a raw double would make the prefix
+    partition-order-dependent. ``total_name`` adds the overall sum.
 
-    Same affine range-bucketing as ``distributed_rank``; per bucket we
-    aggregate the value sum, the offsets window runs over ``buckets``
-    rows, and each row's prefix is its bucket's lower-bucket value
-    total plus a within-bucket running sum. NULL scores sort first
-    (bucket −1), matching the window's ``ASC NULLS FIRST`` ordering.
-    ``value`` should be an integer/decimal column (exact under
-    reordering); a raw double would make the prefix partition-order-
-    dependent.
-
-    **Point-mass scores**: the buckets divide the score DOMAIN, so a
-    score value carrying most rows lands in ONE bucket undivided and
-    its window runs on one task (measured super-linear in
-    ``scripts/skew_stress.py point_mass`` / SCALE.md). For such
-    distributions pass ``tie_split`` — a numeric-monotone column
-    (typically the row id) that refines the ordering to ``(score,
-    tie_split, *tiebreaks)``. The prefix then decomposes into three
-    fully-parallel passes, exact because SUM is order-insensitive
-    within a tie group: per-score totals (one hash aggregate), an
-    EXCLUSIVE prefix over the DISTINCT-score relation (this machinery
-    recursively — a distinct relation cannot carry a point mass), and
-    a within-score running sum via :func:`grouped_prefix_sum` keyed on
-    the score itself (per-group affine bucketing of ``tie_split``
-    splits the tie group across ``buckets`` tasks). Hash joins
-    throughout (``broadcast_joins=False``): |distinct scores| may be
-    corpus-order."""
+    **Point-mass scores**: buckets divide the score DOMAIN, so a score
+    value carrying most rows lands in one bucket and its window runs on
+    one task (super-linear in ``scripts/skew_stress.py point_mass``).
+    For such distributions pass ``tie_split`` — a numeric-monotone
+    column (typically the row id) refining the ordering to ``(score,
+    tie_split, *tiebreaks)``; see :func:`_tie_split` for the
+    decomposition and ``bounded_scores`` / ``tie_bounds``."""
     if tie_split is not None:
-        # no input checkpoint — see distributed_rank (round 12)
-        df = df.withColumn("_ts_s", score).withColumn("_ts_v", value)
-        per = df.groupBy("_ts_s").agg(F.sum("_ts_v").alias("_ts_tot"))
-        if bounded_scores:
-            # Caller-DECLARED bounded distinct-score domain (round 13,
-            # guide §2.1/§2.4): an attribute-domain score (calendar
-            # date, enum) bounds the per-score relation by the DOMAIN
-            # — wall-clock span, never corpus size (the
-            # forecast_seasonal_naive precedent). The exclusive
-            # cross-score prefix is then ONE single-partition window
-            # over that bounded relation instead of the recursive
-            # bucket machinery (~6 serial stage rounds), and both the
-            # grouped within-score joins and the final offsets join
-            # BROADCAST — no corpus-side exchange outside the one
-            # within-score bucket window.
-            w_bs = (Window.orderBy("_ts_s")
-                    .rowsBetween(Window.unboundedPreceding, -1))
-            off = per.select(
-                "_ts_s",
-                F.coalesce(F.sum("_ts_tot").over(w_bs),
-                           F.lit(0).cast("long")).alias("_ts_off"),
-                *([F.sum("_ts_tot").over(
-                    Window.orderBy("_ts_s").rowsBetween(
-                        Window.unboundedPreceding,
-                        Window.unboundedFollowing)).alias("_ts_gtot")]
-                  if total_name is not None else []))
-            within = grouped_prefix_sum(
-                df, ["_ts_s"], tie_split, F.col("_ts_v"), *tiebreaks,
-                buckets=buckets, name="_ts_win", broadcast_joins=True,
-                bounds=tie_bounds)
-            out = _group_join(within, off, ["_ts_s"], F.broadcast) \
-                .withColumn(name, F.col("_ts_off") + F.col("_ts_win"))
-            if total_name is not None:
-                out = out.withColumn(total_name, F.col("_ts_gtot"))
-            return out.drop("_ts_s", "_ts_v", "_ts_off", "_ts_win",
-                            "_ts_gtot")
-        off = distributed_prefix_sum(
-            per, F.col("_ts_s"), F.col("_ts_tot"), buckets=buckets,
-            name="_ts_incl", bounds=bounds,
-            total_name="_ts_gtot" if total_name is not None else None)
-        off = off.select(
-            "_ts_s",
-            (F.col("_ts_incl") - F.col("_ts_tot")).alias("_ts_off"),
-            *(["_ts_gtot"] if total_name is not None else []))
-        within = grouped_prefix_sum(
-            df, ["_ts_s"], tie_split, F.col("_ts_v"), *tiebreaks,
-            buckets=buckets, name="_ts_win", broadcast_joins=False,
-            bounds=tie_bounds)
-        out = _group_join(within, off, ["_ts_s"], lambda d: d) \
-            .withColumn(name, F.col("_ts_off") + F.col("_ts_win"))
-        if total_name is not None:
-            out = out.withColumn(total_name, F.col("_ts_gtot"))
-        return out.drop("_ts_s", "_ts_v", "_ts_off", "_ts_win", "_ts_gtot")
-    # no input checkpoint — see distributed_rank (round 12)
-    lo_hi = _lo_hi(df, score, bounds)
-    staged = (
-        df.withColumn("_dp_s", score)
-        .withColumn("_dp_v", value)
-        .join(F.broadcast(lo_hi))
-        .withColumn(
-            "_dp_bucket",
-            # NULL scores get their own leading bucket (−1): a NULL
-            # expression would otherwise produce a NULL bucket id that
-            # silently fails the offsets equi-join and DROPS the row
-            # while its value still inflates every downstream offset.
-            # NULL lo/hi (caller-bounds breach) → bucket 0, see _lo_hi.
-            F.when(F.col("_dp_s").isNull(), F.lit(-1)).otherwise(
-                F.coalesce(
-                    F.least(
-                        F.lit(buckets - 1),
-                        F.greatest(
-                            F.lit(0),
-                            F.floor(
-                                (F.col("_dp_s").cast("double") - F.col("_lo"))
-                                / ((F.col("_hi") - F.col("_lo")) + F.lit(1e-12))
-                                * buckets
-                            ),
-                        ),
-                    ),
-                    F.lit(0),
-                )
-            ).cast("long"),
-        )
-        .drop("_lo", "_hi")
-    )
-    sums = staged.groupBy("_dp_bucket").agg(
-        F.sum("_dp_v").alias("_dp_sum"))
-    w_off = (
-        Window.orderBy("_dp_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sums.select(
-        "_dp_bucket",
-        F.coalesce(F.sum("_dp_sum").over(w_off),
-                   F.lit(0).cast("long")).alias("_dp_offset"),
-        F.sum("_dp_sum").over(
-            Window.orderBy("_dp_bucket").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("_dp_total"),
-    )
-    w_loc = (
-        Window.partitionBy("_dp_bucket")
-        .orderBy(F.col("_dp_s"), *tiebreaks)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = (
-        staged.join(F.broadcast(offsets), "_dp_bucket")
-        .withColumn(name, F.col("_dp_offset") + F.sum("_dp_v").over(w_loc))
-    )
-    if total_name is not None:
-        out = out.withColumn(total_name, F.col("_dp_total"))
-    return out.drop("_dp_bucket", "_dp_s", "_dp_v", "_dp_offset", "_dp_total")
+        return _tie_split(df, score, value, tiebreaks, tie_split, "sum",
+                          buckets=buckets, name=name, total_name=total_name,
+                          bounds=bounds, tie_bounds=tie_bounds,
+                          bounded_scores=bounded_scores)
+    return _scan(df, [], score, value, tiebreaks, "sum", buckets=buckets,
+                 name=name, total_name=total_name, bounds=bounds)
 
 
 def grouped_rank(
@@ -561,112 +375,27 @@ def grouped_rank(
     buckets: int = 256,
     name: str = "pos",
     total_name: str | None = None,
-    broadcast_joins: bool = True,
     bounds: DataFrame | None = None,
 ) -> DataFrame:
     """``row_number() OVER (PARTITION BY group_cols ORDER BY score,
-    *tiebreaks)`` with BOUNDED window groups — the per-group companion
-    of :func:`distributed_rank`, for when the partition key is
-    low-cardinality (a status flag, a language, a label) so each
-    window group is corpus/|groups| and funnels through one task.
+    *tiebreaks)`` with BOUNDED window groups, for a low-cardinality
+    partition key (a status flag, a language, a label) whose naive
+    window group is corpus/|groups| rows in one task. Each group's
+    ``(min, max)`` maps its scores onto ``buckets`` ranges; the rank
+    window partitions by ``(group, bucket)``. ``total_name`` adds each
+    group's row count. The per-group range and offsets relations are
+    broadcast (|groups| and ≤ |groups| × ``buckets`` rows). ``bounds``
+    replaces the per-group ranges with one global range (see
+    :func:`_scan`).
 
-    Per-group affine range-bucketing: each group's broadcast
-    ``(min, max)`` maps its scores onto ``buckets`` ranges, the rank
-    window partitions by ``(group, bucket)`` (group size ≈
-    N_group/buckets), and the per-group offsets window orders the ≤
-    ``buckets``+1 count rows of one group. Deterministic boundaries —
-    the counts branch and the rank branch can never disagree on a
-    row's bucket. ``total_name`` adds each group's total row count
-    (the n in percentile arithmetic).
-
-    ``broadcast_joins=True`` (the low-cardinality-group case)
-    broadcasts the |groups| min/max rows and the |groups|×buckets
-    offset rows; pass False when |groups| is itself large — the joins
-    then hash on the same (group, bucket) key as the windows.
-
-    Boundedness caveat: range-bucketing divides the SCORE domain, so a
-    single score value carrying a large share of a group's rows lands
-    in one bucket undivided (ties cannot be split across buckets
-    without breaking rank semantics). Pass a (near-)unique score —
-    a key, a price, a hash — as every registry call site does; for a
-    heavily-tied score, rank on a composite that is unique (e.g.
-    ``xxhash64(score, id)`` is NOT order-preserving — instead put the
-    tie-splitting column INTO the score, as ``train_codebooks_exact``
-    does with ``cvec[0]`` + full-array tiebreak).
-    """
-    # no input checkpoint — see distributed_rank (round 12)
-    hint = F.broadcast if broadcast_joins else (lambda d: d)
-    if bounds is not None:
-        # Caller-supplied GLOBAL score range, shared by every group
-        # (round 13): one broadcast cross join replaces the per-group
-        # (min, max) aggregate AND its corpus-side group join — two
-        # fewer evaluations of the input's upstream plan. Same
-        # correctness insensitivity as _lo_hi: any (lo, hi) keeps the
-        # bucket a clamped monotone function of the score, so global
-        # bounds only cost balance when a group occupies a narrow
-        # slice of the global range.
-        lo_c, hi_c = bounds.columns[:2]
-        pre = df.withColumn("_gr_s", score).join(F.broadcast(
-            bounds.select(F.col(lo_c).cast("double").alias("_gr_lo"),
-                          F.col(hi_c).cast("double").alias("_gr_hi"))))
-    else:
-        lo_hi = df.groupBy(*group_cols).agg(
-            F.min(score).cast("double").alias("_gr_lo"),
-            F.max(score).cast("double").alias("_gr_hi"),
-        )
-        pre = _group_join(df.withColumn("_gr_s", score), lo_hi,
-                          group_cols, hint)
-    staged = (
-        pre.withColumn(
-            "_gr_bucket",
-            # NULL scores → leading bucket −1 (ASC NULLS FIRST); a NULL
-            # bucket id would drop the row at the offsets equi-join.
-            # NULL lo/hi (caller-bounds breach) → bucket 0, see _lo_hi.
-            F.when(F.col("_gr_s").isNull(), F.lit(-1)).otherwise(
-                F.coalesce(
-                    F.least(
-                        F.lit(buckets - 1),
-                        F.greatest(
-                            F.lit(0),
-                            F.floor(
-                                (F.col("_gr_s").cast("double") - F.col("_gr_lo"))
-                                / ((F.col("_gr_hi") - F.col("_gr_lo")) + F.lit(1e-12))
-                                * buckets
-                            ),
-                        ),
-                    ),
-                    F.lit(0),
-                )
-            ).cast("long"),
-        )
-        .drop("_gr_lo", "_gr_hi")
-    )
-    counts = staged.groupBy(*group_cols, "_gr_bucket").agg(
-        F.count("*").alias("_gr_cnt"))
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_gr_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        *group_cols, "_gr_bucket",
-        F.coalesce(F.sum("_gr_cnt").over(w_off), F.lit(0).cast("long"))
-        .alias("_gr_offset"),
-        F.sum("_gr_cnt").over(
-            Window.partitionBy(*group_cols).orderBy("_gr_bucket")
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("_gr_total"),
-    )
-    w_loc = Window.partitionBy(*group_cols, "_gr_bucket").orderBy(
-        F.col("_gr_s"), *tiebreaks)
-    out = (
-        _group_join(staged, offsets, group_cols, hint,
-                    bucket_col="_gr_bucket")
-        .withColumn(name, F.col("_gr_offset") + F.row_number().over(w_loc))
-    )
-    if total_name is not None:
-        out = out.withColumn(total_name, F.col("_gr_total"))
-    return out.drop("_gr_bucket", "_gr_s", "_gr_offset", "_gr_total")
+    Buckets divide the SCORE domain, so a single score value carrying a
+    large share of a group stays in one bucket: pass a (near-)unique
+    score, or put the tie-splitting column INTO the score, as
+    ``train_codebooks_exact`` does with ``cvec[0]`` + full-array
+    tiebreak."""
+    return _scan(df, group_cols, score, None, tiebreaks, "count",
+                 buckets=buckets, name=name, total_name=total_name,
+                 bounds=bounds)
 
 
 def grouped_prefix_sum(
@@ -678,107 +407,19 @@ def grouped_prefix_sum(
     buckets: int = 256,
     name: str = "prefix",
     total_name: str | None = None,
-    broadcast_joins: bool = True,
     bounds: DataFrame | None = None,
 ) -> DataFrame:
     """Per-group running ``SUM(value) OVER (PARTITION BY group_cols
-    ORDER BY score, *tiebreaks ROWS UNBOUNDED PRECEDING)`` with
-    BOUNDED window groups — the value-cumulative companion of
-    :func:`grouped_rank`, for when the partition key is
-    low-cardinality (a language stream, a status flag) so a naive
-    per-group cumsum window funnels corpus/|groups| rows through one
-    task (sequence packing, per-stream byte offsets, per-segment
-    Lorenz curves).
-
-    Per-group affine range-bucketing exactly as ``grouped_rank``: each
-    group's broadcast ``(min, max)`` maps scores onto ``buckets``
-    ranges, per-(group, bucket) value sums feed a per-group offsets
-    window of ≤ ``buckets``+1 rows, and each row's prefix is its
-    bucket's offset plus a within-(group, bucket) running sum. NULL
-    scores sort first (bucket −1). ``value`` should be integer/decimal
-    (exact under reordering). The prefix is INCLUSIVE of the current
-    row; subtract ``value`` for the exclusive form.
-
-    ``broadcast_joins=True`` broadcasts the |groups| min/max rows and
-    the |groups|×buckets offset rows; pass False when |groups| is
-    large — the joins then hash on the same (group, bucket) key as the
-    windows.
-
-    Same heavy-tie caveat as :func:`grouped_rank`: buckets divide the
-    score DOMAIN, so a dominant tie value stays in one bucket — use a
-    (near-)unique score column."""
-    # no input checkpoint — see distributed_rank (round 12)
-    hint = F.broadcast if broadcast_joins else (lambda d: d)
-    if bounds is not None:
-        # global caller bounds: see grouped_rank (round 13)
-        lo_c, hi_c = bounds.columns[:2]
-        pre = (df.withColumn("_gp_s", score).withColumn("_gp_v", value)
-               .join(F.broadcast(bounds.select(
-                   F.col(lo_c).cast("double").alias("_gp_lo"),
-                   F.col(hi_c).cast("double").alias("_gp_hi")))))
-    else:
-        lo_hi = df.groupBy(*group_cols).agg(
-            F.min(score).cast("double").alias("_gp_lo"),
-            F.max(score).cast("double").alias("_gp_hi"),
-        )
-        pre = _group_join(
-            df.withColumn("_gp_s", score).withColumn("_gp_v", value),
-            lo_hi, group_cols, hint)
-    staged = (
-        pre.withColumn(
-            "_gp_bucket",
-            # NULL scores → leading bucket −1 (ASC NULLS FIRST); a NULL
-            # bucket id would drop the row at the offsets equi-join
-            # while its value still inflated downstream offsets.
-            # NULL lo/hi (caller-bounds breach) → bucket 0, see _lo_hi.
-            F.when(F.col("_gp_s").isNull(), F.lit(-1)).otherwise(
-                F.coalesce(
-                    F.least(
-                        F.lit(buckets - 1),
-                        F.greatest(
-                            F.lit(0),
-                            F.floor(
-                                (F.col("_gp_s").cast("double") - F.col("_gp_lo"))
-                                / ((F.col("_gp_hi") - F.col("_gp_lo")) + F.lit(1e-12))
-                                * buckets
-                            ),
-                        ),
-                    ),
-                    F.lit(0),
-                )
-            ).cast("long"),
-        )
-        .drop("_gp_lo", "_gp_hi")
-    )
-    sums = staged.groupBy(*group_cols, "_gp_bucket").agg(
-        F.sum("_gp_v").alias("_gp_sum"))
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_gp_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sums.select(
-        *group_cols, "_gp_bucket",
-        F.coalesce(F.sum("_gp_sum").over(w_off), F.lit(0).cast("long"))
-        .alias("_gp_offset"),
-        F.sum("_gp_sum").over(
-            Window.partitionBy(*group_cols).orderBy("_gp_bucket")
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("_gp_total"),
-    )
-    w_loc = (
-        Window.partitionBy(*group_cols, "_gp_bucket")
-        .orderBy(F.col("_gp_s"), *tiebreaks)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = (
-        _group_join(staged, offsets, group_cols, hint,
-                    bucket_col="_gp_bucket")
-        .withColumn(name, F.col("_gp_offset") + F.sum("_gp_v").over(w_loc))
-    )
-    if total_name is not None:
-        out = out.withColumn(total_name, F.col("_gp_total"))
-    return out.drop("_gp_bucket", "_gp_s", "_gp_v", "_gp_offset", "_gp_total")
+    ORDER BY score, *tiebreaks ROWS UNBOUNDED PRECEDING)`` with BOUNDED
+    window groups — the value-cumulative companion of
+    :func:`grouped_rank` (sequence packing, per-stream byte offsets,
+    per-segment Lorenz curves). INCLUSIVE of the current row; subtract
+    ``value`` for the exclusive form. ``value`` should be
+    integer/decimal. ``total_name`` adds each group's sum. Same heavy-tie
+    caveat as :func:`grouped_rank`."""
+    return _scan(df, group_cols, score, value, tiebreaks, "sum",
+                 buckets=buckets, name=name, total_name=total_name,
+                 bounds=bounds)
 
 
 def grouped_prefix_max(
@@ -789,90 +430,13 @@ def grouped_prefix_max(
     *tiebreaks: Column,
     buckets: int = 256,
     name: str = "prefix_max",
-    broadcast_joins: bool = True,
     bounds: DataFrame | None = None,
 ) -> DataFrame:
     """EXCLUSIVE per-group running ``MAX(value) OVER (PARTITION BY
     group_cols ORDER BY score, *tiebreaks ROWS BETWEEN UNBOUNDED
-    PRECEDING AND 1 PRECEDING)`` with BOUNDED window groups — the
-    prefix-max member of the grouped family (``name`` is NULL for each
-    group's first row, exactly like the window form). Completes the
-    :func:`distributed_prefix_max` ``tie_split`` decomposition: the
-    within-score exclusive running max runs through THIS, with the
-    score value as the group key and the tie-split column as the
-    bucketed sub-score.
-
-    Same per-group affine range-bucketing as :func:`grouped_prefix_sum`
-    (NULL scores → leading bucket −1; null-safe group joins keep NULL
-    group keys as their own partition). Per (group, bucket) one MAX
-    aggregate; a per-group offsets window over ≤ ``buckets``+1 rows
-    computes each bucket's strictly-lower-bucket max; within a bucket
-    an exclusive running max window; a row's prefix max is the
-    NULL-skipping ``greatest`` of the two. MAX is commutative and
-    idempotent, so splitting a tie group across buckets by any
-    order-preserving sub-key is exact."""
-    # no input checkpoint — see distributed_rank (round 12)
-    hint = F.broadcast if broadcast_joins else (lambda d: d)
-    if bounds is not None:
-        # global caller bounds: see grouped_rank (round 13)
-        lo_c, hi_c = bounds.columns[:2]
-        pre = (df.withColumn("_gm_s", score).withColumn("_gm_v", value)
-               .join(F.broadcast(bounds.select(
-                   F.col(lo_c).cast("double").alias("_gm_lo"),
-                   F.col(hi_c).cast("double").alias("_gm_hi")))))
-    else:
-        lo_hi = df.groupBy(*group_cols).agg(
-            F.min(score).cast("double").alias("_gm_lo"),
-            F.max(score).cast("double").alias("_gm_hi"),
-        )
-        pre = _group_join(
-            df.withColumn("_gm_s", score).withColumn("_gm_v", value),
-            lo_hi, group_cols, hint)
-    staged = (
-        pre.withColumn(
-            "_gm_bucket",
-            # NULL scores → leading bucket −1 (ASC NULLS FIRST)
-            # NULL lo/hi (caller-bounds breach) → bucket 0, see _lo_hi.
-            F.when(F.col("_gm_s").isNull(), F.lit(-1)).otherwise(
-                F.coalesce(
-                    F.least(
-                        F.lit(buckets - 1),
-                        F.greatest(
-                            F.lit(0),
-                            F.floor(
-                                (F.col("_gm_s").cast("double") - F.col("_gm_lo"))
-                                / ((F.col("_gm_hi") - F.col("_gm_lo")) + F.lit(1e-12))
-                                * buckets
-                            ),
-                        ),
-                    ),
-                    F.lit(0),
-                )
-            ).cast("long"),
-        )
-        .drop("_gm_lo", "_gm_hi")
-    )
-    maxes = staged.groupBy(*group_cols, "_gm_bucket").agg(
-        F.max("_gm_v").alias("_gm_max"))
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_gm_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = maxes.select(
-        *group_cols, "_gm_bucket",
-        F.max("_gm_max").over(w_off).alias("_gm_lower"),
-    )
-    w_loc = (
-        Window.partitionBy(*group_cols, "_gm_bucket")
-        .orderBy(F.col("_gm_s"), *tiebreaks)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        _group_join(staged, offsets, group_cols, hint,
-                    bucket_col="_gm_bucket")
-        .withColumn(
-            name,
-            F.greatest(F.col("_gm_lower"), F.max("_gm_v").over(w_loc)))
-        .drop("_gm_bucket", "_gm_s", "_gm_v", "_gm_lower")
-    )
+    PRECEDING AND 1 PRECEDING)`` with BOUNDED window groups (``name`` is
+    NULL for each group's first row, exactly like the window). MAX is
+    commutative and idempotent, so splitting a tie group across buckets
+    by any order-preserving sub-key is exact."""
+    return _scan(df, group_cols, score, value, tiebreaks, "max",
+                 buckets=buckets, name=name, bounds=bounds)

@@ -108,6 +108,7 @@ def systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cum_revenue_by_orderdate",
+    # no ORDER BY: the plan does not sort and the oracle comparison sorts both sides
     oracle="""
         SELECT o_orderkey,
                strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
@@ -116,7 +117,6 @@ def systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                     AS BIGINT) AS cum_revenue_cents
         FROM orders
-        ORDER BY o_orderkey
     """,
     tags=("E5", "EXT"),
     bench=True,
@@ -171,6 +171,7 @@ def cum_revenue_by_orderdate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "running_peak_price_by_orderdate",
+    # no ORDER BY: the plan does not sort and the oracle comparison sorts both sides
     oracle="""
         SELECT o_orderkey,
                strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
@@ -179,7 +180,6 @@ def cum_revenue_by_orderdate(spark: SparkSession, sf_dir: str) -> DataFrame:
                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                     AS BIGINT) AS peak_price_cents
         FROM orders
-        ORDER BY o_orderkey
     """,
     tags=("E5", "EXT"),
     bench=True,

@@ -42,12 +42,17 @@ PKG = os.path.join(
 BROADCAST_BOUNDS = {
     ("operators/graph.py", "pagerank"):
         (1, "scalar", "1-row dangling-mass total per iteration"),
-    ("operators/order.py", "distributed_prefix_max"):
-        (2, "artifact", "1-row (min,max) bounds + <=buckets-row offsets"),
-    ("operators/order.py", "distributed_prefix_sum"):
-        (2, "artifact", "1-row (min,max) bounds + <=buckets-row offsets"),
-    ("operators/order.py", "distributed_rank"):
-        (2, "artifact", "1-row (min,max) bounds + <=buckets-row offsets"),
+    ("operators/order.py", "_group_join"):
+        (1, "artifact", "the one broadcast site of the range-bucketed scan: "
+                        "the (lo,hi) range relation is 1 row (a global "
+                        "min/max aggregate, also over caller bounds) or "
+                        "|groups| rows for the low-cardinality group keys "
+                        "of the grouped_* contract; the offsets relation is <= buckets "
+                        "x |groups| rows; the bounded_scores per-score "
+                        "offsets are bounded by the caller-declared score "
+                        "domain. The recursive tie_split branch, whose "
+                        "|groups| is |distinct scores|, passes hint=False "
+                        "and takes the hash-join path"),
     ("operators/order.py", "global_sort_index"):
         (1, "artifact", "<=buckets-row cumulative-offset relation"),
     ("operators/pq.py", "_refine_topk"):
@@ -204,17 +209,7 @@ def _broadcast_sites(pkg: str = PKG) -> tuple[
 #: every non-call reference to ``broadcast`` (see ``_broadcast_sites``).
 #: The justification must bound EVERYTHING the alias is ever applied
 #: to, since the census cannot.
-BROADCAST_ALIASES = {
-    ("operators/order.py", "grouped_rank"):
-        (1, "conditional hint on the per-group (min,max) scalar and "
-            "<=buckets+1-row offsets relations; group-DOMAIN-sized, so "
-            "callers with corpus-scaling group counts must pass "
-            "broadcast_joins=False (the tie_split paths do)"),
-    ("operators/order.py", "grouped_prefix_sum"):
-        (1, "same conditional hint / same bound as grouped_rank"),
-    ("operators/order.py", "grouped_prefix_max"):
-        (1, "same conditional hint / same bound as grouped_rank"),
-}
+BROADCAST_ALIASES: dict[tuple[str, str], tuple[int, str]] = {}
 
 
 def test_every_broadcast_hint_is_bounded():

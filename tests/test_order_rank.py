@@ -302,6 +302,33 @@ def test_grouped_rank_null_scores_lead(spark):
     assert g == w
 
 
+def test_rank_normalizes_swapped_multi_row_bounds(spark):
+    """Caller ``bounds`` are normalized to ONE (lo, hi) row with
+    lo <= hi: a relation whose columns are swapped (high first) and
+    which has two rows must neither reverse the bucket order nor
+    duplicate input rows through the range cross join."""
+    from data_eng_taxi_ibis_dagster_spark.operators.order import grouped_rank
+
+    df = _grouped_rows(
+        spark, [("a", float((x * 37) % 50)) for x in range(30)]
+        + [("b", float(x)) for x in range(20)])
+    bounds = spark.createDataFrame([(49.0, 0.0), (30.0, 10.0)],
+                                   "hi double, lo double")
+    got = distributed_rank(df, F.col("v"), F.col("id"), buckets=4,
+                           name="pos", total_name="n", bounds=bounds)
+    want = df.withColumn(
+        "pos", F.row_number().over(Window.orderBy("v", "id")))
+    assert (sorted((r["id"], r["pos"], r["n"]) for r in got.collect())
+            == sorted((r["id"], r["pos"], 50) for r in want.collect()))
+
+    got_g = grouped_rank(df, ["g"], F.col("v"), F.col("id"), buckets=4,
+                         name="pos", bounds=bounds)
+    want_g = df.withColumn("pos", F.row_number().over(
+        Window.partitionBy("g").orderBy("v", "id")))
+    assert (sorted((r["id"], r["pos"]) for r in got_g.collect())
+            == sorted((r["id"], r["pos"]) for r in want_g.collect()))
+
+
 @pytest.mark.parametrize("vals", [
     [("a", 5.0, 2), ("a", 1.0, 3), ("b", 3.0, 1), ("a", 2.0, 7),
      ("b", 4.0, 5), ("b", 0.0, 11), ("a", 6.0, 1)],

@@ -19,6 +19,7 @@ import re
 
 import pytest
 
+from data_eng_taxi_ibis_dagster_spark.operators.order import BUCKET_COL
 from data_eng_taxi_ibis_dagster_spark.plans.registry import all_specs
 
 #: Queries where a BroadcastNestedLoopJoin is the *intended* physical
@@ -66,7 +67,7 @@ BNLJ_ALLOWED = {
 #: Queries allowed to run an UNPARTITIONED window over something other
 #: than a bucket-offsets relation, each with a bounded-relation
 #: justification. (The bucket-offsets windows of operators/order —
-#: ordered by ``_dr_/_dp_/_pm_/_gsi_bucket``, ≤ ``buckets`` rows by
+#: ordered by ``BUCKET_COL`` or ``_gsi_bucket``, ≤ ``buckets`` rows by
 #: construction — are allowed generically; see
 #: ``_unpartitioned_window_orders``.)
 GLOBAL_WINDOW_ALLOWED = {
@@ -172,21 +173,16 @@ ALL = sorted(all_specs())
 #: Bucket-id columns of the operators/order machinery — an
 #: unpartitioned window ordered by one of these runs over ≤ ``buckets``
 #: (default 256) rows by construction, at ANY input scale.
-_BOUNDED_OFFSET_PREFIXES = ("_dr_bucket", "_dp_bucket", "_pm_bucket",
-                            "_gsi_bucket", "_nt_", "_cum_bucket",
-                            # grouped_rank / grouped_prefix_sum
-                            # (operators/order.py): the rank windows
-                            # carry the range-bucket column in their
-                            # PARTITION tuple; the ≤buckets+1-row
+_BOUNDED_OFFSET_PREFIXES = ("_gsi_bucket", "_nt_", "_cum_bucket",
+                            # the range-bucketed scan behind every
+                            # distributed_* / grouped_* function
+                            # (operators/order.py): its within-bucket
+                            # windows carry the bucket column in their
+                            # PARTITION tuple; its ≤buckets+1-row
                             # offsets windows carry it as their ORDER
                             # key — both bounded by construction at
                             # ANY scale.
-                            "_gr_bucket", "_gp_bucket",
-                            # grouped_prefix_max (round-7 advisor: add
-                            # in the same change that registers the
-                            # first distributed_prefix_max(tie_split)
-                            # consumer)
-                            "_gm_bucket",
+                            BUCKET_COL,
                             # operators/qsketch: the concrete sketch
                             # columns (bin, the _qs_g_<i> group
                             # renames) live on the quantile-sketch
@@ -443,7 +439,7 @@ def test_rfm_has_no_global_ntile_window(spark, sf_dir):
     df = all_specs()["rfm_segmentation"].builder(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ntile" not in plan
-    assert "windowspecdefinition(_dr_bucket" in plan
+    assert f"windowspecdefinition({BUCKET_COL}" in plan
 
 
 def test_window_bound_lint_flags_naive_group_window(spark):
