@@ -1,24 +1,49 @@
-"""Deduplication operators (EXT E9/E10): exact, MinHash+LSH, SimHash,
-n-gram Jaccard.
+"""Deduplication operators (EXT E9/E10): exact, near-duplicate n-gram
+Jaccard, SimHash and banded hamming.
 
-Shapes chosen for 100 TB:
+Exact dedup groups on a 128-bit content fingerprint, never on the full
+text, so its shuffle carries 16 bytes and a key per document.
 
-* Exact dedup groups on a 128-bit content fingerprint, never on the
-  full text — the shuffle carries 16 bytes + key, not documents.
-* MinHash signatures are computed with k min-aggregates in ONE pass
-  over the exploded (doc, shingle) relation (map-side partial min), not
-  k passes; LSH banding turns the quadratic all-pairs problem into a
-  band-bucket equi-join. Hot buckets are capped to keep the self-join
-  skew-safe.
-* SimHash is 64 per-bit conditional sums in a single aggregation, then
-  banded for candidate generation — constant state per doc.
-* Candidate pairs are *verified* with exact Jaccard before being
-  reported; LSH only proposes.
+Near-duplicate detection is ONE candidates → verify pipeline::
+
+    shingles → {MinHash band rows, prefix rows} → capped bucket join → verify
+
+* **shingles** — :func:`_shingled`: ``(id, sh)``, each document's
+  distinct n-gram set, built once per row.
+* **stack rows** ``(id, band, bucket[, pos, sz])``, all per-row codegen:
+  MinHash band rows (k seeded minima, :func:`_minima`, one hash per
+  band, :func:`_band_hashes`) make recall probabilistic — the LSH
+  S-curve; Jaccard-prefix rows under ``band = PREFIX_BAND`` (the
+  hash-ordered :func:`_prefix`, or the df-ordered
+  :func:`_prefix_stack_df_order` for a fixed corpus) make it exact —
+  the prefix-filter theorem, :func:`_prefix_stack`.
+  :func:`lsh_band_index` picks band rows alone or both families
+  (``exact_recall``) and is also the persistable index.
+* **capped bucket join** — rows sharing a ``(band, bucket)`` pair up.
+  Band buckets above ``max_bucket`` members are dropped
+  (:func:`_cap_hot_buckets`); prefix rows are never dropped and pass
+  PPJoin's length/position filters instead (:func:`_pp_filters`).
+  :func:`_bucket_pairs` is the self-join; the incremental probe
+  (:func:`incremental_near_dup_pairs`) joins a new batch against an
+  index.
+* **verify** — :func:`_verify`: exact Jaccard per distinct candidate
+  pair; candidates only propose.
+
+Winnowing fingerprints (:func:`winnow_candidate_pairs`) are the
+candidate source of the exact pair verifiers :func:`jaccard_verify`
+and :func:`levenshtein_verify`.
+
+Several plans below reference one subtree twice (a stack, a shingle
+relation) and let both copies run concurrently inside the one action.
+Materializing such a subtree once does not pay here: under AQE a
+``localCheckpoint``, even ``eager=False``, runs its jobs at plan build,
+serially, outside the action (measured slower on every consumer, e.g.
+``dedup_ngram_jaccard`` 1.4 → 2.4 s at sf0.1).
 
 Spark's xxhash64 is the workhorse hash (seedable, 64-bit, JVM-side);
-it has no DuckDB twin, so MinHash/SimHash plans register as rows-only.
-The Jaccard verifier itself is engine-neutral and oracle-checked via
-``dedup_ngram_jaccard``.
+it has no DuckDB twin, so MinHash/SimHash plans whose recall is
+probabilistic register as rows-only.  The Jaccard verifier itself is
+engine-neutral and oracle-checked via ``dedup_ngram_jaccard``.
 """
 
 from __future__ import annotations
@@ -75,8 +100,20 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
 
 
 # ---------------------------------------------------------------------------
-# Jaccard verification (shared by every near-dup path)
+# Shingles and Jaccard verification (shared by every near-dup path)
 # ---------------------------------------------------------------------------
+
+def _shingled(df: DataFrame, *, id_col: str, text_col: str,
+              n: int) -> DataFrame:
+    """``(id, sh)`` — each document's distinct n-gram shingle set, the
+    one input of every stack and verifier.  Consumers that read ``sh``
+    several times (k minima, a prefix, a size) select from this
+    relation rather than inlining the expression: Catalyst keeps
+    a multiply-referenced expensive alias in its own projection, so
+    tokenize+shingle runs once per row."""
+    return _right_size(df).select(
+        F.col(id_col), shingles(tokens(text_col), n).alias("sh"))
+
 
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard over two *distinct-element* arrays. Integer sizes →
@@ -86,32 +123,76 @@ def jaccard(a: Column, b: Column) -> Column:
     return inter / union.cast("double")
 
 
+def _verify(cands: DataFrame, a: DataFrame, b: DataFrame, *,
+            threshold: float, gather: bool = False) -> DataFrame:
+    """Exact Jaccard of each candidate pair ``(ka, kb)`` — the
+    relation's two columns, distinct pairs.  ``a`` and ``b`` are the
+    ``(id, sh)`` relations (:func:`_shingled`) of the ``ka`` and ``kb``
+    members: one relation for both in a self-join; the batch and its
+    candidate-pruned corpus in the incremental probe.  Emits
+    ``(ka, kb, jaccard_sim ≥ threshold)``.
+
+    Two shapes; callers choose from what they know of candidate
+    volume:
+
+    ``gather`` (self-join only; ``b`` is ``a``) — explode each pair
+    into its two member ids, join the shingle relation ONCE, and gather
+    the two arrays back onto the pair with a ``(ka, kb)``-keyed
+    aggregate.  Each group holds exactly two member rows (pairs are
+    distinct, a document's shingle row is unique), so the NULL-skipping
+    MAX is a deterministic pick.  One corpus shingling instead of two,
+    plus a gather exchange of 2·|cands| arrays: right when candidates
+    are S-curve-bounded (plain LSH banding; sf0.1
+    ``dedup_minhash_lsh`` 1.53 → 1.31 s).
+
+    two joins (default) — each side joins its shingle relation.  Right
+    when candidates dwarf the corpus, as under the prefix closure
+    (|cands| ≳ |corpus| at any scale): 2·|cands| arrays through a
+    gather exchange then cost more than two corpus passes (sf0.1
+    ``curation_pairs`` 2.29 → 6.86 s and ``dedup_allpairs_prefix``
+    4.39 → 8.00 s under gather).  The candidates are first spread by
+    an AQE-exempt repartition on ``xxhash64(ka, kb)``: they are
+    byte-small but CPU-heavy per row, so AQE's byte-based coalescing
+    would funnel the verify through one task.  The key is one derived
+    expression because a plain ``(ka, kb)`` repartition is removed as
+    redundant against the upstream distinct's exchange, and a single
+    ``ka`` key funnels a hot document's whole candidate fan-out through
+    one task.  The gather shape needs no spread: its aggregate input
+    carries real array bytes, which AQE sizes correctly."""
+    ka, kb = cands.columns
+    if gather:
+        sh = a.toDF("_vid", "sh")
+        pairs = (
+            cands.select(ka, kb, F.explode(F.array(ka, kb)).alias("_vid"))
+            .join(sh, "_vid")
+            .groupBy(ka, kb)
+            .agg(F.max(F.when(F.col("_vid") == F.col(ka), F.col("sh")))
+                 .alias("sh_a"),
+                 F.max(F.when(F.col("_vid") == F.col(kb), F.col("sh")))
+                 .alias("sh_b"))
+        )
+    else:
+        n_part = int(cands.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions", "32"))
+        pairs = (cands.repartition(n_part, F.xxhash64(ka, kb))
+                 .join(a.toDF(ka, "sh_a"), ka)
+                 .join(b.toDF(kb, "sh_b"), kb))
+    return (
+        pairs.select(ka, kb,
+                     jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard_sim"))
+        .filter(F.col("jaccard_sim") >= threshold)
+    )
+
+
 def pairwise_jaccard(df: DataFrame, *, id_col: str = "doc_id",
                      text_col: str = "text", block_col: str | None = None,
-                     n: int = 3, threshold: float = 0.5,
-                     salts: int = 1) -> DataFrame:
-    """All-pairs n-gram Jaccard within blocks (E10's exact baseline).
+                     n: int = 3, threshold: float = 0.5) -> DataFrame:
+    """All-pairs n-gram Jaccard within blocks (E10's exact baseline and
+    the brute-force reference the near-dup tests compare against).
 
-    ``block_col`` bounds the quadratic blow-up (same-source blocking
-    here; at 100 TB the block key comes from LSH instead — see
-    :func:`minhash_near_dup_pairs`, which reuses the same verifier).
-    Emits (doc_a, doc_b, jaccard_sim) with doc_a < doc_b.
-
-    ``salts`` > 1 spreads each block's QUADRATIC pair output over that
-    many tasks (round 8, the dedup_edit_distance lesson: AQE sizes
-    post-shuffle partitions by input bytes, so a low-cardinality block
-    key funnels a block's whole pair loop through one task). The left
-    side is salted by ``doc_a % salts``, the right side replicates
-    row-locally across the salts, and both reach the join through an
-    explicit AQE-coalescing-exempt repartition — the pair set is
-    unchanged (a's salt is a function of doc_a; b matches at exactly
-    that salt)."""
-    if salts > 1 and block_col is None:
-        raise ValueError(
-            "salts > 1 requires block_col: the salt spreads a BLOCK's "
-            "quadratic pair output across tasks, so without a block key "
-            "there is nothing to spread and the caller would silently "
-            "get the unsalted single-stage join")
+    ``block_col`` bounds the quadratic blow-up (same-source blocking);
+    without it every pair is compared.  Emits (doc_a, doc_b,
+    jaccard_sim) with doc_a < doc_b."""
     sh = df.select(
         F.col(id_col),
         *( [F.col(block_col)] if block_col else [] ),
@@ -126,17 +207,6 @@ def pairwise_jaccard(df: DataFrame, *, id_col: str = "doc_id",
     on = [left.doc_a < right.doc_b]
     if block_col:
         on.insert(0, left["_blk"] == right["_blk"])
-    if salts > 1 and block_col:
-        spark = df.sparkSession
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        left = left.withColumn(
-            "_salt", F.pmod(F.col("doc_a"), F.lit(salts))
-        ).repartition(n_part, "_blk", "_salt")
-        right = right.withColumn(
-            "_salt",
-            F.explode(F.array(*[F.lit(i) for i in range(salts)])),
-        ).repartition(n_part, "_blk", "_salt")
-        on.insert(1, left["_salt"] == right["_salt"])
     pairs = left.join(right, reduce(lambda x, y: x & y, on))
     sim = jaccard(F.col("sh_a"), F.col("sh_b"))
     return (
@@ -147,18 +217,19 @@ def pairwise_jaccard(df: DataFrame, *, id_col: str = "doc_id",
 
 # ---------------------------------------------------------------------------
 # Winnowing-fingerprint blocking — the bounded-by-construction block key
-# for the EXACT pair verifiers (round-9: replaces `source` blocking,
-# whose block size grew linearly with corpus ⇒ O(n²/|sources|) pairs)
+# for the EXACT pair verifiers (a metadata key such as `source` grows its
+# blocks linearly with the corpus, so its pair output grows
+# quadratically)
 # ---------------------------------------------------------------------------
 
 #: Hot-fingerprint document-frequency cap: fingerprints shared by more
 #: than this many documents are dropped from candidate generation (the
-#: same degenerate-key policy as ``lsh_candidate_pairs``' max_bucket —
-#: such grams are boilerplate, and their members are exact-dup/
-#: containment territory).  This makes the candidate join's output
-#: bounded BY CONSTRUCTION: ≤ max_df·(max_df−1)/2 pairs per
-#: fingerprint, with fingerprint cardinality ∝ corpus tokens — the
-#: pair relation grows LINEARLY with the corpus, never quadratically.
+#: same degenerate-key policy as the LSH ``max_bucket`` cap — such
+#: grams are boilerplate, and their members are exact-dup/containment
+#: territory).  This makes the candidate join's output bounded BY
+#: CONSTRUCTION: ≤ max_df·(max_df−1)/2 pairs per fingerprint, with
+#: fingerprint cardinality ∝ corpus tokens — the pair relation grows
+#: LINEARLY with the corpus, never quadratically.
 WINNOW_MAX_DF = 64
 
 
@@ -189,15 +260,15 @@ def winnow_fingerprints(df: DataFrame, *, id_col: str = "doc_id",
     # from birth: the (doc, pos, gh) relation is THE dominant exchange
     # of every winnowing consumer (it carries one row per gram
     # position, pre-selection) and binary halves its hash bytes vs the
-    # 32-char hex string (round 12, guide §2.3 "narrower types").  The
-    # window MINIMUM selection is unchanged by the encoding: both
-    # engines' md5 hex is lowercase fixed-width, so lexicographic hex
-    # order IS unsigned bytewise order of the decoded bytes (hex digit
-    # order is monotone per nibble), and Spark compares BinaryType
-    # bytewise-unsigned — ``min(unhex(h)) == unhex(min(h))`` exactly;
-    # the engine-portable DuckDB oracles keep the hex rendering and
-    # the selected SETS coincide (pinned by the winnowing parity
-    # queries at both gate SFs).
+    # 32-char hex string.  The window MINIMUM selection is unchanged by
+    # the encoding: both engines' md5 hex is lowercase fixed-width, so
+    # lexicographic hex order IS unsigned bytewise order of the decoded
+    # bytes (hex digit order is monotone per nibble), and Spark
+    # compares BinaryType bytewise-unsigned —
+    # ``min(unhex(h)) == unhex(min(h))`` exactly; the engine-portable
+    # DuckDB oracles keep the hex rendering and the selected SETS
+    # coincide (pinned by the winnowing parity queries at both gate
+    # SFs).
     gram_structs = F.when(
         n >= k,
         F.transform(
@@ -237,8 +308,8 @@ def winnow_candidate_pairs(fps: DataFrame, *, id_col: str = "doc_id",
     metadata block key — per-key pair output is capped at
     max_df·(max_df−1)/2 by the df filter and the join needs NO salt:
     AQE's input-byte coalescing is safe when every key's output is
-    bounded and keys are hash-spread (the round-8 salting lesson
-    applied at the ROOT: fix the key, not the task placement).
+    bounded and keys are hash-spread (fix the key, not the task
+    placement).
 
     Internally the fingerprint is renamed to the operator-owned
     ``_wf`` before the sizing window, so the plan lint's bound is keyed
@@ -262,33 +333,21 @@ def winnow_candidate_pairs(fps: DataFrame, *, id_col: str = "doc_id",
 def jaccard_verify(cands: DataFrame, docs: DataFrame, *,
                    id_col: str = "doc_id", text_col: str = "text",
                    n: int = 3, threshold: float = 0.5) -> DataFrame:
-    """Exact n-gram Jaccard over an explicit candidate-pair relation —
-    the verification half of every blocked near-dup pipeline, factored
-    so candidate GENERATION (winnowing / LSH / fingerprint index) and
-    verification compose freely.
+    """Exact n-gram Jaccard over an explicit distinct ``(doc_a, doc_b)``
+    candidate relation — the verification half of every blocked
+    near-dup pipeline, factored so candidate GENERATION (winnowing /
+    LSH / fingerprint index) and verification compose freely.  The
+    two-join shape of :func:`_verify`, with ``docs`` shingled for both
+    sides.
 
     The candidate relation is referenced exactly ONCE (deliberately no
     candidates-derived semi-join pre-thin of the text side: each extra
     reference to ``cands`` re-executes the whole generation subtree —
     a 3× winnowing cost measured at sf0.1 — while shingling is
-    row-local map work the scan pipeline absorbs).  A round-12 attempt
-    to break that trade with localCheckpoint(eager=False) was REVERTED
-    with measurements: under AQE the "lazy" checkpoint materializes at
-    plan-build time as serial jobs, and honest build+write timing read
-    every consumer slower (dedup_ngram_jaccard 1.4→2.4 s) than this
-    shape, whose duplicated subtrees run concurrently inside the one
-    action.  Emits ``(doc_a, doc_b, jaccard_sim ≥ threshold)``."""
-    sh = (_right_size(docs)
-          .select(F.col(id_col),
-                  shingles(tokens(text_col), n).alias("sh")))
-    a = sh.select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))
-    return (
-        cands.join(a, "doc_a").join(b, "doc_b")
-        .select("doc_a", "doc_b",
-                jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard_sim"))
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
+    row-local map work the scan pipeline absorbs).  Emits
+    ``(doc_a, doc_b, jaccard_sim ≥ threshold)``."""
+    sh = _shingled(docs, id_col=id_col, text_col=text_col, n=n)
+    return _verify(cands, sh, sh, threshold=threshold)
 
 
 def levenshtein_verify(cands: DataFrame, docs: DataFrame, *,
@@ -327,61 +386,61 @@ def levenshtein_verify(cands: DataFrame, docs: DataFrame, *,
 
 
 # ---------------------------------------------------------------------------
-# E10 — MinHash + LSH
+# E10 — stack rows: MinHash bands and Jaccard prefixes
 # ---------------------------------------------------------------------------
+
+def _minima(num_hashes: int) -> list[Column]:
+    """The k seeded-xxhash64 minima of ``sh`` — a document's MinHash
+    signature, per row inside codegen
+    (``array_min(transform(sh, xxhash64))`` per seed).  A signature is
+    a pure function of one document, so it needs NO explode, NO
+    aggregation and NO shuffle (the explode → k×min-agg shape shuffles
+    the entire shingle relation, ~30× the corpus at n=3)."""
+    def seeded(s: int):
+        # single-parameter lambda: F.transform dispatches a
+        # TWO-parameter callable as (element, index), so a default-arg
+        # seed capture would silently bind the index as the seed
+        return lambda x: F.xxhash64(F.lit(s), x)
+
+    return [F.array_min(F.transform(F.col("sh"), seeded(s)))
+            for s in range(num_hashes)]
+
+
+def _band_hashes(minima: list[Column], bands: int,
+                 rows: int) -> list[Column]:
+    """One xxhash64 per LSH band over its ``rows`` consecutive minima —
+    THE banding expression of every band stack, so a persisted index
+    and a later probe can never band differently (the incremental
+    pipeline's recall depends on identical banding)."""
+    return [F.xxhash64(F.lit(b), *minima[b * rows:(b + 1) * rows])
+            for b in range(bands)]
+
 
 def minhash_signatures(df: DataFrame, *, id_col: str = "doc_id",
                        text_col: str = "text", n: int = 3,
                        num_hashes: int = 32) -> DataFrame:
-    """(id, sig array<long>) — k seeded-xxhash64 minima over the
-    document's shingle set, computed entirely per-row inside
-    whole-stage codegen: ``array_min(transform(shingles, xxhash64))``
-    per seed. A MinHash signature is a pure function of one document,
-    so it needs NO explode, NO aggregation, and NO shuffle — at 100 TB
-    this keeps signature generation embarrassingly parallel (the naive
-    explode→k×min-agg shape shuffles the entire shingle relation, which
-    is ~30× the corpus size at n=3)."""
-    def seeded(s: int):
-        return lambda x: F.xxhash64(F.lit(s), x)
+    """``(id, sig array<long>)`` — the :func:`_minima` of each
+    document's shingle set.
 
-    # Two-step select: the shingle array is built ONCE per row as a
-    # named column, and the k minima reference it as an attribute.
-    # (Referencing the shingle *expression* k times would evaluate the
-    # whole tokenize+slice+distinct pipeline k times per row; Catalyst
-    # keeps the projections split because `sh` is an expensive alias
-    # with multiple references — CollapseProject declines to inline.)
-    with_sh = _right_size(df).select(
-        F.col(id_col), shingles(tokens(text_col), n).alias("sh"))
-    sig_cols = [
-        F.array_min(F.transform(F.col("sh"), seeded(seed)))
-        for seed in range(num_hashes)
-    ]
-    # Materialize the compact (id, sig) relation through one exchange:
-    # it makes the signature sub-plan common across both sides of the
-    # downstream LSH self-join (ReuseExchange computes it once), and
-    # the shuffle carries id + k longs per doc — tiny next to the
-    # corpus, and ~30× smaller than the exploded-shingle shuffle the
-    # aggregate formulation would need.
+    The compact relation goes through one id-keyed exchange: it makes
+    the signature sub-plan common to both sides of the downstream LSH
+    self-join (ReuseExchange computes it once), and the shuffle
+    carries id + k longs per doc — tiny next to the corpus."""
     return (
-        with_sh.select(F.col(id_col), F.array(*sig_cols).alias("sig"))
+        _shingled(df, id_col=id_col, text_col=text_col, n=n)
+        .select(F.col(id_col), F.array(*_minima(num_hashes)).alias("sig"))
         .repartition(F.col(id_col))
     )
 
 
 def _band_stack(sigs: DataFrame, *, id_col: str, bands: int,
                 rows: int) -> DataFrame:
-    """(id, band, bucket) from MinHash signatures — THE banding
-    expression, shared by the self-join pipeline
-    (:func:`lsh_candidate_pairs`) and the persistable index
-    (:func:`lsh_band_index`) so the two can never drift apart (the
-    incremental pipeline's recall argument depends on identical
-    banding)."""
-    band_cols = [
-        F.xxhash64(F.lit(b), *[F.col("sig")[b * rows + r] for r in range(rows)])
-        .alias(f"b{b}")
-        for b in range(bands)
-    ]
-    banded = sigs.select(F.col(id_col), *band_cols)
+    """``(id, band, bucket)`` from MinHash signatures — the band-only
+    stack (:func:`lsh_band_index` with ``exact_recall=False``)."""
+    hashes = _band_hashes([F.col("sig")[i] for i in range(bands * rows)],
+                          bands, rows)
+    banded = sigs.select(F.col(id_col),
+                         *[h.alias(f"b{b}") for b, h in enumerate(hashes)])
     return banded.select(
         F.col(id_col),
         F.stack(
@@ -402,12 +461,37 @@ def _band_stack(sigs: DataFrame, *, id_col: str, bands: int,
 PREFIX_BAND = -1
 
 
+def _prefix_len(size: Column, threshold: float) -> Column:
+    """Prefix length ``p = floor((1-t)·|A|) + 1`` of a shingle set of
+    ``size`` elements.  ``(1-t)·|A|`` is nudged by +1e-9 before
+    ``floor`` so binary rounding can only LENGTHEN the prefix (at
+    t = 0.8, |A| = 5 the product is 0.9999999999999998, not 1; a
+    shorter prefix breaks the theorem)."""
+    return (F.floor(size * F.lit(1.0 - threshold) + F.lit(1e-9))
+            + F.lit(1)).cast("int")
+
+
+def _prefix(threshold: float) -> Column:
+    """The Jaccard prefix of ``sh`` under the global order
+    ``(xxhash64(token), token)``: ``array<struct<h, t>>``, its first
+    :func:`_prefix_len` elements.  The order is computable per row
+    (``array_sort`` of a struct array), needs NO document-frequency
+    pre-pass, and is STABLE as the corpus grows, which a persisted
+    index requires."""
+    ordered = F.array_sort(F.transform(
+        F.col("sh"),
+        lambda x: F.struct(F.xxhash64(x).alias("h"), x.alias("t"))))
+    return F.slice(ordered, F.lit(1), _prefix_len(F.size("sh"), threshold))
+
+
 def _prefix_stack(df: DataFrame, *, id_col: str = "doc_id",
                   text_col: str = "text", n: int = 3,
                   threshold: float = 0.6) -> DataFrame:
-    """``(id, band=PREFIX_BAND, bucket)`` — one row per token of the
-    document's Jaccard-prefix, the deterministic recall-closure for the
-    LSH candidate join.
+    """``(id, band=PREFIX_BAND, bucket, pos, sz)`` — one row per token
+    of the document's hash-ordered Jaccard prefix (:func:`_prefix`),
+    the deterministic recall closure for the LSH candidate join.
+    :func:`_fused_band_prefix_stack` emits the same rows next to the
+    band rows from one projection.
 
     Prefix-filter theorem (Bayardo/Ma/Srikant, *Scaling Up All Pairs
     Similarity Search*, WWW'07; Xiao et al., *PPJoin*, WWW'08): order
@@ -423,19 +507,14 @@ def _prefix_stack(df: DataFrame, *, id_col: str = "doc_id",
     true pairs — LSH recall stops being probabilistic the moment these
     rows join the band stack.
 
-    The global order is ``(xxhash64(token), token)`` — computable
-    per-row inside codegen (``array_sort`` of a struct array), needing
-    NO document-frequency pre-pass, and STABLE as the corpus grows,
-    which the incremental path requires (a df-ascending order, the
-    AllPairs classic that minimizes candidate volume, changes as the
+    Hash order rather than the df-ascending AllPairs classic
+    (:func:`_prefix_stack_df_order`) because a df order changes as the
     corpus grows and would silently invalidate a persisted index's
-    prefixes).  The cost of hash order is that a globally common
-    shingle can land in prefixes and form a hot bucket; prefix rows
-    are exempt from ``max_bucket`` (correctness), so at extreme scale
-    the mitigation is the threshold itself (prefixes shrink as t
-    rises) and AQE skew splitting on the verify join.  The float
-    ``(1-t)·|A|`` is nudged by +1e-9 before ``floor`` so binary
-    rounding can only ever LENGTHEN the prefix (longer = safe).
+    prefixes.  Its cost is that a globally common shingle can land in
+    prefixes and form a hot bucket; prefix rows are exempt from
+    ``max_bucket`` (correctness), so at extreme scale the mitigation
+    is the threshold itself (prefixes shrink as t rises) and AQE skew
+    splitting on the verify join.
 
     Prefix rows carry ``(pos, sz)`` — the token's 1-based position in
     the document's ordered shingle set and the set size — so the
@@ -452,16 +531,9 @@ def _prefix_stack(df: DataFrame, *, id_col: str = "doc_id",
     shingles shared by UNRELATED docs form most of the raw candidate
     volume, and almost none of them survive the position test.
     """
-    sh = _right_size(df).select(
-        F.col(id_col), shingles(tokens(text_col), n).alias("sh"))
-    p = (F.floor(F.size("sh") * F.lit(1.0 - threshold) + F.lit(1e-9))
-         + F.lit(1)).cast("int")
-    ordered = F.array_sort(F.transform(
-        F.col("sh"),
-        lambda x: F.struct(F.xxhash64(x).alias("h"), x.alias("t"))))
-    pref = sh.select(
+    pref = _shingled(df, id_col=id_col, text_col=text_col, n=n).select(
         F.col(id_col), F.size("sh").alias("sz"),
-        F.posexplode(F.slice(ordered, F.lit(1), p)).alias("_i", "_pt"))
+        F.posexplode(_prefix(threshold)).alias("_i", "_pt"))
     return pref.select(
         F.col(id_col), F.lit(PREFIX_BAND).alias("band"),
         F.col("_pt.h").alias("bucket"),
@@ -474,61 +546,30 @@ def _fused_band_prefix_stack(df: DataFrame, *, id_col: str = "doc_id",
                              rows: int = 4,
                              threshold: float = 0.6) -> DataFrame:
     """ONE-SCAN ``(id, band, bucket, pos, sz)`` relation: the LSH band
-    rows AND the prefix-filter rows (:func:`_prefix_stack`) from a
-    single shingle projection — the exact-recall stack without the
-    second corpus scan.
+    rows (``pos = sz = 0``) AND the prefix-filter rows of
+    :func:`_prefix_stack` from a single shingle projection — the
+    exact-recall stack.
 
-    The pre-fusion shape (round 11) computed
-    ``_band_stack(minhash_signatures(df)) ∪ _prefix_stack(df)``: two
-    parquet scans, two tokenize+shingle evaluations, one id-keyed
-    exchange (the signature materialization) and a union — all per
-    build.  But every per-document quantity here (the k seeded minima,
-    the band hashes, the hash-ordered prefix slice) is a pure function
-    of the document's shingle set, so one projection chain can emit
-    both row families as a single struct array and one ``explode``:
-    scan → shingles → (minima, prefix) → explode → rows.  No union, no
-    id exchange, half the scans; the only shuffle left in an
+    Every per-document quantity here (the k minima, the band hashes,
+    the prefix slice) is a pure function of the shingle set, so one
+    projection chain emits both row families as a single struct array
+    and one ``explode``: scan → shingles → (minima, prefix) → explode.
+    Against ``_band_stack(minhash_signatures(df)) ∪ _prefix_stack(df)``
+    this saves a corpus scan, a tokenize+shingle evaluation, the
+    signature's id exchange and a union; the only shuffle left in an
     exact-recall index build is the ``(band, bucket)`` exchange the
-    bucket join needs anyway.  At 100 TB the removed scan is the
-    dominant saving (the corpus read is the big cost); at fixture
-    scale it removes the fixed overhead of two extra stages.
-
-    Row-family equivalence with the pre-fusion stack is pinned by
-    ``tests/test_dedup.py`` (band rows equal ``_band_stack`` output,
-    prefix rows equal ``_prefix_stack`` output)."""
-    with_sh = _right_size(df).select(
-        F.col(id_col), shingles(tokens(text_col), n).alias("sh"))
-    # minima/prefix reference `sh` as a multiply-referenced expensive
-    # alias, so CollapseProject keeps the projections split and the
-    # shingle pipeline evaluates ONCE per row (the minhash_signatures
-    # discipline)
-    def seeded(s: int):
-        # single-parameter lambda: F.transform dispatches a
-        # TWO-parameter callable as (element, index), so a default-arg
-        # seed capture would silently bind the index as the seed
-        return lambda x: F.xxhash64(F.lit(s), x)
-
-    sig_cols = [
-        F.array_min(F.transform(F.col("sh"), seeded(seed)))
-        .alias(f"_m{seed}")
-        for seed in range(num_hashes)
-    ]
-    p = (F.floor(F.size("sh") * F.lit(1.0 - threshold) + F.lit(1e-9))
-         + F.lit(1)).cast("int")
-    ordered = F.array_sort(F.transform(
-        F.col("sh"),
-        lambda x: F.struct(F.xxhash64(x).alias("h"), x.alias("t"))))
-    staged = with_sh.select(
+    bucket join needs anyway.  Row-set equality with that composition
+    is pinned by ``tests/test_dedup.py``."""
+    staged = _shingled(df, id_col=id_col, text_col=text_col, n=n).select(
         F.col(id_col), F.size("sh").alias("_sz"),
-        F.slice(ordered, F.lit(1), p).alias("_pref"), *sig_cols)
+        _prefix(threshold).alias("_pref"),
+        *[m.alias(f"_m{i}") for i, m in enumerate(_minima(num_hashes))])
+    hashes = _band_hashes([F.col(f"_m{i}") for i in range(num_hashes)],
+                          bands, rows)
     band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(F.lit(b),
-                       *[F.col(f"_m{b * rows + r}") for r in range(rows)])
-            .alias("bucket"),
-            F.lit(0).alias("pos"), F.lit(0).alias("sz"))
-        for b in range(bands)
+        F.struct(F.lit(b).alias("band"), h.alias("bucket"),
+                 F.lit(0).alias("pos"), F.lit(0).alias("sz"))
+        for b, h in enumerate(hashes)
     ]
     pref_structs = F.transform(
         F.col("_pref"),
@@ -540,247 +581,8 @@ def _fused_band_prefix_stack(df: DataFrame, *, id_col: str = "doc_id",
         .select(F.col(id_col),
                 F.explode(F.concat(F.array(*band_structs), pref_structs))
                 .alias("_r"))
-        .select(F.col(id_col), F.col("_r.band").alias("band"),
-                F.col("_r.bucket").alias("bucket"),
-                F.col("_r.pos").alias("pos"), F.col("_r.sz").alias("sz"))
+        .select(F.col(id_col), "_r.band", "_r.bucket", "_r.pos", "_r.sz")
     )
-
-
-def _pp_filters(threshold: float) -> Column:
-    """PPJoin candidate filters over a joined prefix-row pair carrying
-    ``(_sza, _posa)`` × ``(_szb, _posb)`` — exact (they only remove
-    pairs the position/length bounds PROVE are below threshold; see
-    :func:`_prefix_stack`).  All comparisons stay in the safe
-    direction under float noise (the 1e-9 slack keeps borderline
-    pairs)."""
-    t = threshold
-    length_ok = ((F.col("_sza") * t <= F.col("_szb") + 1e-9)
-                 & (F.col("_szb") * t <= F.col("_sza") + 1e-9))
-    ubound = 1 + F.least(F.col("_sza") - F.col("_posa"),
-                         F.col("_szb") - F.col("_posb"))
-    need = (F.col("_sza") + F.col("_szb")) * F.lit(t / (1.0 + t))
-    return length_ok & (ubound >= need - 1e-9)
-
-
-def _bucket_pairs(stacked: DataFrame, *, id_col: str,
-                  max_bucket: int,
-                  threshold: float = 0.6,
-                  prefix_only: bool = False) -> DataFrame:
-    """Self-join a ``(id, band, bucket[, pos, sz])`` relation into
-    candidate pairs, dropping hot buckets above ``max_bucket`` —
-    except ``PREFIX_BAND`` rows, which are never dropped (they carry
-    the exact-recall guarantee; LSH buckets are only ever a recall
-    accelerator once prefix rows are present).  Prefix-row pairs pass
-    through the PPJoin length/position filters (exact — see
-    :func:`_prefix_stack`), which is what keeps the downstream
-    array-payload verify join candidate-bounded on corpora whose
-    templated text shares medium-df shingles across unrelated
-    documents.
-
-    ``prefix_only=True`` declares that EVERY row is a prefix row
-    (``band`` is the PREFIX_BAND literal — the standalone AllPairs
-    path).  The generic plan is then provably equivalent to a
-    bucket-only one — the skew-cap filter is vacuously true, a join
-    on a column that is one constant is a join on ``bucket`` alone —
-    but NOT free: Catalyst folds the constant ``band`` out of the
-    join keys while the explicit ``(band, bucket)`` repartition keeps
-    it as ``hashpartitioning(-1, bucket)``, which no longer satisfies
-    the join's ``ClusteredDistribution(bucket)``, so EnsureRequirements
-    re-exchanges the whole prefix relation a SECOND time per side
-    (round-12 plan audit).  Declaring it lets this build the
-    bucket-keyed plan directly: one exchange, shared by both sides."""
-    if "pos" not in stacked.columns:
-        stacked = stacked.withColumn("pos", F.lit(0)) \
-                         .withColumn("sz", F.lit(0))
-    # One explicit exchange on the join keys: the window below reuses
-    # it (ClusteredDistribution on the same keys), and BOTH self-join
-    # sides read the SAME shuffle files (ReuseExchange) instead of
-    # re-computing the shingle→signature→prefix subtree per side —
-    # which is exactly what happens if the planner broadcasts one
-    # side (fixture-scale stats tempt it to; at 100 TB this relation
-    # is corpus×(bands+prefix) rows and broadcasting it is wrong, so
-    # the shuffle_hash hint below is the scale-correct strategy too).
-    join_keys = ["bucket"] if prefix_only else ["band", "bucket"]
-    stacked = stacked.repartition(*[F.col(k) for k in join_keys])
-    if prefix_only:
-        sized = stacked  # every row is PREFIX_BAND: cap-exempt
-    else:
-        sized = stacked.withColumn(
-            "bucket_n",
-            F.count(F.lit(1)).over(Window.partitionBy("band", "bucket")),
-        ).filter((F.col("bucket_n") <= max_bucket)
-                 | (F.col("band") == PREFIX_BAND)).drop("bucket_n")
-    a = sized.select(*join_keys,
-                     F.col(id_col).alias("doc_a"),
-                     F.col("pos").alias("_posa"), F.col("sz").alias("_sza"))
-    b = sized.select(*join_keys,
-                     F.col(id_col).alias("doc_b"),
-                     F.col("pos").alias("_posb"), F.col("sz").alias("_szb"))
-    pair_ok = F.col("doc_a") < F.col("doc_b")
-    if prefix_only:
-        pair_ok = pair_ok & _pp_filters(threshold)
-    else:
-        pair_ok = pair_ok & ((F.col("band") != PREFIX_BAND)
-                             | _pp_filters(threshold))
-    return (
-        a.join(b.hint("shuffle_hash"), join_keys)
-        .filter(pair_ok)
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-
-
-def lsh_candidate_pairs(sigs: DataFrame, *, id_col: str = "doc_id",
-                        bands: int = 8, rows: int = 4,
-                        max_bucket: int = 1000) -> DataFrame:
-    """Band the signatures and self-join band buckets → candidate pairs.
-
-    Buckets larger than ``max_bucket`` are dropped (with their size they
-    are near-certain duplicates of a degenerate key — and they are
-    exactly the skew that would quadratically blow up the self-join);
-    callers wanting them get them from exact dedup instead.
-    """
-    stacked = _band_stack(sigs, id_col=id_col, bands=bands, rows=rows)
-    return _bucket_pairs(stacked, id_col=id_col, max_bucket=max_bucket)
-
-
-def minhash_near_dup_pairs(df: DataFrame, *, id_col: str = "doc_id",
-                           text_col: str = "text", n: int = 3,
-                           num_hashes: int = 32, bands: int = 8, rows: int = 4,
-                           threshold: float = 0.6,
-                           exact_recall: bool = False) -> DataFrame:
-    """End-to-end MinHash near-dedup: sign → band → candidates → exact
-    Jaccard verify. Emits (doc_a, doc_b, jaccard_sim ≥ threshold).
-
-    b=8, r=4 puts the LSH S-curve threshold at (1/8)^(1/4) ≈ 0.59 —
-    candidates below it are mostly filtered before verification.
-
-    Recall contract: the default is the production LSH path, whose
-    recall is PROBABILISTIC — a true pair at exactly J = t is missed
-    with probability ``(1 - t^rows)^bands`` (~33% at t = 0.6 with 8×4;
-    <2% by J = 0.8).  ``exact_recall=True`` unions the deterministic
-    prefix-filter rows (:func:`_prefix_stack`) into the band stack
-    before the one bucket self-join, making the candidate set a
-    PROVABLE superset of every J ≥ t pair — the mode the strict
-    all-pairs-oracle queries run, discovered necessary when the 100×
-    subset-strict sweep caught borderline short-doc pairs (J = 0.67,
-    0.83) that the banding had missed (round 11; the gate fixtures
-    never contained such pairs, which is why all-pairs oracles matched
-    through round 10)."""
-    if exact_recall:
-        stacked = _fused_band_prefix_stack(
-            df, id_col=id_col, text_col=text_col, n=n,
-            num_hashes=num_hashes, bands=bands, rows=rows,
-            threshold=threshold)
-        cands = _bucket_pairs(stacked, id_col=id_col, max_bucket=1000,
-                              threshold=threshold)
-    else:
-        sigs = minhash_signatures(df, id_col=id_col, text_col=text_col,
-                                  n=n, num_hashes=num_hashes)
-        cands = lsh_candidate_pairs(sigs, id_col=id_col, bands=bands,
-                                    rows=rows)
-    # gather verify only for the S-curve-bounded plain-LSH candidate
-    # set; the exact_recall prefix closure makes |cands| ≳ |corpus| and
-    # the two-pass shape wins (measured — _verify_jaccard_pairs)
-    return _verify_jaccard_pairs(df, cands, id_col=id_col,
-                                 text_col=text_col, n=n,
-                                 threshold=threshold,
-                                 gather=not exact_recall)
-
-
-def _verify_jaccard_pairs(df: DataFrame, cands: DataFrame, *,
-                          id_col: str, text_col: str, n: int,
-                          threshold: float,
-                          gather: bool = False) -> DataFrame:
-    """Exact-Jaccard verification of a (doc_a, doc_b) candidate
-    relation against the corpus texts — the shared final stage of
-    every candidate generator (LSH, prefix-filter, their union).
-
-    The candidates are spread by an AQE-exempt repartition first: the
-    relation is BYTE-small (two ids per row) but CPU-heavy per row
-    (array intersection per pair), so AQE's byte-based coalescing
-    would funnel the whole verify stage through ONE task — the
-    round-8 dedup_edit_distance lesson, re-learned in round 11 when
-    the prefix closure grew candidates ~500x past the LSH volume.
-    The spread key is ``xxhash64(doc_a, doc_b)`` — a single derived
-    expression, for two reasons: a plain ``(doc_a, doc_b)``
-    repartition is optimizer-removed as redundant against the
-    distinct's identical aggregate exchange (leaving only the
-    AQE-coalescible ENSURE_REQUIREMENTS exchange), and the round-11
-    single-key ``doc_a`` form — which dodged that elision — funneled a
-    hot document's ENTIRE candidate fan-out through one task (common
-    under templated corpora, the round-12 advisor finding).  The pair
-    hash survives the elision AND spreads hot-``doc_a`` fan-outs.
-
-    TWO shapes, selected by the CALLER's knowledge of candidate volume
-    (round 13; guide §1.1 first-principles + measured A/B):
-
-    ``gather=True`` — explode each candidate pair into its two member
-    ids, join the shingle relation ONCE, and gather the two arrays
-    back onto the pair row with a (doc_a, doc_b)-keyed aggregate (each
-    group holds exactly two member rows — candidate pairs are distinct
-    and a doc's shingle row is unique — so the NULL-skipping MAX is a
-    deterministic pick, not an order race).  Corpus shingling: 2
-    evaluations → 1; corpus-array exchanges: 2 → ≤1 + a gather
-    exchange of 2·|cands| arrays.  Right when candidates are
-    S-curve-bounded (plain LSH banding): measured sf0.1
-    dedup_minhash_lsh 1.53 → 1.31 s.
-
-    ``gather=False`` (default) — the classic two-join shape: the
-    corpus shingle projection joins both pair sides (differently-keyed
-    exchanges defeat ReuseExchange, so it is tokenized+shingled twice,
-    CONCURRENTLY inside the action).  Right when candidates DWARF the
-    corpus — the deterministic-recall prefix closure grows candidates
-    ~500× past the LSH volume (round 11), and 2·|cands| shingle arrays
-    through the gather exchange is then far heavier than two corpus
-    passes: measured sf0.1 curation_pairs 2.29 → 6.86 s and
-    dedup_allpairs_prefix 4.39 → 8.00 s under gather=True, both
-    reverted to this shape.  The same trade governs 100 TB: the
-    closure keeps |cands| ≳ |corpus| at any scale (it is the price of
-    deterministic recall), so the two-pass shape IS the scale-right
-    form for exact_recall pipelines, not a fixture artifact.
-
-    The two-join shape keeps the AQE-exempt pair-hash spread: the
-    candidate relation is BYTE-small but CPU-heavy per row, so AQE's
-    byte-based coalescing would funnel the verify through ONE task
-    (round-8/-11/-12 lessons — hash of the pair survives optimizer
-    elision AND spreads hot-document fan-outs).  The gather shape
-    needs none: its aggregate is keyed by the pair hash and its input
-    rows carry real array bytes that AQE sizes correctly."""
-    sh = _right_size(df).select(
-        F.col(id_col).alias("_vid"),
-        shingles(tokens(text_col), n).alias("sh"))
-    if gather:
-        ex = cands.select(
-            "doc_a", "doc_b",
-            F.explode(F.array("doc_a", "doc_b")).alias("_vid"))
-        gathered = (
-            ex.join(sh, "_vid")
-            .groupBy("doc_a", "doc_b")
-            .agg(
-                F.max(F.when(F.col("_vid") == F.col("doc_a"), F.col("sh")))
-                .alias("sh_a"),
-                F.max(F.when(F.col("_vid") == F.col("doc_b"), F.col("sh")))
-                .alias("sh_b"),
-            )
-        )
-        verified = gathered.select(
-            "doc_a", "doc_b",
-            jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard_sim"))
-        return verified.filter(F.col("jaccard_sim") >= threshold)
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions",
-                                          "32"))
-    cands = cands.repartition(n_part, F.xxhash64("doc_a", "doc_b"))
-    verified = (
-        cands
-        .join(sh.select(F.col("_vid").alias("doc_a"),
-                        F.col("sh").alias("sh_a")), "doc_a")
-        .join(sh.select(F.col("_vid").alias("doc_b"),
-                        F.col("sh").alias("sh_b")), "doc_b")
-        .select("doc_a", "doc_b",
-                jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard_sim"))
-    )
-    return verified.filter(F.col("jaccard_sim") >= threshold)
 
 
 def _prefix_stack_df_order(df: DataFrame, *, id_col: str,
@@ -791,60 +593,228 @@ def _prefix_stack_df_order(df: DataFrame, *, id_col: str,
     document's prefix then holds its rarest shingles, which are the
     least likely to be shared by UNRELATED documents — the
     candidate-volume-minimizing order from Bayardo WWW'07.  Costs one
-    document-frequency aggregate over the exploded shingle relation
-    (the winnowing verifiers' df pass, same shape) and — crucially —
-    the order CHANGES as the corpus grows, so this variant is only
-    sound for SELF-JOINS over a fixed corpus; the persisted
-    incremental index must keep :func:`_prefix_stack`'s
-    growth-stable hash order."""
-    sh = _right_size(df).select(
-        F.col(id_col), shingles(tokens(text_col), n).alias("sh"))
-    # Round 12 (guide §2.3 "narrower types" + §2.4): the shingle
-    # travels as its 8-byte xxhash64 — which IS the bucket value —
-    # from birth, so the df aggregate and the df join-back shuffle
-    # longs instead of ~30-byte strings, and the global order becomes
-    # (df, hash) instead of (df, token).  The prefix theorem needs
-    # only SOME consistent total order shared by every document, which
-    # (df(h), h) is; candidate volume shifts marginally, the verified
-    # output is order-invariant (pinned vs brute force in
-    # tests/test_dedup.py).  A hash collision merges two shingles'
-    # df counts AND buckets — candidates can only GAIN pairs
-    # (superset preserved), and the exact-Jaccard verify discards
-    # them.  The exploded relation's two consumers (the df aggregate,
-    # the df join-back) prune differently, so the tokenize+shingle+
-    # explode evaluates twice — left that way deliberately: the
-    # round-12 localCheckpoint attempt materialized at plan-build
-    # under AQE as serial jobs and measured SLOWER than the
-    # concurrent duplicated subtrees (see _verify_jaccard_pairs).
-    tok = sh.select(F.col(id_col), F.size("sh").alias("sz"),
-                    F.explode("sh").alias("_t")) \
-        .select(F.col(id_col), "sz", F.xxhash64("_t").alias("_h"))
+    document-frequency aggregate over the exploded shingle relation,
+    and the order CHANGES as the corpus grows, so this variant is only
+    sound for SELF-JOINS over a fixed corpus.
+
+    The shingle travels as its 8-byte xxhash64 — which IS the bucket
+    value — so the df aggregate and its join-back shuffle longs, and
+    the order is ``(df(h), h)``.  The theorem needs only SOME total
+    order shared by every document, which that is; a hash collision
+    merges two shingles' df counts and buckets, so candidates can only
+    gain pairs, which verification discards.  The exploded relation's
+    two consumers (the df aggregate, the df join-back) prune
+    differently, so tokenize+shingle+explode evaluates twice,
+    concurrently (see the module docstring on materializing once)."""
+    tok = (_shingled(df, id_col=id_col, text_col=text_col, n=n)
+           .select(F.col(id_col), F.size("sh").alias("sz"),
+                   F.explode("sh").alias("_t"))
+           .select(F.col(id_col), "sz", F.xxhash64("_t").alias("_h")))
     dfc = tok.groupBy("_h").agg(F.count(F.lit(1)).alias("_df"))
-    p = (F.floor(F.col("sz") * F.lit(1.0 - threshold) + F.lit(1e-9))
-         + F.lit(1)).cast("int")
     pos = F.row_number().over(
         Window.partitionBy(id_col).orderBy("_df", "_h"))
     return (
         tok.join(dfc, "_h")
         .withColumn("pos", pos)
-        .filter(F.col("pos") <= p)
+        .filter(F.col("pos") <= _prefix_len(F.col("sz"), threshold))
         .select(F.col(id_col), F.lit(PREFIX_BAND).alias("band"),
                 F.col("_h").alias("bucket"), "pos", "sz")
     )
 
 
+def lsh_band_index(df: DataFrame, *, id_col: str = "doc_id",
+                   text_col: str = "text", n: int = 3,
+                   num_hashes: int = 32, bands: int = 8,
+                   rows: int = 4, exact_recall: bool = False,
+                   threshold: float = 0.6) -> DataFrame:
+    """The near-dup stack, and the PERSISTABLE LSH index relation:
+    ``(id, band, bucket)`` — one row per (document, band), ``bucket``
+    the band's hash.  :func:`minhash_near_dup_pairs` self-joins it; an
+    ingest pipeline materializes it (``partitionBy("band")`` parquet:
+    a probe of band b prunes to 1/bands of the index files), appends
+    each accepted batch, and hands it to
+    :func:`incremental_near_dup_pairs` via ``index=`` so repeated
+    ingests never re-band the historical corpus.  The band-only build
+    costs one compact (id, k-longs) exchange
+    (:func:`minhash_signatures`) and nothing corpus-shaped.
+
+    ``exact_recall=True`` builds the fused stack instead
+    (:func:`_fused_band_prefix_stack`): the band rows plus the
+    document's prefix-filter rows under ``band = PREFIX_BAND``, with
+    ``(pos, sz)`` columns.  The prefix order is corpus-growth-stable,
+    so rows indexed today remain valid prefixes forever — append-only
+    ingest never re-prefixes history; ``threshold`` must be ≤ every
+    probe's threshold (lower = longer prefixes = safe).  Its explicit
+    ``(band, bucket)`` exchange is the reuse point: the incremental
+    probe references this relation from the touched semi-join, the
+    skew-cap window and the probe join, and without it each reference
+    re-computes the shingle+prefix subtree."""
+    if exact_recall:
+        return _fused_band_prefix_stack(
+            df, id_col=id_col, text_col=text_col, n=n,
+            num_hashes=num_hashes, bands=bands, rows=rows,
+            threshold=threshold) \
+            .repartition(F.col("band"), F.col("bucket"))
+    sigs = minhash_signatures(df, id_col=id_col, text_col=text_col,
+                              n=n, num_hashes=num_hashes)
+    return _band_stack(sigs, id_col=id_col, bands=bands, rows=rows)
+
+
+# ---------------------------------------------------------------------------
+# E10 — candidate pairs and end-to-end near-dup
+# ---------------------------------------------------------------------------
+
+def _with_pos_sz(stacked: DataFrame) -> DataFrame:
+    """Give a band-only stack the ``pos = sz = 0`` sentinel columns of
+    the fused stack, so every bucket join reads one schema."""
+    return stacked.withColumns({c: F.lit(0) for c in ("pos", "sz")
+                                if c not in stacked.columns})
+
+
+def _cap_hot_buckets(stacked: DataFrame, max_bucket: int) -> DataFrame:
+    """Drop every ``(band, bucket)`` group with more than ``max_bucket``
+    members — except ``PREFIX_BAND`` rows, which carry the exact-recall
+    guarantee.  Big band buckets are near-certain duplicates of a
+    degenerate key (exact-dedup territory) and exactly the skew that
+    would blow the self-join up quadratically.
+
+    The explicit ``(band, bucket)`` exchange BELOW the sizing window
+    makes the distribution real.  Both the window and the bucket join
+    reuse it.  Without it, a union input whose children both claim
+    ``hash(band, bucket)`` partitioning (a shuffled semi-join output
+    next to a repartitioned stack) propagates the claim while holding
+    the concatenation of both children's partitions; the window then
+    elides its exchange and the join zips mismatched partition counts
+    ("Can't zip RDDs: List(48, 96)", stats-dependent, seen at sf1)."""
+    return (
+        stacked.repartition(F.col("band"), F.col("bucket"))
+        .withColumn("_bn",
+                    F.count(F.lit(1)).over(Window.partitionBy("band", "bucket")))
+        .filter((F.col("_bn") <= max_bucket)
+                | (F.col("band") == PREFIX_BAND))
+        .drop("_bn")
+    )
+
+
+def _pp_filters(threshold: float, prefix_only: bool = False) -> Column:
+    """PPJoin candidate filters over a joined pair carrying
+    ``(_sza, _posa)`` × ``(_szb, _posb)`` — exact (they only remove
+    pairs the position/length bounds PROVE are below threshold; see
+    :func:`_prefix_stack`).  All comparisons stay in the safe
+    direction under float noise (the 1e-9 slack keeps borderline
+    pairs).  Rows of a real band pass untested unless ``prefix_only``
+    declares that the pair has no ``band`` column (every row is a
+    prefix row)."""
+    t = threshold
+    length_ok = ((F.col("_sza") * t <= F.col("_szb") + 1e-9)
+                 & (F.col("_szb") * t <= F.col("_sza") + 1e-9))
+    ubound = 1 + F.least(F.col("_sza") - F.col("_posa"),
+                         F.col("_szb") - F.col("_posb"))
+    need = (F.col("_sza") + F.col("_szb")) * F.lit(t / (1.0 + t))
+    ok = length_ok & (ubound >= need - 1e-9)
+    return ok if prefix_only else (F.col("band") != PREFIX_BAND) | ok
+
+
+def _side(stacked: DataFrame, keys: list[str], id_col: str, name: str,
+          sfx: str, *extra: str) -> DataFrame:
+    """One side of a bucket join: the join keys, the id as ``name``,
+    and ``(pos, sz)`` as ``(_pos<sfx>, _sz<sfx>)`` for
+    :func:`_pp_filters`."""
+    return stacked.select(*keys, F.col(id_col).alias(name),
+                          F.col("pos").alias(f"_pos{sfx}"),
+                          F.col("sz").alias(f"_sz{sfx}"), *extra)
+
+
+def _bucket_pairs(stacked: DataFrame, *, id_col: str,
+                  max_bucket: int,
+                  threshold: float = 0.6,
+                  prefix_only: bool = False) -> DataFrame:
+    """Self-join a ``(id, band, bucket[, pos, sz])`` stack into
+    distinct ``(doc_a, doc_b)`` candidate pairs, hot band buckets
+    capped (:func:`_cap_hot_buckets`), prefix-row pairs through the
+    PPJoin filters (:func:`_pp_filters`).
+
+    Both join sides read the SAME shuffle files (ReuseExchange) instead
+    of re-computing the shingle→signature→prefix subtree per side;
+    a broadcast side (fixture-scale stats tempt the planner) would
+    re-compute it, and at 100 TB the stack is corpus×(bands+prefix)
+    rows, so the ``shuffle_hash`` hint is the scale-correct strategy.
+
+    ``prefix_only=True`` declares that EVERY row is a prefix row
+    (``band`` is the PREFIX_BAND literal — the standalone AllPairs
+    path).  The generic plan would give the same pairs (the cap is
+    vacuous, a join on a constant column is a join on ``bucket``) but
+    not the same cost: Catalyst folds the constant ``band`` out of the
+    join keys while an explicit ``(band, bucket)`` repartition keeps it
+    as ``hashpartitioning(-1, bucket)``, which does not satisfy the
+    join's ``ClusteredDistribution(bucket)``, so the prefix relation
+    would be exchanged a SECOND time per side.  Declaring it builds the
+    bucket-keyed plan directly: one exchange, shared by both sides."""
+    stacked = _with_pos_sz(stacked)
+    if prefix_only:
+        keys = ["bucket"]
+        sized = stacked.repartition(F.col("bucket"))
+    else:
+        keys = ["band", "bucket"]
+        sized = _cap_hot_buckets(stacked, max_bucket)
+    a = _side(sized, keys, id_col, "doc_a", "a")
+    b = _side(sized, keys, id_col, "doc_b", "b")
+    return (
+        a.join(b.hint("shuffle_hash"), keys)
+        .filter((F.col("doc_a") < F.col("doc_b"))
+                & _pp_filters(threshold, prefix_only))
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+
+
+def minhash_near_dup_pairs(df: DataFrame, *, id_col: str = "doc_id",
+                           text_col: str = "text", n: int = 3,
+                           num_hashes: int = 32, bands: int = 8, rows: int = 4,
+                           threshold: float = 0.6,
+                           exact_recall: bool = False) -> DataFrame:
+    """End-to-end MinHash near-dedup: :func:`lsh_band_index` →
+    :func:`_bucket_pairs` → exact Jaccard :func:`_verify`.  Emits
+    (doc_a, doc_b, jaccard_sim ≥ threshold).
+
+    b=8, r=4 puts the LSH S-curve threshold at (1/8)^(1/4) ≈ 0.59 —
+    candidates below it are mostly filtered before verification.
+
+    Recall contract: the default is the production LSH path, whose
+    recall is PROBABILISTIC — a true pair at exactly J = t is missed
+    with probability ``(1 - t^rows)^bands`` (~33% at t = 0.6 with 8×4;
+    <2% by J = 0.8), so borderline short-doc pairs (J = 0.67, 0.83
+    on the sf1 fixture) can be missed.  ``exact_recall=True`` adds the
+    deterministic prefix-filter rows (:func:`_prefix_stack`) to the
+    band stack before the one bucket self-join, making the candidate
+    set a PROVABLE superset of every J ≥ t pair — the mode the strict
+    all-pairs-oracle queries run.
+
+    The verify shape follows: plain LSH candidates are S-curve-bounded
+    and take the gather shape; the prefix closure makes
+    |cands| ≳ |corpus| and takes the two-join shape."""
+    stacked = lsh_band_index(df, id_col=id_col, text_col=text_col, n=n,
+                             num_hashes=num_hashes, bands=bands, rows=rows,
+                             exact_recall=exact_recall, threshold=threshold)
+    cands = _bucket_pairs(stacked, id_col=id_col, max_bucket=1000,
+                          threshold=threshold)
+    sh = _shingled(df, id_col=id_col, text_col=text_col, n=n)
+    return _verify(cands, sh, sh, threshold=threshold,
+                   gather=not exact_recall)
+
+
 def allpairs_near_dup_pairs(df: DataFrame, *, id_col: str = "doc_id",
                             text_col: str = "text", n: int = 3,
-                            threshold: float = 0.6,
-                            order: str = "df") -> DataFrame:
+                            threshold: float = 0.6) -> DataFrame:
     """The AllPairs/PPJoin exact similarity self-join STANDALONE — no
-    MinHash, no LSH, no probabilistic stage anywhere: prefix-filter
-    candidates (:func:`_prefix_stack`, with the PPJoin length/position
-    filters) straight into exact-Jaccard verification.  Output is
-    PROVABLY the complete ``J ≥ threshold`` pair relation (the prefix
-    theorem gives candidate completeness; verification gives
-    precision), so the all-pairs SQL oracle is its exact twin at any
-    scale with no recall argument needed.
+    MinHash, no LSH, no probabilistic stage anywhere: df-ordered
+    prefix-filter candidates (:func:`_prefix_stack_df_order`, with the
+    PPJoin length/position filters) straight into exact-Jaccard
+    verification.  Output is PROVABLY the complete
+    ``J ≥ threshold`` pair relation (the prefix theorem gives
+    candidate completeness; verification gives precision), so the
+    all-pairs SQL oracle is its exact twin at any scale with no recall
+    argument needed.
 
     Use this when the corpus is modest or the threshold is high (the
     prefix shrinks as t rises); prefer :func:`minhash_near_dup_pairs`
@@ -852,40 +822,144 @@ def allpairs_near_dup_pairs(df: DataFrame, *, id_col: str = "doc_id",
     the 100 TB end, where LSH's band buckets carry most true pairs far
     more cheaply and the prefix rows serve as the recall closure.
     Candidate volume is Σ_bucket C(df,2) over prefix-token buckets —
-    never the corpus square.
-
-    ``order`` picks the global total order: ``"df"`` (default — the
-    AllPairs classic, rarest-first, minimizes candidates at the price
-    of one df aggregate; self-join-only, see
-    :func:`_prefix_stack_df_order`) or ``"hash"`` (pre-pass-free,
-    growth-stable — the order the incremental index shares).  Output
-    is identical either way; any total order satisfies the theorem."""
-    if order == "df":
-        stacked = _prefix_stack_df_order(df, id_col=id_col,
-                                         text_col=text_col, n=n,
-                                         threshold=threshold)
-    elif order == "hash":
-        stacked = _prefix_stack(df, id_col=id_col, text_col=text_col,
-                                n=n, threshold=threshold)
-    else:
-        raise ValueError(f"order must be 'df' or 'hash', got {order!r}")
+    never the corpus square."""
+    stacked = _prefix_stack_df_order(df, id_col=id_col, text_col=text_col,
+                                     n=n, threshold=threshold)
     cands = _bucket_pairs(stacked, id_col=id_col, max_bucket=1000,
                           threshold=threshold, prefix_only=True)
-    return _verify_jaccard_pairs(df, cands, id_col=id_col,
-                                 text_col=text_col, n=n,
-                                 threshold=threshold)
+    sh = _shingled(df, id_col=id_col, text_col=text_col, n=n)
+    return _verify(cands, sh, sh, threshold=threshold)
+
+
+def incremental_near_dup_pairs(batch: DataFrame, corpus: DataFrame, *,
+                               id_col: str = "doc_id",
+                               text_col: str = "text", n: int = 3,
+                               num_hashes: int = 32, bands: int = 8,
+                               rows: int = 4, threshold: float = 0.6,
+                               max_bucket: int = 1000,
+                               index: DataFrame | None = None,
+                               exact_recall: bool = False) -> DataFrame:
+    """Incremental (batch-vs-index) MinHash near-dedup — the PRODUCTION
+    ingest shape: dedup a NEW batch of documents against an already-
+    indexed corpus plus the batch's own earlier rows, without ever
+    self-joining the historical corpus.
+
+    Emits ``(doc_new, doc_other, jaccard_sim)`` where ``doc_new`` is a
+    batch document and ``doc_other`` is either an indexed corpus
+    document or an earlier batch document (``doc_other < doc_new`` —
+    the accept-in-id-order semantic: each new doc is checked against
+    everything accepted before it). Candidates come from an ASYMMETRIC
+    band-bucket equi-join (batch bands probe the index bands), then
+    exact-Jaccard verification, exactly like the self-join pipeline.
+
+    Scale shape: at 100 TB the index side's ``(id, band, bucket)``
+    relation is the persisted LSH index (append batches to it after
+    acceptance); each ingest then costs O(|batch| · bands) probe rows
+    joined against the bucket-partitioned index — proportional to the
+    BATCH, never to the corpus. Hot index buckets above ``max_bucket``
+    are dropped by the same cap as the self-join
+    (:func:`_cap_hot_buckets`). Ids of ``batch`` and ``corpus`` must
+    be disjoint.
+
+    Pass ``index`` to probe a PRE-MATERIALIZED corpus band relation
+    (the output of :func:`lsh_band_index`, e.g. read back from parquet
+    ``partitionBy("band")``) instead of re-banding the corpus texts —
+    the persisted-index production path; ``corpus`` is then used only
+    for exact-verification texts.
+
+    ``exact_recall=True`` is the deterministic-recall mode (see
+    :func:`minhash_near_dup_pairs`): both sides carry prefix-filter
+    rows under ``band = PREFIX_BAND`` (exempt from the skew cap), so
+    the probe provably surfaces every J ≥ threshold batch-vs-allowed
+    pair.  A pre-materialized ``index`` must itself have been built
+    with ``exact_recall=True`` at a threshold ≤ this one.
+    """
+    sig_new = lsh_band_index(batch, id_col=id_col, text_col=text_col,
+                             n=n, num_hashes=num_hashes, bands=bands,
+                             rows=rows, exact_recall=exact_recall,
+                             threshold=threshold)
+    if index is None:
+        index = lsh_band_index(corpus, id_col=id_col, text_col=text_col,
+                               n=n, num_hashes=num_hashes, bands=bands,
+                               rows=rows, exact_recall=exact_recall,
+                               threshold=threshold)
+    elif exact_recall:
+        # Fail fast: a pre-materialized BAND-ONLY index (built with
+        # exact_recall=False — no pos/sz columns) would otherwise be
+        # silently normalized below and the probe would run with NO
+        # corpus-side prefix rows, degrading the deterministic-recall
+        # guarantee this flag promises back to probabilistic LSH
+        # recall with no error.  The schema is the cheap plan-time
+        # proxy for "built in exact-recall mode"; an index that HAS the
+        # columns but was stripped of its PREFIX_BAND rows remains the
+        # caller's contract to keep (checking row presence would force
+        # an action per build).
+        missing = [c for c in ("pos", "sz") if c not in index.columns]
+        if missing:
+            raise ValueError(
+                "incremental_near_dup_pairs(exact_recall=True) was given "
+                f"a pre-materialized index lacking {missing}: the index "
+                "must be built with lsh_band_index(..., exact_recall="
+                "True) so it carries the prefix-filter rows the "
+                "deterministic-recall guarantee depends on")
+    sig_new, index = _with_pos_sz(sig_new), _with_pos_sz(index)
+    # Batch-proportionality: restrict the index to the (band, bucket)
+    # keys the batch actually probes BEFORE anything corpus-shaped
+    # runs. The semi-join keeps every member of a touched bucket (so
+    # the skew-cap counts are complete for exactly the buckets that
+    # matter) and drops the rest of the index unread — without it, the
+    # sizing window re-shuffles the ENTIRE historical index on every
+    # ingest.
+    #
+    # sig_new is referenced three times (the touched keys, the union
+    # child, the probe side) and per-reference column pruning gives
+    # each a different exchange subtree, so neither ReuseExchange nor
+    # AQE stage reuse fires and the batch stack is evaluated three
+    # times.  That cost is batch-proportional, and the copies run
+    # concurrently; sharing one stage (probe = the windowed union
+    # filtered to _new) serializes union → window → join and measured
+    # slower at sf0.1 (batch 3.86 → 4.06 s, persisted 4.66 → 5.67 s).
+    touched = index.join(sig_new.select("band", "bucket").distinct(),
+                         ["band", "bucket"], "left_semi")
+    sized = _cap_hot_buckets(
+        touched.withColumn("_new", F.lit(False))
+        .unionByName(sig_new.withColumn("_new", F.lit(True))),
+        max_bucket)
+    keys = ["band", "bucket"]
+    probe = _side(sig_new, keys, id_col, "doc_new", "a")
+    hit = _side(sized, keys, id_col, "doc_other", "b", "_new")
+    cands = (
+        probe.join(hit, keys)
+        .filter(((~F.col("_new")) | (F.col("doc_other") < F.col("doc_new")))
+                & _pp_filters(threshold))
+        .select("doc_new", "doc_other")
+        .distinct()
+    )
+    # Shingle only candidate texts: the corpus side is semi-joined to
+    # the candidates' doc_other ids (pair-bounded) before the
+    # tokenize+shingle projection, so verification never shingles the
+    # historical corpus.  Two joins: sh_new is batch-proportional and
+    # the other side candidates-only, which is already scale-right.
+    others = corpus.unionByName(batch).join(
+        cands.select(F.col("doc_other").alias(id_col)).distinct(),
+        id_col, "left_semi")
+    return _verify(
+        cands,
+        _shingled(batch, id_col=id_col, text_col=text_col, n=n),
+        _shingled(others, id_col=id_col, text_col=text_col, n=n),
+        threshold=threshold)
 
 
 # ---------------------------------------------------------------------------
-# E10 — SimHash
+# Connected components over near-dup pairs
 # ---------------------------------------------------------------------------
 
-def dedup_clusters(pairs: DataFrame, *, max_iterations: int = 20,
-                   representative: DataFrame | None = None,
-                   rep_id_col: str = "doc_id",
-                   rep_score_col: str = "quality") -> DataFrame:
+def dedup_clusters(pairs: DataFrame, *,
+                   max_iterations: int = 20) -> DataFrame:
     """Connected components over near-dup pairs → canonical
-    representative per cluster.
+    representative (the min id: cheap, deterministic) per cluster;
+    :func:`pick_cluster_representatives` re-picks the best member
+    instead.
 
     Min-label propagation: every node starts labeled with itself; each
     round, a node adopts the smallest label among itself and its
@@ -894,16 +968,6 @@ def dedup_clusters(pairs: DataFrame, *, max_iterations: int = 20,
     of rounds), and each round is one join + one aggregation — the
     standard large-graph CC shape (no driver-side graph, only a scalar
     convergence check crosses to the driver).
-
-    Representative policy: by default the canonical member is the min
-    id (cheap, deterministic). Production curation keeps the BEST
-    document per near-dup cluster instead: pass ``representative`` — a
-    (``rep_id_col``, ``rep_score_col``) relation covering the clustered
-    ids — and each cluster's canonical becomes its argmax by
-    (score desc, id asc). The re-pick is one ``max_by`` hash aggregate
-    over the cluster-member relation (pairs-scale, never the corpus;
-    partial aggregation map-side) plus a join back on the label — no
-    window, no extra corpus shuffle.
 
     Input: (doc_a, doc_b) pairs. Output: (doc_id, canonical_id).
     """
@@ -948,28 +1012,27 @@ def dedup_clusters(pairs: DataFrame, *, max_iterations: int = 20,
         labels = updated.drop("_changed")
         if changed == 0:
             break
-    out = labels.select(F.col("id").alias("doc_id"),
-                        F.col("label").alias("canonical_id"))
-    if representative is not None:
-        return pick_cluster_representatives(
-            out, representative,
-            rep_id_col=rep_id_col, rep_score_col=rep_score_col)
-    return out
+    return labels.select(F.col("id").alias("doc_id"),
+                         F.col("label").alias("canonical_id"))
 
 
 def pick_cluster_representatives(labels: DataFrame, scored: DataFrame, *,
                                  rep_id_col: str = "doc_id",
                                  rep_score_col: str = "quality"
                                  ) -> DataFrame:
-    """Re-canonicalize a (doc_id, canonical_id) cluster labeling to the
-    argmax-by-(score desc, id asc) member per cluster — the
-    ``representative=`` policy of :func:`dedup_clusters`, exposed
-    separately so a caller holding an already-converged labeling (the
-    curation queries share one CC build per fixture dir) can apply the
-    policy without re-running the label loop. One ``max_by`` hash
-    aggregate over the cluster-member relation plus a join back on the
-    cluster key; ids missing from ``scored`` drop from the output (the
-    caller supplies scores for every clustered id by contract)."""
+    """Re-canonicalize a (doc_id, canonical_id) cluster labeling (the
+    output of :func:`dedup_clusters`) to the argmax-by-(score desc,
+    id asc) member per cluster — the production curation policy, which
+    keeps the BEST document per near-dup cluster.  A caller holding an
+    already-converged labeling (the curation queries share one CC
+    build per fixture dir) applies it without re-running the label
+    loop.  One ``max_by`` hash aggregate over the cluster-member
+    relation (pairs-scale, never the corpus; partial aggregation
+    map-side) plus a join back on the cluster key — no window, no
+    extra corpus shuffle.  ``scored`` is a (``rep_id_col``,
+    ``rep_score_col``) relation; ids missing from it drop from the
+    output (the caller supplies scores for every clustered id by
+    contract)."""
     s = scored.select(F.col(rep_id_col).alias("doc_id"),
                       F.col(rep_score_col).alias("_score"))
     # argmax by (score desc, id asc): max_by over a struct orders
@@ -983,6 +1046,10 @@ def pick_cluster_representatives(labels: DataFrame, scored: DataFrame, *,
             .select("doc_id", F.col("_rep").alias("canonical_id")))
 
 
+# ---------------------------------------------------------------------------
+# E10 — SimHash and banded hamming
+# ---------------------------------------------------------------------------
+
 def simhash(df: DataFrame, *, id_col: str = "doc_id",
             text_col: str = "text") -> DataFrame:
     """64-bit SimHash per document: per-bit majority vote over token
@@ -993,10 +1060,9 @@ def simhash(df: DataFrame, *, id_col: str = "doc_id",
     and NO shuffle (the naive shape shuffles the whole token relation
     into a 64-column aggregate)."""
     # Hash the token array ONCE per row into a named column (see
-    # minhash_signatures on why the two-step select matters: the 64
-    # bit-votes below each reference `hs`, and inlining the
-    # tokenize+hash pipeline into every vote would be a 64× per-row
-    # blow-up).
+    # _shingled on why the two-step select matters: the 64 bit-votes
+    # below each reference `hs`, and inlining the tokenize+hash
+    # pipeline into every vote would be a 64× per-row blow-up).
     with_hs = _right_size(df).select(
         F.col(id_col),
         F.transform(tokens(text_col), lambda t: F.xxhash64(t)).alias("hs"),
@@ -1077,219 +1143,3 @@ def simhash_near_dup_pairs(df: DataFrame, *, id_col: str = "doc_id",
     sh = simhash(df, id_col=id_col, text_col=text_col)
     return hamming_band_pairs(sh, id_col=id_col, sig_col="simhash",
                               max_hamming=max_hamming, bands=4)
-
-
-def lsh_band_index(df: DataFrame, *, id_col: str = "doc_id",
-                   text_col: str = "text", n: int = 3,
-                   num_hashes: int = 32, bands: int = 8,
-                   rows: int = 4, exact_recall: bool = False,
-                   threshold: float = 0.6) -> DataFrame:
-    """The PERSISTABLE LSH index relation: ``(id, band, bucket)`` —
-    one row per (document, band), ``bucket`` the band's hash. This is
-    what an ingest pipeline materializes (``partitionBy("band")``
-    parquet: a probe of band b prunes to 1/bands of the index files)
-    and appends each accepted batch to; :func:`incremental_near_dup_pairs`
-    accepts it via ``index=`` so repeated ingests never re-band the
-    historical corpus. Signatures are per-row codegen and the band
-    stack is a projection, so building it costs one compact
-    (id, k-longs) exchange (``minhash_signatures``' materialization)
-    and nothing corpus-shaped.
-
-    ``exact_recall=True`` additionally stores the document's
-    prefix-filter rows under ``band = PREFIX_BAND`` (they land in
-    their own ``partitionBy("band")`` partition and are pruned like
-    any band).  The prefix order is the corpus-growth-stable hash
-    order, so rows indexed today remain valid prefixes forever —
-    append-only ingest never re-prefixes history; ``threshold`` must
-    be ≤ every probe's threshold (lower = longer prefixes = safe)."""
-    if exact_recall:
-        # One scan, one projection chain, one exchange: see
-        # _fused_band_prefix_stack.  The explicit exchange is the
-        # reuse point: the incremental probe references this relation
-        # from the touched semi-join, the skew-cap window, and the
-        # probe join — without it each reference re-computes the
-        # shingle+prefix subtree.
-        return _fused_band_prefix_stack(
-            df, id_col=id_col, text_col=text_col, n=n,
-            num_hashes=num_hashes, bands=bands, rows=rows,
-            threshold=threshold) \
-            .repartition(F.col("band"), F.col("bucket"))
-    sigs = minhash_signatures(df, id_col=id_col, text_col=text_col,
-                              n=n, num_hashes=num_hashes)
-    return _band_stack(sigs, id_col=id_col, bands=bands, rows=rows)
-
-
-def incremental_near_dup_pairs(batch: DataFrame, corpus: DataFrame, *,
-                               id_col: str = "doc_id",
-                               text_col: str = "text", n: int = 3,
-                               num_hashes: int = 32, bands: int = 8,
-                               rows: int = 4, threshold: float = 0.6,
-                               max_bucket: int = 1000,
-                               index: DataFrame | None = None,
-                               exact_recall: bool = False) -> DataFrame:
-    """Incremental (batch-vs-index) MinHash near-dedup — the PRODUCTION
-    ingest shape: dedup a NEW batch of documents against an already-
-    indexed corpus plus the batch's own earlier rows, without ever
-    self-joining the historical corpus.
-
-    Emits ``(doc_new, doc_other, jaccard_sim)`` where ``doc_new`` is a
-    batch document and ``doc_other`` is either an indexed corpus
-    document or an earlier batch document (``doc_other < doc_new`` —
-    the accept-in-id-order semantic: each new doc is checked against
-    everything accepted before it). Candidates come from an ASYMMETRIC
-    band-bucket equi-join (batch bands probe the index bands), then
-    exact-Jaccard verification, exactly like the self-join pipeline.
-
-    Scale shape: at 100 TB the index side's ``(id, band, bucket)``
-    relation is the persisted LSH index (append batches to it after
-    acceptance); each ingest then costs O(|batch| · bands) probe rows
-    joined against the bucket-partitioned index — proportional to the
-    BATCH, never to the corpus. Hot index buckets above ``max_bucket``
-    are dropped (the degenerate-key skew guard, same policy as
-    :func:`lsh_candidate_pairs` — their members are exact-dup
-    territory). Ids of ``batch`` and ``corpus`` must be disjoint.
-
-    Pass ``index`` to probe a PRE-MATERIALIZED corpus band relation
-    (the output of :func:`lsh_band_index`, e.g. read back from parquet
-    ``partitionBy("band")``) instead of re-banding the corpus texts —
-    the persisted-index production path; ``corpus`` is then used only
-    for exact-verification texts.
-
-    ``exact_recall=True`` is the deterministic-recall mode (see
-    :func:`minhash_near_dup_pairs`): both sides carry prefix-filter
-    rows under ``band = PREFIX_BAND`` (exempt from the skew cap), so
-    the probe provably surfaces every J ≥ threshold batch-vs-allowed
-    pair.  A pre-materialized ``index`` must itself have been built
-    with ``exact_recall=True`` at a threshold ≤ this one.
-    """
-    sig_new = lsh_band_index(batch, id_col=id_col, text_col=text_col,
-                             n=n, num_hashes=num_hashes, bands=bands,
-                             rows=rows, exact_recall=exact_recall,
-                             threshold=threshold)
-    if index is None:
-        index = lsh_band_index(corpus, id_col=id_col, text_col=text_col,
-                               n=n, num_hashes=num_hashes, bands=bands,
-                               rows=rows, exact_recall=exact_recall,
-                               threshold=threshold)
-    elif exact_recall:
-        # Fail fast (round-12 advisor): a pre-materialized BAND-ONLY
-        # index (built with exact_recall=False — no pos/sz columns)
-        # would otherwise be silently normalized below and the probe
-        # would run with NO corpus-side prefix rows, degrading the
-        # deterministic-recall guarantee this flag promises back to
-        # probabilistic LSH recall with no error.  The schema is the
-        # cheap plan-time proxy for "built in exact-recall mode"; an
-        # index that HAS the columns but was stripped of its
-        # PREFIX_BAND rows remains the caller's contract to keep
-        # (checking row presence would force an action per build).
-        missing = [c for c in ("pos", "sz") if c not in index.columns]
-        if missing:
-            raise ValueError(
-                "incremental_near_dup_pairs(exact_recall=True) was given "
-                f"a pre-materialized index lacking {missing}: the index "
-                "must be built with lsh_band_index(..., exact_recall="
-                "True) so it carries the prefix-filter rows the "
-                "deterministic-recall guarantee depends on")
-    # Batch-proportionality: restrict the index to the (band, bucket)
-    # keys the batch actually probes BEFORE anything corpus-shaped
-    # runs. The semi-join keeps every member of a touched bucket (so
-    # the skew-cap counts below are complete for exactly the buckets
-    # that matter) and drops the rest of the index unread — without
-    # it, the sizing window re-shuffles the ENTIRE historical index on
-    # every ingest.
-    for col in ("pos", "sz"):  # band-only relations (exact_recall off)
-        # normalize to the sentinel columns
-        if col not in sig_new.columns:
-            sig_new = sig_new.withColumn(col, F.lit(0))
-        if col not in index.columns:
-            index = index.withColumn(col, F.lit(0))
-    # sig_new is referenced three times below (the touched semi-join's
-    # probe keys, the union child, the probe side) and Catalyst's
-    # per-reference column pruning gives each a DIFFERENT
-    # canonicalized exchange subtree, so neither ReuseExchange nor
-    # AQE stage reuse fires — the round-12 stage profile showed the
-    # fused shingle+minhash+prefix stack executing 3x per probe.
-    # Round 12 TRIED materializing it once via localCheckpoint(
-    # eager=False) and REVERTED it with measurements (plan-build-time
-    # materialization; 8.6 s vs 4.3 s persisted).  Round 13 TRIED the
-    # remaining restructure — probe = sized.filter(_new), making the
-    # probe join a self-join of the windowed union whose sides share
-    # one exchange (stage reuse DID fire: the heavy stacks evaluated
-    # once) — and REVERTED it too, with bench-methodology A/B at
-    # sf0.1: batch 3.86 → 4.06 s, persisted 4.66 → 5.67 s (and with a
-    # second materialization exchange above the window: 4.51 / 5.60).
-    # The duplicated references run CONCURRENTLY inside one action on
-    # otherwise-idle cores, while the shared-stage shape SERIALIZES
-    # the chain (union stage → window → join); wall only pays the
-    # duplication when the cluster is saturated, and the duplication
-    # is batch-proportional by construction — a bounded constant
-    # factor at any scale, not a scale-killer.
-    touched = index.join(sig_new.select("band", "bucket").distinct(),
-                         ["band", "bucket"], "left_semi")
-    # Explicit exchange BELOW the sizing window: with round 11's reuse
-    # exchange on sig_new, both union children can claim the SAME
-    # hash(band, bucket) partitioning (touched inherits it as semi-join
-    # output when the planner picks a shuffled semi join), the union
-    # propagates the claim while physically holding the CONCATENATION
-    # of both sides' partitions, the window elides its exchange
-    # against the claimed distribution, and the probe join then zips
-    # mismatched partition counts ("Can't zip RDDs: List(48, 96)" —
-    # caught by the round-11 full sf1 sweep, stats-dependent so it
-    # only fired in long sessions).  The explicit repartition makes
-    # the distribution REAL; in the non-buggy planning it replaces the
-    # exchange EnsureRequirements would have inserted anyway, and its
-    # input is batch-proportional (touched buckets + batch rows).
-    both = touched.withColumn("_new", F.lit(False)) \
-        .unionByName(sig_new.withColumn("_new", F.lit(True))) \
-        .repartition(F.col("band"), F.col("bucket"))
-    sized = both.withColumn(
-        "_bn", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket")),
-    ).filter((F.col("_bn") <= max_bucket)
-             | (F.col("band") == PREFIX_BAND)).drop("_bn")
-    probe = sig_new.select("band", "bucket", F.col(id_col).alias("doc_new"),
-                           F.col("pos").alias("_posa"),
-                           F.col("sz").alias("_sza"))
-    hit = sized.select("band", "bucket", F.col(id_col).alias("doc_other"),
-                       F.col("pos").alias("_posb"),
-                       F.col("sz").alias("_szb"), "_new")
-    cands = (
-        probe.join(hit, ["band", "bucket"])
-        .filter((~F.col("_new")) | (F.col("doc_other") < F.col("doc_new")))
-        .filter((F.col("band") != PREFIX_BAND) | _pp_filters(threshold))
-        .select("doc_new", "doc_other")
-        .distinct()
-    )
-    # Shingle only candidate texts: the corpus side is semi-joined to
-    # the candidates' doc_other ids (pair-bounded) before the
-    # tokenize+shingle projection, so verification never shingles the
-    # historical corpus — the same candidates-only discipline as the
-    # retrieval stack's stage 2.
-    sh_new = _right_size(batch).select(
-        F.col(id_col).alias("doc_new"),
-        shingles(tokens(text_col), n).alias("sh_a"))
-    others = corpus.unionByName(batch).join(
-        cands.select(F.col("doc_other").alias(id_col)).distinct(),
-        id_col, "left_semi")
-    sh_all = _right_size(others).select(
-        F.col(id_col).alias("doc_other"),
-        shingles(tokens(text_col), n).alias("sh_b"))
-    # AQE-exempt spread before the CPU-heavy per-pair verification:
-    # candidate rows are byte-small (two ids), so AQE's byte-based
-    # coalescing would funnel the whole verify stage through one task.
-    # The pair-hash key survives optimizer elision against the
-    # distinct's aggregate exchange AND spreads a hot document's
-    # candidate fan-out (round-12 advisor).  The self-join verify
-    # (_verify_jaccard_pairs) retired its copy of this spread in round
-    # 13 by moving jaccard behind a pair-keyed gather aggregate; here
-    # the two-relation join shape stays (sh_new is batch-proportional,
-    # sh_all candidates-only — already scale-right), so the spread
-    # stays too.
-    n_part = int(batch.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"))
-    cands = cands.repartition(n_part, F.xxhash64("doc_new", "doc_other"))
-    return (
-        cands.join(sh_new, "doc_new").join(sh_all, "doc_other")
-        .select("doc_new", "doc_other",
-                jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard_sim"))
-        .filter(F.col("jaccard_sim") >= threshold)
-    )

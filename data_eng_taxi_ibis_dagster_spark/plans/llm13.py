@@ -95,8 +95,8 @@ def _marked(d: DataFrame, k: int) -> DataFrame:
     attempt to evaluate it once was reverted with measurements:
     under AQE the "lazy" checkpoint materializes at plan-build time
     as serial jobs, and honest build+write timing read slower than
-    the concurrent duplicated subtrees —
-    operators/dedup._verify_jaccard_pairs has the full account.)"""
+    the concurrent duplicated subtrees — the operators/dedup module
+    docstring has the full account.)"""
     wins = _windows(d, k)
     cnt = wins.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     return wins.join(cnt, "w")
@@ -675,7 +675,8 @@ def fingerprint_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join-back is skew-splittable; the double evaluation of ``sel``
     # is the price of the scale-safe shape (the round-12
     # localCheckpoint attempt measured slower — plan-build-time serial
-    # materialization under AQE; see _verify_jaccard_pairs).
+    # materialization under AQE; see the operators/dedup module
+    # docstring).
     cnt = sel.groupBy("f").agg(F.count(F.lit(1)).alias("c"))
     return (
         sel.join(cnt, "f")

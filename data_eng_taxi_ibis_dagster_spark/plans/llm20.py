@@ -509,7 +509,7 @@ def curation_best_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``curation_stack`` with the production representative policy:
     per near-dup cluster, keep the BEST document — argmax by
     (quality desc, doc_id asc) — instead of the min id
-    (``operators/dedup.dedup_clusters(representative=...)``); on the
+    (``operators/dedup.pick_cluster_representatives``); on the
     gate fixtures the two genuinely differ (a cluster whose
     highest-quality member is not its smallest id exists at sf0.001
     up — pinned in ``tests/test_parity`` via the registry sweep and

@@ -8,6 +8,7 @@ from data_eng_taxi_ibis_dagster_spark.operators.dedup import (
     exact_dedup,
     minhash_near_dup_pairs,
     pairwise_jaccard,
+    pick_cluster_representatives,
     simhash_near_dup_pairs,
 )
 from data_eng_taxi_ibis_dagster_spark.sources.tables import from_rows
@@ -77,10 +78,11 @@ def test_dedup_clusters_connected_components(spark):
 
 
 def test_dedup_clusters_quality_representative(spark):
-    """representative= swaps min-id canonicalization for argmax by
-    (score desc, id asc): in {1,2,3,4} doc 3 has the top score, in
-    {10,11} scores tie so the smaller id wins, and an id absent from
-    the edge set never appears (singletons are the caller's concern)."""
+    """pick_cluster_representatives swaps dedup_clusters' min-id
+    canonicalization for argmax by (score desc, id asc): in {1,2,3,4}
+    doc 3 has the top score, in {10,11} scores tie so the smaller id
+    wins, and an id absent from the edge set never appears (singletons
+    are the caller's concern)."""
     pairs = from_rows(
         spark,
         [(1, 2), (2, 3), (3, 4), (10, 11)],
@@ -92,7 +94,7 @@ def test_dedup_clusters_quality_representative(spark):
          (10, 0.7), (11, 0.7), (99, 1.0)],
         ["doc_id", "quality"],
     )
-    got = (dedup_clusters(pairs, representative=scores)
+    got = (pick_cluster_representatives(dedup_clusters(pairs), scores)
            .toPandas().set_index("doc_id")["canonical_id"])
     assert got[1] == got[2] == got[3] == got[4] == 3
     assert got[10] == got[11] == 10
@@ -519,6 +521,34 @@ def test_exact_recall_closes_lsh_misses(borderline_corpus_and_truth):
         f"invented {sorted(exact - truth)}")
 
 
+def test_verify_shapes_agree(borderline_corpus_and_truth):
+    """The gather and two-join verify shapes must return identical
+    ``(doc_a, doc_b, jaccard_sim)`` rows on one distinct candidate
+    relation — production picks the shape by candidate volume
+    (``exact_recall``), so both must be the same function.  Threshold
+    0 keeps every candidate, so every similarity is compared."""
+    from data_eng_taxi_ibis_dagster_spark.operators.dedup import (
+        _bucket_pairs,
+        _shingled,
+        _verify,
+        lsh_band_index,
+    )
+
+    df, _ = borderline_corpus_and_truth
+    cands = _bucket_pairs(lsh_band_index(df, exact_recall=True),
+                          id_col="doc_id", max_bucket=1000)
+    sh = _shingled(df, id_col="doc_id", text_col="text", n=3)
+    rows = {
+        gather: sorted(tuple(r) for r in
+                       _verify(cands, sh, sh, threshold=0.0,
+                               gather=gather).collect())
+        for gather in (True, False)
+    }
+    assert rows[True], "no candidates on the borderline corpus"
+    assert len(rows[True]) == cands.count()
+    assert rows[True] == rows[False]
+
+
 def test_incremental_exact_recall_closes_probe_misses(borderline_corpus_and_truth):
     """The incremental (batch-vs-index) probe under ``exact_recall``
     must surface exactly the true batch-vs-allowed pairs on the same
@@ -606,20 +636,49 @@ def test_bucket_pairs_prefix_only_equals_generic(spark):
     assert (4, 5) not in fast, "position filter must still apply"
 
 
-def test_prefix_length_floor_guard(spark):
-    """The prefix length p = floor((1-t)|A|)+1 must round UP under
-    float noise, never down: at t=0.6 with |A|=35 the exact value
-    (1-t)*35 = 14 sits where binary arithmetic lands on
-    14.000000000000002 — p must be 15, not 14 (a shorter prefix breaks
-    the recall theorem)."""
+def _prefix_rows_hash_order(df, t):
     from data_eng_taxi_ibis_dagster_spark.operators.dedup import (
         _prefix_stack,
     )
+    return _prefix_stack(df, threshold=t)
 
-    text = " ".join(f"t{i}" for i in range(37))  # 35 3-shingles
+
+def _prefix_rows_fused(df, t):
+    from data_eng_taxi_ibis_dagster_spark.operators.dedup import (
+        PREFIX_BAND,
+        _fused_band_prefix_stack,
+    )
+    return _fused_band_prefix_stack(df, threshold=t) \
+        .filter(F.col("band") == PREFIX_BAND)
+
+
+def _prefix_rows_df_order(df, t):
+    from data_eng_taxi_ibis_dagster_spark.operators.dedup import (
+        _prefix_stack_df_order,
+    )
+    return _prefix_stack_df_order(df, id_col="doc_id", text_col="text",
+                                  n=3, threshold=t)
+
+
+@pytest.mark.parametrize("build", [_prefix_rows_hash_order,
+                                   _prefix_rows_fused,
+                                   _prefix_rows_df_order])
+@pytest.mark.parametrize("size,t,want", [
+    (35, 0.6, 15),
+    # (1-0.8)*5 is 0.9999999999999998 in binary: without the nudge
+    # floor() gives p = 1
+    (5, 0.8, 2),
+])
+def test_prefix_length_floor_guard(spark, build, size, t, want):
+    """The prefix length p = floor((1-t)|A|)+1 of every prefix stack
+    must round UP under float noise, never down: the exact value of
+    (1-t)|A| is an integer in both cases, and binary arithmetic may
+    land just below it — p must still be floor(exact)+1 (a shorter
+    prefix breaks the recall theorem)."""
+    text = " ".join(f"t{i}" for i in range(size + 2))  # size 3-shingles
     df = from_rows(spark, [(1, text)], ["doc_id", "text"])
-    n_prefix = _prefix_stack(df, threshold=0.6).count()
-    assert n_prefix == 15, f"expected p=15 prefix rows, got {n_prefix}"
+    n_prefix = build(df, t).count()
+    assert n_prefix == want, f"expected p={want} prefix rows, got {n_prefix}"
 
 
 def test_allpairs_prefix_equals_bruteforce(borderline_corpus_and_truth):
@@ -631,11 +690,9 @@ def test_allpairs_prefix_equals_bruteforce(borderline_corpus_and_truth):
     )
 
     df, truth = borderline_corpus_and_truth
-    for order in ("df", "hash"):  # any total order satisfies the theorem
-        got = {(r.doc_a, r.doc_b) for r in
-               allpairs_near_dup_pairs(df, threshold=0.6,
-                                       order=order).collect()}
-        assert got == truth, f"order={order}"
+    got = {(r.doc_a, r.doc_b) for r in
+           allpairs_near_dup_pairs(df, threshold=0.6).collect()}
+    assert got == truth
 
 
 def test_fused_stack_equals_union_composition(borderline_corpus_and_truth):

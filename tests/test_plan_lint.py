@@ -173,7 +173,7 @@ ALL = sorted(all_specs())
 #: Bucket-id columns of the operators/order machinery — an
 #: unpartitioned window ordered by one of these runs over ≤ ``buckets``
 #: (default 256) rows by construction, at ANY input scale.
-_BOUNDED_OFFSET_PREFIXES = ("_gsi_bucket", "_nt_", "_cum_bucket",
+_BOUNDED_OFFSET_PREFIXES = ("_gsi_bucket",
                             # the range-bucketed scan behind every
                             # distributed_* / grouped_* function
                             # (operators/order.py): its within-bucket

@@ -175,36 +175,6 @@ def test_cbo_table_stats_via_analyze(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS nation_stats_test")
 
 
-def test_pairwise_jaccard_salt_stage(spark, sf_dir):
-    """The pairwise_jaccard operator's salt machinery (round 8: AQE's
-    input-sized coalescing packed a low-cardinality block key's whole
-    quadratic pair output into one task): with salts>1 the left side
-    must carry the doc_id-derived salt and reach the join through an
-    explicit REPARTITION_BY_NUM exchange on (_blk, _salt) — the
-    user-specified partition count is exactly what exempts the spread
-    from AQE coalescing. (The registry's exact pair verifiers moved to
-    winnowing-fingerprint blocking in round 9 — see the test below —
-    so the salted metadata-block path is pinned at the operator.)"""
-    import re
-
-    from data_eng_taxi_ibis_dagster_spark.operators.dedup import (
-        pairwise_jaccard,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    plan = _plan(pairwise_jaccard(d, block_col="source", threshold=0.5,
-                                  salts=16))
-    assert re.search(r"hashpartitioning\(_blk#\d+, _salt#\d+L?, \d+\), "
-                     r"REPARTITION_BY_NUM", plan), (
-        "pairwise_jaccard(salts=16) lost its explicit (_blk, _salt) "
-        "repartition — AQE will re-coalesce the quadratic-output stage "
-        "into one task:\n" + plan[:1500])
-    assert "pmod" in plan or "explode" in plan  # salt derivation survives
-
-    with pytest.raises(ValueError):
-        pairwise_jaccard(d, threshold=0.5, salts=16)  # salt w/o block
-
-
 @pytest.mark.parametrize("name", [
     "dedup_edit_distance",
     "dedup_ngram_jaccard",
