@@ -6,37 +6,42 @@ Neighbor Search", IEEE TPAMI 33(1)) splits each d-dim vector into
 ``k``-entry codebook, and stores only the ``m`` code bytes — a
 d·4-byte float row becomes ``m`` bytes (32× at d=64, m=8), which is
 what makes a 100 TB embedding corpus fit the memory/IO budget of a
-nearest-neighbor scan. Search reconstructs (or table-looks-up) the
-quantized vector and scores it against the query in full precision.
+nearest-neighbor scan.
 
-Spark-first shape — the codebook is a *DataFrame* ``(sub, code,
-cvec)``, never a corpus-sized artifact:
+Every search here is one pipeline; the codebook is a *DataFrame*
+``(sub, code, cvec)`` of m·k rows, never a corpus-sized artifact:
 
-* **train** — either per-subspace Lloyd (``train_codebooks_lloyd``:
-  E-step row-local against broadcast-literal centroids, M-step ONE
-  shuffle bounded by k·d cells — the same discipline as
-  ``similarity.lloyd_assignments``), or the lossless "identity"
-  codebook of distinct subvectors (``train_codebooks_exact``) used by
-  the strict audit: reconstruction is then bit-exact, so the whole
-  encode→reconstruct→score pipeline is provably equal to brute force.
-* **encode** — slice row-locally, broadcast-join the codebook per
-  subspace, ``min_by`` the nearest centroid: corpus×m compact rows
-  through a broadcast hash join, one ``groupBy(id)`` shuffle to
-  reassemble the code array. No all-pairs stage anywhere.
-* **search** — reconstruct row-locally from the broadcast codebook,
-  then exact sequential-fold cosine against the broadcast query set +
-  per-query window top-k (``WindowGroupLimit`` prunes to k per
-  partition). Mathematically identical to ADC with a full-precision
-  lookup table, but keeps the 64-dim dot product a single sequential
-  fold — bit-compatible with DuckDB ``list_dot_product`` so the audit
-  twin hash-matches.
+1. **train** — per-subspace Lloyd (``train_codebooks_lloyd``, the
+   grouped ``similarity._lloyd`` with one group per subspace), or the
+   lossless "identity" codebook of distinct subvectors
+   (``train_codebooks_exact``) used by the strict audits:
+   reconstruction is then bit-exact, so the whole pipeline provably
+   equals brute force.
+2. **encode** — slice row-locally, broadcast-join the codebook per
+   subspace, ``min_by`` the nearest centroid, one ``groupBy(id)``
+   shuffle to reassemble the code array (``pq_encode``).
+3. **candidate source** — the only step that differs between the
+   searches: the full corpus (``pq_topk``, ``pq_topk_adc``), the
+   probed lists of an in-memory inverted file (``ivfpq_topk``) or of a
+   persisted one read with partition pruning (``search_ivfpq_index``
+   over ``write_ivfpq_index``), or a matryoshka prefix shortlist
+   (``retrieval_stack``). The inverted file is built by one
+   ``_inverted_file`` and probed by one ``_probe_scores``.
+4. **score** — reconstruct row-locally from the broadcast codebook and
+   take the sequential-fold cosine against the full-precision query,
+   bit-compatible with DuckDB ``list_dot_product`` so the audit twins
+   hash-match. ``pq_topk_adc`` is the one separate scorer: a numpy
+   lookup-table kernel over the code batches.
+5. **top-k** — the shared per-query cut ``similarity._topk``.
+6. **refine** — optionally shortlist k·refine and re-rank against the
+   original vectors (``similarity.refine_topk``).
 
-At 100 TB: codebook is m·k rows (broadcast, KBs); encode shuffles
+At 100 TB: the codebook is m·k rows (broadcast, KBs); encode shuffles
 corpus×m rows of (id, sub, code) — 1/32nd the byte volume of the raw
-vectors; search scans the *codes* relation and reconstructs inside
-codegen, so the scan cost is the compressed size. Raising m or k
-changes only the broadcast and the literal sizes, never the shuffle
-key-space shape.
+vectors; search scans the *codes* relation and reconstructs inside the
+stage, so the scan cost is the compressed size. Raising m or k changes
+only the broadcast and the literal sizes, never the shuffle key-space
+shape.
 
 Parity note: reference repo has no vector ops (SURVEY.md §2a
 "explicitly absent"); this is EXT row E11 (BASELINE.json north star:
@@ -50,9 +55,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_eng_taxi_ibis_dagster_spark.operators.similarity import (
+    ID_COL,
+    VEC_COL,
+    _lloyd,
+    _topk,
     as_double,
     cosine,
     cosine_topk,
+    refine_topk,
     squared_l2,
 )
 
@@ -64,22 +74,20 @@ def subvector(vec: Column, *, sub: Column | int, m: int, dim: int) -> Column:
     return F.slice(vec, s * d + 1, d)
 
 
-def explode_subvectors(df: DataFrame, *, vec_col: str = "embedding",
-                       id_col: str = "vec_id", m: int = 8,
+def explode_subvectors(df: DataFrame, *, m: int = 8,
                        dim: int = 64) -> DataFrame:
-    """Long-form ``(_id, sub, subvec)`` relation: row-local slice +
-    posexplode — corpus×m compact rows, no shuffle."""
-    v = as_double(vec_col)
+    """Long-form ``(_id, sub, _v)`` relation of subvectors: row-local
+    slice + posexplode — corpus×m compact rows, no shuffle."""
+    v = as_double(VEC_COL)
     return df.select(
-        F.col(id_col).alias("_id"),
+        F.col(ID_COL).alias("_id"),
         F.posexplode(F.array(*[
             subvector(v, sub=s, m=m, dim=dim) for s in range(m)
-        ])).alias("sub", "subvec"),
+        ])).alias("sub", "_v"),
     )
 
 
-def train_codebooks_exact(df: DataFrame, *, vec_col: str = "embedding",
-                          id_col: str = "vec_id", m: int = 8,
+def train_codebooks_exact(df: DataFrame, *, m: int = 8,
                           dim: int = 64) -> DataFrame:
     """Lossless "identity" codebook: one centroid per DISTINCT
     subvector per subspace, codes assigned by lexicographic rank of
@@ -94,9 +102,8 @@ def train_codebooks_exact(df: DataFrame, *, vec_col: str = "embedding",
     from data_eng_taxi_ibis_dagster_spark.operators.order import (
         grouped_rank,
     )
-    longf = explode_subvectors(df, vec_col=vec_col, id_col=id_col,
-                               m=m, dim=dim)
-    distinct = longf.select("sub", F.col("subvec").alias("cvec")).distinct()
+    longf = explode_subvectors(df, m=m, dim=dim)
+    distinct = longf.select("sub", F.col("_v").alias("cvec")).distinct()
     # Per-sub lexicographic rank WITHOUT a per-sub window over the
     # whole distinct relation (for continuous floats that is
     # corpus-sized): grouped_rank range-buckets each subspace by the
@@ -114,95 +121,30 @@ def train_codebooks_exact(df: DataFrame, *, vec_col: str = "embedding",
         "sub", (F.col("_code1") - 1).cast("int").alias("code"), "cvec")
 
 
-def train_codebooks_lloyd(df: DataFrame, *, vec_col: str = "embedding",
-                          id_col: str = "vec_id", m: int = 8,
-                          dim: int = 64, k: int = 16,
-                          iters: int = 3) -> DataFrame:
-    """Per-subspace Lloyd, all m subspaces in ONE DataFrame loop.
-
-    E-step: row-local argmin against the full m·k centroid table
-    inlined as a literal array of structs, pre-filtered to the row's
-    subspace — whole-stage codegen, no join. M-step: one shuffle of
-    m·k·(d/m) = k·d cells (``davg`` exact-decimal means, partition-
-    order-independent), then a k·d-cell collect — the only driver
-    traffic, bounded regardless of corpus size. Seeds: the k
-    lowest-id rows' subvectors per subspace; empty clusters keep
-    their previous centroid. Deterministic end-to-end."""
-    from data_eng_taxi_ibis_dagster_spark.functions.exact import davg
-
-    d = dim // m
-    longf = explode_subvectors(df, vec_col=vec_col, id_col=id_col,
-                               m=m, dim=dim).localCheckpoint(eager=True)
-    seed_rows = (longf.filter(F.col("_id").isNotNull())
-                 .orderBy("_id").limit(k * m)  # k lowest ids × m subs
-                 .collect())
-    books: dict[int, list[list[float]]] = {s: [] for s in range(m)}
-    for r in sorted(seed_rows, key=lambda r: (r["sub"], r["_id"])):
-        if len(books[r["sub"]]) < k:
-            books[r["sub"]].append(list(r["subvec"]))
-    # corpora smaller than k seed fewer centroids — shrink k instead of
-    # indexing past the seed list in the M-step merge
-    k = min([k] + [len(b) for b in books.values()])
-    books = {s: b[:k] for s, b in books.items()}
-    if k == 0:
-        raise ValueError("empty training input for PQ codebooks")
-
-    spark = df.sparkSession
-    for _ in range(iters):
-        assigned = assign_codes(longf, books)
-        cells = (
-            assigned.select("sub", "code",
-                            F.posexplode("subvec").alias("pos", "x"))
-            .groupBy("sub", "code", "pos")
-            .agg(davg("x", 8).alias("mval"))
-            .collect()
-        )
-        new: dict[tuple[int, int], list[float]] = {}
-        for row in cells:
-            new.setdefault((row["sub"], row["code"]), [0.0] * d)[row["pos"]] \
-                = row["mval"]
-        books = {
-            s: [new.get((s, j), books[s][j]) for j in range(k)]
-            for s in range(m)
-        }
-
-    rows = [(s, j, books[s][j]) for s in range(m) for j in range(k)]
-    return spark.createDataFrame(rows, "sub int, code int, cvec array<double>")
+def train_codebooks_lloyd(df: DataFrame, *, m: int = 8, dim: int = 64,
+                          k: int = 16, iters: int = 3) -> DataFrame:
+    """Per-subspace Lloyd, all m subspaces in ONE DataFrame loop: the
+    grouped ``similarity._lloyd`` with the subspace as the group, over
+    the long-form subvectors materialized once. Returns the final
+    centroids as the ``(sub, code, cvec)`` codebook; a corpus with
+    fewer than k ids yields fewer codes per subspace."""
+    longf = explode_subvectors(df, m=m, dim=dim).localCheckpoint(eager=True)
+    _, books = _lloyd(longf, k, iters, groups=m, group="sub")
+    return df.sparkSession.createDataFrame(
+        [(s, j, c) for s, b in enumerate(books) for j, c in enumerate(b)],
+        "sub int, code int, cvec array<double>")
 
 
-def _centroid_literal(books: dict[int, list[list[float]]]) -> Column:
-    """m·k centroids as a literal array of (sub, code, cvec) structs."""
-    return F.array(*[
-        F.struct(F.lit(s).alias("sub"), F.lit(j).alias("code"),
-                 F.array(*[F.lit(float(x)) for x in c]).alias("cvec"))
-        for s, cents in books.items() for j, c in enumerate(cents)
-    ])
-
-
-def assign_codes(longf: DataFrame,
-                 books: dict[int, list[list[float]]]) -> DataFrame:
-    """Row-local E-step over the long-form relation: nearest centroid
-    of the row's own subspace, ties toward the lowest code. Pure
-    codegen — the centroid table is a plan literal, no join."""
-    cands = F.filter(_centroid_literal(books),
-                     lambda c: c["sub"] == F.col("sub"))
-    dists = F.transform(cands, lambda c: squared_l2(F.col("subvec"), c["cvec"]))
-    code = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    return longf.withColumn("code", code)
-
-
-def pq_encode(df: DataFrame, codebook: DataFrame, *,
-              vec_col: str = "embedding", id_col: str = "vec_id",
-              m: int = 8, dim: int = 64) -> DataFrame:
+def pq_encode(df: DataFrame, codebook: DataFrame, *, m: int = 8,
+              dim: int = 64) -> DataFrame:
     """Corpus → ``(_id, codes array<int>)``: slice row-locally,
     broadcast-join the codebook within each subspace, keep the nearest
     centroid per (row, sub) via ``min_by``, reassemble with one
     ``groupBy(_id)``. Shuffle volume: corpus×m rows of three ints."""
-    longf = explode_subvectors(df, vec_col=vec_col, id_col=id_col,
-                               m=m, dim=dim)
+    longf = explode_subvectors(df, m=m, dim=dim)
     scored = longf.join(F.broadcast(codebook), "sub").select(
         "_id", "sub", "code",
-        squared_l2(F.col("subvec"), F.col("cvec")).alias("_dist"),
+        squared_l2(F.col("_v"), F.col("cvec")).alias("_dist"),
     )
     per_sub = scored.groupBy("_id", "sub").agg(
         # nearest centroid; deterministic tie-break toward lowest code
@@ -234,112 +176,66 @@ def pq_reconstruct(codes: DataFrame, codebook: DataFrame) -> DataFrame:
     )
 
 
-def _topk_window():
-    """The declared result ordering of every PQ-family search: best
-    similarity first, lowest match id on ties. (Built lazily — Window
-    specs need an active session, and this module imports before one
-    exists under pytest collection.)"""
-    return Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("match_id").asc())
-
-
-def _refine_topk(shortlist: DataFrame, queries: DataFrame,
-                 corpus: DataFrame, k: int, *, id_col: str,
-                 vec_col: str) -> DataFrame:
-    """Shared exact-refinement stage (FAISS ``IndexRefineFlat``): the
-    |Q|·k·refine shortlist joins the broadcast query vectors and the
-    corpus scan on id — full vectors are read once, never shuffled
-    corpus-wide — then the declared window re-ranks to the final k.
-    One implementation so the three search backends cannot drift."""
-    full = corpus.select(F.col(id_col).alias("match_id"),
-                         as_double(vec_col).alias("cv"))
-    q = F.broadcast(queries.select(F.col(id_col).alias("query_id"),
-                                   as_double(vec_col).alias("qv")))
-    rescored = (
-        shortlist.select("query_id", "match_id")
-        .join(q, "query_id")  # recover the query vector (broadcast side)
-        .join(full, "match_id")
-        .select("query_id", "match_id",
-                cosine(F.col("qv"), F.col("cv")).alias("cosine_sim"))
-    )
-    return (
-        rescored.withColumn("rnk", F.row_number().over(_topk_window()))
-        .filter(F.col("rnk") <= k)
-    )
+def _score_recon(cands: DataFrame, codes: DataFrame, codebook: DataFrame,
+                 score: str = "cosine_sim") -> DataFrame:
+    """The score step: candidate pairs ``(query_id, qv, match_id)``
+    against the reconstruction of each match's ``(_id, codes)``, by
+    the sequential-fold cosine."""
+    recon = pq_reconstruct(codes, codebook).withColumnRenamed("_id", "match_id")
+    return cands.join(recon, "match_id").select(
+        "query_id", "match_id",
+        cosine(F.col("qv"), F.col("recon")).alias(score))
 
 
 def pq_topk(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
-            k: int = 10, *, id_col: str = "vec_id",
-            vec_col: str = "embedding", m: int = 8,
-            dim: int = 64, refine: int = 1) -> DataFrame:
-    """PQ search: encode the corpus against ``codebook``, reconstruct
-    row-locally, score full-precision queries against reconstructions
-    (sequential-fold cosine — DuckDB-bit-compatible), per-query window
-    top-k. Emits (query_id, match_id, cosine_sim, rnk).
-
-    ``refine > 1`` adds the standard refinement stage (the FAISS
-    ``IndexRefineFlat`` pattern): shortlist ``k·refine`` candidates by
-    quantized score, then re-rank ONLY the shortlist against the
-    original full-precision vectors. The expensive full-vector read
-    touches |queries|·k·refine rows instead of the corpus — the
-    compressed scan does the winnowing, the exact pass fixes the
-    ordering, and recall rises steeply with ``refine``.
+            k: int = 10, *, m: int = 8, dim: int = 64,
+            refine: int = 1) -> DataFrame:
+    """PQ search over the full corpus: encode, reconstruct row-locally,
+    and run the brute-force :func:`cosine_topk` with the
+    reconstructions as the corpus; ``refine > 1`` shortlists
+    ``k·refine`` by that quantized score and re-ranks the shortlist
+    against the original vectors (:func:`refine_topk`) — the
+    compressed scan winnows, the exact pass fixes the ordering, and
+    recall rises steeply with ``refine``. Emits (query_id, match_id,
+    cosine_sim, rnk).
 
     With a Lloyd codebook this is classic approximate PQ search (the
     scan reads 1/32nd the bytes); with the exact codebook the
     reconstruction is lossless and the result provably equals brute
     force — the audit configuration."""
-    codes = pq_encode(corpus, codebook, vec_col=vec_col, id_col=id_col,
-                      m=m, dim=dim)
-    recon = pq_reconstruct(codes, codebook)
-    q = F.broadcast(queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")))
-    scored = (
-        q.crossJoin(recon.select(F.col("_id").alias("match_id"),
-                                 F.col("recon")))
-        .filter(F.col("query_id") != F.col("match_id"))
-        .select("query_id", "match_id",
-                cosine(F.col("qv"), F.col("recon")).alias("cosine_sim"))
-    )
-    w = _topk_window()
-    shortlist = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k * refine)
-    )
-    if refine <= 1:
-        return shortlist
-    return _refine_topk(shortlist, queries, corpus, k,
-                        id_col=id_col, vec_col=vec_col)
+    recon = pq_reconstruct(pq_encode(corpus, codebook, m=m, dim=dim), codebook)
+    short = cosine_topk(
+        queries, recon.select(F.col("_id").alias(ID_COL),
+                              F.col("recon").alias(VEC_COL)), k * refine)
+    return refine_topk(short, queries, corpus, k, refine)
 
 
 # ---------------------------------------------------------------------------
 # IVF-PQ: coarse inverted lists over PQ codes (FAISS IVFPQ shape)
 # ---------------------------------------------------------------------------
 
-def coarse_centroids(corpus: DataFrame, *, n_centroids: int = 8,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
-    """Deterministic coarse quantizer: the n lowest-id corpus vectors
-    (a real deployment trains k-means offline — ``lloyd_assignments``
-    — and broadcasts the result; the join shape downstream is
-    identical either way)."""
+def coarse_centroids(corpus: DataFrame, *, n_centroids: int = 8) -> DataFrame:
+    """Deterministic coarse quantizer ``(centroid_id, cent)``: the n
+    lowest-id corpus vectors (a real deployment trains k-means offline
+    — ``lloyd_assignments`` — and broadcasts the result; the join shape
+    downstream is identical either way)."""
     return F.broadcast(
-        corpus.orderBy(id_col).limit(n_centroids)
-        .select(F.col(id_col).alias("centroid_id"),
-                as_double(vec_col).alias("cent")))
+        corpus.orderBy(ID_COL).limit(n_centroids)
+        .select(F.col(ID_COL).alias("centroid_id"),
+                as_double(VEC_COL).alias("cent")))
 
 
-def _assign_lists(df: DataFrame, cents: DataFrame, idname: str, *,
-                  id_col: str, vec_col: str, topn: int) -> DataFrame:
-    """Nearest-``topn`` coarse lists per row: row-relative window over
-    the broadcast centroid cross product (groups are n_centroids-sized
-    — bounded by construction)."""
+def assign_lists(df: DataFrame, cents: DataFrame, idname: str, vecname: str,
+                 topn: int) -> DataFrame:
+    """Nearest-``topn`` coarse lists per row, ``(idname, vecname,
+    centroid_id)`` with the row's vector as ``vecname``: row-relative
+    window over the broadcast centroid cross product (groups are
+    n_centroids-sized — bounded by construction)."""
     scored = (
-        df.select(F.col(id_col).alias(idname),
-                  as_double(vec_col).alias("_v"))
+        df.select(F.col(ID_COL).alias(idname), as_double(VEC_COL).alias(vecname))
         .crossJoin(cents)
-        .select(idname, "_v", "centroid_id",
-                cosine(F.col("_v"), F.col("cent")).alias("_csim"))
+        .select(idname, vecname, "centroid_id",
+                cosine(F.col(vecname), F.col("cent")).alias("_csim"))
     )
     w = Window.partitionBy(idname).orderBy(
         F.col("_csim").desc(), F.col("centroid_id").asc())
@@ -350,22 +246,39 @@ def _assign_lists(df: DataFrame, cents: DataFrame, idname: str, *,
     )
 
 
+def _inverted_file(corpus: DataFrame, codebook: DataFrame, cents: DataFrame,
+                   m: int, dim: int) -> DataFrame:
+    """The inverted file ``(match_id, centroid_id, codes)``: every
+    corpus vector in its one nearest coarse list, with its PQ codes."""
+    lists = assign_lists(corpus, cents, "match_id", "_v", 1) \
+        .select("match_id", "centroid_id")
+    codes = pq_encode(corpus, codebook, m=m, dim=dim) \
+        .withColumnRenamed("_id", "match_id")
+    return lists.join(codes, "match_id")
+
+
+def _probe_scores(probes: DataFrame, inv: DataFrame,
+                  codebook: DataFrame) -> DataFrame:
+    """The IVF probe scorer: probes ``(query_id, qv, centroid_id)`` ⋈
+    inverted-file rows on ``centroid_id`` — a plain equi-join, so a
+    list is touched only when probed — minus the self match, scored
+    against the reconstructions. Each corpus vector lives in exactly
+    one list, so no candidate dedup is needed."""
+    cands = (probes.join(inv.select("match_id", "centroid_id"), "centroid_id")
+             .filter(F.col("query_id") != F.col("match_id")))
+    return _score_recon(
+        cands, inv.select(F.col("match_id").alias("_id"), "codes"), codebook)
+
+
 def ivfpq_topk(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
                *, n_centroids: int = 8, nprobe: int = 2, k: int = 10,
-               id_col: str = "vec_id", vec_col: str = "embedding",
                m: int = 8, dim: int = 64, refine: int = 1) -> DataFrame:
     """IVF-PQ search — the two-axis scale play a 100 TB corpus needs
     BOTH of: the coarse inverted file prunes which fraction of the
     corpus is read (nprobe/n_centroids of the lists), and PQ prunes
     how many bytes each read row costs (m code bytes vs d·4 floats).
-
-    Plan shape: corpus → one coarse list each (bounded window over the
-    broadcast centroid product) + PQ codes; the probe join is a plain
-    equi-join on ``centroid_id``, so each corpus code row is touched
-    only when its list is probed. Candidates are scored against
-    row-local reconstructions, then optionally refined against the
-    original vectors (``refine``, as in :func:`pq_topk`). Each corpus
-    vector lives in exactly one list, so no candidate dedup is needed.
+    The candidate source is the in-memory inverted file's probed
+    lists; scoring, top-k and ``refine`` are as in :func:`pq_topk`.
 
     Audit configuration: ``nprobe = n_centroids`` + the identity
     codebook makes the candidate set the full corpus and the
@@ -374,17 +287,9 @@ def ivfpq_topk(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
     assignment, probe join, encode/decode, re-rank).
 
     Emits (query_id, match_id, cosine_sim, rnk)."""
-    cents = coarse_centroids(corpus, n_centroids=n_centroids,
-                             id_col=id_col, vec_col=vec_col)
-    lists = _assign_lists(corpus, cents, "match_id",
-                          id_col=id_col, vec_col=vec_col, topn=1) \
-        .select("match_id", "centroid_id")
-    codes = pq_encode(corpus, codebook, vec_col=vec_col, id_col=id_col,
-                      m=m, dim=dim).withColumnRenamed("_id", "match_id")
-    inv = lists.join(codes, "match_id")  # the inverted file
-    probes = _assign_lists(queries, cents, "query_id",
-                           id_col=id_col, vec_col=vec_col, topn=nprobe) \
-        .withColumnRenamed("_v", "qv")
+    cents = coarse_centroids(corpus, n_centroids=n_centroids)
+    inv = _inverted_file(corpus, codebook, cents, m, dim)
+    probes = assign_lists(queries, cents, "query_id", "qv", nprobe)
     # IVF pruning applies to the DECODE stage too: restrict the
     # inverted file to probed lists (bounded ≤ n_centroids-row
     # broadcast semi-join) BEFORE reconstructing, so unprobed rows
@@ -392,30 +297,12 @@ def ivfpq_topk(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
     inv_probed = inv.join(
         F.broadcast(probes.select("centroid_id").distinct()),
         "centroid_id", "left_semi")
-    recon = pq_reconstruct(
-        inv_probed.select(F.col("match_id").alias("_id"), "codes"),
-        codebook).withColumnRenamed("_id", "match_id")
-    scored = (
-        probes.join(inv_probed.select("match_id", "centroid_id"),
-                    "centroid_id")
-        .filter(F.col("query_id") != F.col("match_id"))
-        .join(recon, "match_id")
-        .select("query_id", "match_id",
-                cosine(F.col("qv"), F.col("recon")).alias("cosine_sim"))
-    )
-    shortlist = (
-        scored.withColumn("rnk", F.row_number().over(_topk_window()))
-        .filter(F.col("rnk") <= k * refine)
-    )
-    if refine <= 1:
-        return shortlist
-    return _refine_topk(shortlist, queries, corpus, k,
-                        id_col=id_col, vec_col=vec_col)
+    return refine_topk(_topk(_probe_scores(probes, inv_probed, codebook),
+                             k * refine), queries, corpus, k, refine)
 
 
 def write_ivfpq_index(corpus: DataFrame, codebook: DataFrame, path: str,
-                      *, n_centroids: int = 8, id_col: str = "vec_id",
-                      vec_col: str = "embedding", m: int = 8,
+                      *, n_centroids: int = 8, m: int = 8,
                       dim: int = 64) -> None:
     """Materialize the inverted file as ``partitionBy(centroid_id)``
     parquet — the storage layout that makes IVF real on a cluster:
@@ -424,14 +311,8 @@ def write_ivfpq_index(corpus: DataFrame, codebook: DataFrame, path: str,
     nprobe/n_centroids of the code bytes, which are themselves 32×
     smaller than the raw vectors. The codebook and coarse centroids
     persist as small side tables under the same root."""
-    cents = coarse_centroids(corpus, n_centroids=n_centroids,
-                             id_col=id_col, vec_col=vec_col)
-    lists = _assign_lists(corpus, cents, "match_id",
-                          id_col=id_col, vec_col=vec_col, topn=1) \
-        .select("match_id", "centroid_id")
-    codes = pq_encode(corpus, codebook, vec_col=vec_col, id_col=id_col,
-                      m=m, dim=dim).withColumnRenamed("_id", "match_id")
-    (lists.join(codes, "match_id")
+    cents = coarse_centroids(corpus, n_centroids=n_centroids)
+    (_inverted_file(corpus, codebook, cents, m, dim)
      .write.mode("overwrite").partitionBy("centroid_id")
      .parquet(f"{path}/lists"))
     codebook.write.mode("overwrite").parquet(f"{path}/codebook")
@@ -439,42 +320,23 @@ def write_ivfpq_index(corpus: DataFrame, codebook: DataFrame, path: str,
 
 
 def search_ivfpq_index(spark: SparkSession, path: str, queries: DataFrame,
-                       *, nprobe: int = 2, k: int = 10,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       probe_ids: list[int] | None = None) -> DataFrame:
+                       *, nprobe: int = 2, k: int = 10) -> DataFrame:
     """Search a materialized IVF-PQ index. The probed list ids are
     resolved first (bounded collect: |queries|·nprobe ints) and pushed
     into the scan as a ``centroid_id IN (...)`` partition filter, so
     unprobed partitions are never listed, opened, or read."""
     cents = F.broadcast(spark.read.parquet(f"{path}/centroids"))
-    codebook = spark.read.parquet(f"{path}/codebook")
-    # materialize once: the probe relation feeds both the probe_ids
+    # materialize once: the probe relation feeds both the probe-id
     # collect and the search join — without truncation the
     # query-scan + centroid window would execute twice
-    probes = _assign_lists(queries, cents, "query_id",
-                           id_col=id_col, vec_col=vec_col, topn=nprobe) \
-        .withColumnRenamed("_v", "qv").localCheckpoint(eager=True)
-    if probe_ids is None:
-        probe_ids = [r["centroid_id"] for r in
-                     probes.select("centroid_id").distinct().collect()]
+    probes = assign_lists(queries, cents, "query_id", "qv", nprobe) \
+        .localCheckpoint(eager=True)
+    probe_ids = [r["centroid_id"] for r in
+                 probes.select("centroid_id").distinct().collect()]
     inv = (spark.read.parquet(f"{path}/lists")
            .filter(F.col("centroid_id").isin(probe_ids)))
-    recon = pq_reconstruct(
-        inv.select(F.col("match_id").alias("_id"), "codes"), codebook) \
-        .withColumnRenamed("_id", "match_id")
-    scored = (
-        probes.join(inv.select("match_id", "centroid_id"), "centroid_id")
-        .filter(F.col("query_id") != F.col("match_id"))
-        .join(recon, "match_id")
-        .select("query_id", "match_id",
-                cosine(F.col("qv"), F.col("recon")).alias("cosine_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("match_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+    return _topk(_probe_scores(probes, inv,
+                               spark.read.parquet(f"{path}/codebook")), k)
 
 
 # ---------------------------------------------------------------------------
@@ -482,8 +344,7 @@ def search_ivfpq_index(spark: SparkSession, path: str, queries: DataFrame,
 # ---------------------------------------------------------------------------
 
 def pq_topk_adc(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
-                k: int = 10, *, id_col: str = "vec_id",
-                vec_col: str = "embedding", m: int = 8, dim: int = 64,
+                k: int = 10, *, m: int = 8, dim: int = 64,
                 refine: int = 1) -> DataFrame:
     """Asymmetric-distance PQ search with the classic lookup-table
     kernel (Jégou et al. 2011 §IV-A): per query, an m×k table of
@@ -522,16 +383,15 @@ def pq_topk_adc(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
     for r in book_rows:
         cent[r["sub"], r["code"]] = r["cvec"]
     cent_norm2 = (cent * cent).sum(axis=2)          # m×k
-    q_rows = (queries.select(F.col(id_col).alias("qid"),
-                             as_double(vec_col).alias("qv")).collect())
+    q_rows = (queries.select(F.col(ID_COL).alias("qid"),
+                             as_double(VEC_COL).alias("qv")).collect())
     qids = np.array([r["qid"] for r in q_rows])
     Q = np.stack([np.asarray(r["qv"]) for r in q_rows])      # |Q|×dim
     qnorm = np.sqrt((Q * Q).sum(axis=1))                     # |Q|
     # LUT[qi, sub, code] = <q_sub, centroid(sub, code)>
     lut = np.einsum("qsd,skd->qsk", Q.reshape(len(qids), m, d), cent)
 
-    codes = pq_encode(corpus, codebook, vec_col=vec_col, id_col=id_col,
-                      m=m, dim=dim)
+    codes = pq_encode(corpus, codebook, m=m, dim=dim)
     shortn = k * refine
     subs = np.arange(m)
 
@@ -579,12 +439,7 @@ def pq_topk_adc(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
 
     local = codes.mapInPandas(
         _score, schema="query_id long, match_id long, cosine_sim double")
-    shortlist = (local.withColumn("rnk", F.row_number().over(_topk_window()))
-                 .filter(F.col("rnk") <= shortn))
-    if refine <= 1:
-        return shortlist.filter(F.col("rnk") <= k)
-    return _refine_topk(shortlist, queries, corpus, k,
-                        id_col=id_col, vec_col=vec_col)
+    return refine_topk(_topk(local, shortn), queries, corpus, k, refine)
 
 
 # ---------------------------------------------------------------------------
@@ -592,8 +447,7 @@ def pq_topk_adc(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
 # ---------------------------------------------------------------------------
 
 def retrieval_stack(queries: DataFrame, corpus: DataFrame,
-                    codebook: DataFrame, *, id_col: str = "vec_id",
-                    vec_col: str = "embedding", m: int = 8, dim: int = 64,
+                    codebook: DataFrame, *, m: int = 8, dim: int = 64,
                     shortlist: int = 50, pq_keep: int = 15, k: int = 5,
                     facets: int = 4) -> DataFrame:
     """The realistic serving pipeline, composed end-to-end: each stage
@@ -627,42 +481,28 @@ def retrieval_stack(queries: DataFrame, corpus: DataFrame,
     (maxsim DESC, match_id ASC) per query."""
     prefix = dim // 4
     fw = dim // facets
-    q = F.broadcast(queries.select(F.col(id_col).alias("query_id"),
-                                   as_double(vec_col).alias("qv")))
-    c = corpus.select(F.col(id_col).alias("match_id"),
-                      as_double(vec_col).alias("cv"))
+    q = F.broadcast(queries.select(F.col(ID_COL).alias("query_id"),
+                                   as_double(VEC_COL).alias("qv")))
+    c = corpus.select(F.col(ID_COL).alias("match_id"),
+                      as_double(VEC_COL).alias("cv"))
 
     # stage 1: quarter-width shortlist — the shared brute-force top-k
-    # operator on prefix-sliced vectors (same broadcast × scan shape,
-    # same (sim DESC, id ASC) tie-break, WindowGroupLimit thinning);
-    # tests/test_pq.py asserts the stack's shortlist equals exactly
-    # this call, so share the code instead of mirroring it.
+    # operator on prefix-sliced vectors (sliced before cosine_topk's
+    # double cast, which is exact per element); tests/test_pq.py
+    # asserts the stack's shortlist equals exactly this call.
     short = cosine_topk(
-        queries.select(id_col, F.slice(as_double(vec_col), 1, prefix)
-                       .alias(vec_col)),
-        corpus.select(id_col, F.slice(as_double(vec_col), 1, prefix)
-                      .alias(vec_col)),
-        k=shortlist, id_col=id_col, vec_col=vec_col,
+        queries.select(ID_COL, F.slice(VEC_COL, 1, prefix).alias(VEC_COL)),
+        corpus.select(ID_COL, F.slice(VEC_COL, 1, prefix).alias(VEC_COL)),
+        k=shortlist,
     ).select("query_id", "match_id")
 
     # stage 2: PQ re-rank of the candidate union only
-    cand = short.select(F.col("match_id").alias(id_col)).distinct()
-    sub = corpus.join(F.broadcast(cand), id_col, "left_semi")
-    recon = pq_reconstruct(
-        pq_encode(sub, codebook, vec_col=vec_col, id_col=id_col,
-                  m=m, dim=dim),
-        codebook).withColumnRenamed("_id", "match_id")
-    pq_scored = (
-        short.join(q, "query_id")
-        .join(recon, "match_id")
-        .select("query_id", "match_id",
-                cosine(F.col("qv"), F.col("recon")).alias("sim_pq"))
-    )
-    w_pq = Window.partitionBy("query_id").orderBy(
-        F.col("sim_pq").desc(), F.col("match_id").asc())
-    keep = (pq_scored.withColumn("prnk", F.row_number().over(w_pq))
-            .filter(F.col("prnk") <= pq_keep)
-            .select("query_id", "match_id"))
+    cand = short.select(F.col("match_id").alias(ID_COL)).distinct()
+    sub = corpus.join(F.broadcast(cand), ID_COL, "left_semi")
+    scored_pq = _score_recon(short.join(q, "query_id"),
+                             pq_encode(sub, codebook, m=m, dim=dim),
+                             codebook, "sim_pq")
+    keep = _topk(scored_pq, pq_keep, "sim_pq").select("query_id", "match_id")
 
     # stage 3: MaxSim late interaction over the survivors. `keep`
     # appears ONCE (broadcast against the corpus relation — the join
@@ -696,10 +536,4 @@ def retrieval_stack(queries: DataFrame, corpus: DataFrame,
         .agg(*facet)
         .select("query_id", "match_id", maxsim.alias("maxsim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("maxsim").desc(), F.col("match_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .orderBy("query_id", "rnk")
-    )
+    return _topk(scored, k, "maxsim").orderBy("query_id", "rnk")

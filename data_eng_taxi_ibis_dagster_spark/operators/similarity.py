@@ -1,5 +1,9 @@
 """Embedding similarity search (EXT E11): exact cosine top-k as the
-verifiable baseline, sign-random-projection LSH as the scale path.
+verifiable baseline, sign-random-projection LSH as the scale path, and
+the steps every vector search in this package shares — the per-query
+top-k cut (:func:`_topk`), the exact shortlist re-rank
+(:func:`refine_topk`) and one grouped Lloyd loop (:func:`_lloyd`,
+behind k-means, SemDeDup and the PQ codebooks of ``pq.py``).
 
 Vector math is expressed with ``zip_with`` / ``aggregate`` higher-order
 functions — JVM-evaluated, no UDF, and the sequential left-fold matches
@@ -20,6 +24,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from data_eng_taxi_ibis_dagster_spark.functions.exact import davg, dsum
+
+#: The ``embeddings`` input contract of every vector operator: an id
+#: column and an array-of-floats column.
+ID_COL, VEC_COL = "vec_id", "embedding"
 
 
 def as_double(vec: str | Column) -> Column:
@@ -46,8 +56,8 @@ def cosine(a: Column, b: Column) -> Column:
     underflow to 0 — IEEE-identical across engines) yields 0.0 instead
     of 0/0.  Without the guard, one poison row in a trillion-row corpus
     kills the whole job under ANSI mode (DIVIDE_BY_ZERO) and yields
-    engine-dependent NaN ordering otherwise — caught by the round-12
-    adversarial fixture sweep (zero vector planted in embeddings).
+    engine-dependent NaN ordering otherwise; a zero vector planted in
+    the embeddings fixture must score 0.0 in both engines.
 
     ``try_divide`` + ``coalesce`` rather than a CASE guard: the CASE
     form referenced the denominator twice, and the norm folds are
@@ -80,26 +90,50 @@ def cosine_with_norms(va: Column, vb: Column, na: Column, nb: Column) -> Column:
     return F.coalesce(F.try_divide(dot(va, vb), na * nb), F.lit(0.0))
 
 
+def _topk(scored: DataFrame, k: int, score: str = "cosine_sim") -> DataFrame:
+    """The per-query cut of every search: best ``score`` first, lowest
+    ``match_id`` on ties, ``rnk`` <= k (WindowGroupLimit keeps only k
+    rows per query per partition)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("match_id").asc())
+    return scored.withColumn("rnk", F.row_number().over(w)) \
+        .filter(F.col("rnk") <= k)
+
+
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 10, *,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+                id_col: str = ID_COL, vec_col: str = VEC_COL) -> DataFrame:
     """Exact brute-force cosine top-k: broadcast queries × corpus scan,
-    per-query window top-k (WindowGroupLimit keeps only k rows per
-    query per partition). Emits (query_id, match_id, cosine_sim, rnk)."""
+    per-query top-k. Emits (query_id, match_id, cosine_sim, rnk)."""
     q = F.broadcast(queries.select(
         F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")))
     c = corpus.select(F.col(id_col).alias("match_id"), as_double(vec_col).alias("cv"))
-    scored = (
+    return _topk(
         q.crossJoin(c)
         .filter(F.col("query_id") != F.col("match_id"))
         .select("query_id", "match_id",
-                cosine(F.col("qv"), F.col("cv")).alias("cosine_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("match_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+                cosine(F.col("qv"), F.col("cv")).alias("cosine_sim")), k)
+
+
+def refine_topk(shortlist: DataFrame, queries: DataFrame, corpus: DataFrame,
+                k: int, refine: int) -> DataFrame:
+    """Exact refinement (FAISS ``IndexRefineFlat``) of a ``shortlist``
+    that holds the best k·refine candidates per query by a cheaper
+    score. With ``refine > 1`` the shortlist joins the broadcast query
+    vectors and the corpus on id — full vectors are read for the
+    shortlist only, never shuffled corpus-wide — and the exact cosine
+    re-ranks it to the final k; otherwise it is already the answer."""
+    if refine <= 1:
+        return shortlist
+    q = F.broadcast(queries.select(F.col(ID_COL).alias("query_id"),
+                                   as_double(VEC_COL).alias("qv")))
+    full = corpus.select(F.col(ID_COL).alias("match_id"),
+                         as_double(VEC_COL).alias("cv"))
+    return _topk(
+        shortlist.select("query_id", "match_id")
+        .join(q, "query_id")
+        .join(full, "match_id")
+        .select("query_id", "match_id",
+                cosine(F.col("qv"), F.col("cv")).alias("cosine_sim")), k)
 
 
 # ---------------------------------------------------------------------------
@@ -119,16 +153,16 @@ _PLANE_CACHE: dict[tuple[int, int], list[float]] = {}
 
 
 def _plane_array(plane: int, dim: int) -> Column:
-    """The full hyperplane as ONE array literal. The components are
-    constants (xxhash64 of two literals), but leaving them as 64
-    expression subtrees per plane made Catalyst ANALYSIS the dominant
-    cost of every SRP plan — ~25 s/side at 8 tables × 4 planes, paid
-    again by every test that re-builds the query (round-9 suite
-    profile). Evaluating the family once per process through a 1-row
-    job and inlining ``F.lit(values)`` collapses each plane to a
-    single Literal node — IDENTICAL values (same xxhash64, same
-    scaling, evaluated by the same engine), so signatures, buckets,
-    and results are bit-for-bit unchanged; only analysis cost moves.
+    """The full hyperplane as an array of literal doubles. The
+    components are constants (xxhash64 of two literals), but as 64
+    hash-and-scale expression subtrees per plane, Catalyst analysis
+    dominates the cost of building an SRP plan: it grows with
+    tables × planes × dim and is paid again by every rebuild of the
+    query. Evaluating the family once per process through a 1-row
+    job and inlining ``F.lit(values)`` leaves one literal per
+    component — IDENTICAL values (same xxhash64, same scaling,
+    evaluated by the same engine), so signatures, buckets, and
+    results are bit-for-bit unchanged; only analysis cost moves.
     Falls back to the expression form when no session is active."""
     key = (plane, dim)
     if key not in _PLANE_CACHE:
@@ -152,22 +186,13 @@ def srp_signature(vec: Column, *, num_planes: int, dim: int,
     deterministic plane family."""
     sig = F.lit(0).cast("long")
     for p in range(num_planes):
-        plane = table * num_planes + p
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                _plane_array(plane, dim),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        proj = dot(vec, _plane_array(table * num_planes + p, dim))
         sig = sig + F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(0)
     return sig
 
 
 def ann_topk_srp(queries: DataFrame, corpus: DataFrame, k: int = 10, *,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
+                 id_col: str = ID_COL, vec_col: str = VEC_COL,
                  num_planes: int = 4, dim: int = 64,
                  num_tables: int = 8) -> DataFrame:
     """Approximate cosine top-k: ``num_tables`` independent SRP hash
@@ -209,13 +234,10 @@ def ann_topk_srp(queries: DataFrame, corpus: DataFrame, k: int = 10, *,
         .select("query_id", "match_id", "_v_query_id", "_v_match_id")
         .dropDuplicates(["query_id", "match_id"])
     )
-    scored = cands.select(
+    return _topk(cands.select(
         "query_id", "match_id",
         cosine(F.col("_v_query_id"), F.col("_v_match_id")).alias("cosine_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("match_id").asc())
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    ), k)
 
 
 #: Target expected rows per centroid block when ``n_blocks`` is
@@ -225,8 +247,8 @@ COSINE_BLOCK_TARGET_ROWS = 256
 
 
 def cosine_threshold_pairs_blocked(df: DataFrame, threshold: float, *,
-                                   id_col: str = "vec_id",
-                                   vec_col: str = "embedding",
+                                   id_col: str = ID_COL,
+                                   vec_col: str = VEC_COL,
                                    n_blocks: int | None = None) -> DataFrame:
     """EXACT cosine threshold self-join (all pairs with cosine ≥
     ``threshold``) without broadcasting or cross-joining the corpus.
@@ -251,12 +273,12 @@ def cosine_threshold_pairs_blocked(df: DataFrame, threshold: float, *,
     still an equi-join, not a broadcast. Emits (vec_a, vec_b,
     cosine_sim) with ``vec_a < vec_b``.
 
-    The K-SCALING CONTRACT (round-9 verdict #3): raising ``n_blocks``
-    IS this operator's salt — expected block size is n/n_blocks, so k
-    must grow WITH the corpus or the blocked join quietly degenerates
-    to O(n²). When ``n_blocks`` is None (the default, and what the
-    registered query uses) it is derived at plan build from the corpus
-    count: ``max(8, ceil(n / COSINE_BLOCK_TARGET_ROWS))`` — one
+    The K-SCALING CONTRACT: raising ``n_blocks`` IS this operator's
+    salt — expected block size is n/n_blocks, so k must grow WITH the
+    corpus or the blocked join quietly degenerates to O(n²). When
+    ``n_blocks`` is None (the default, and what the registered query
+    uses) it is derived at plan build from the corpus count:
+    ``max(8, ceil(n / COSINE_BLOCK_TARGET_ROWS))`` — one
     O(1)-result count() action at build (the Lloyd-training precedent:
     quantizer sizing is the offline half), after which expected
     per-block pair work is a CONSTANT ~TARGET²/2 regardless of corpus
@@ -349,89 +371,101 @@ def squared_l2(a: Column, b: Column) -> Column:
     )
 
 
-def lloyd_assignments(df: DataFrame, *, vec_col: str = "embedding",
-                      id_col: str = "vec_id", k: int = 4,
-                      iters: int = 3) -> DataFrame:
-    """The Lloyd E/M loop, returning the post-final-E-step assignment
-    relation ``(_id, _v, cluster, _d2)`` — shared by the k-means summary
-    query and SemDeDup's cluster-blocked pruning stage (the two
-    consumers must agree on assignments, so they share the loop).
+def _lloyd(points: DataFrame, k: int, iters: int, *, groups: int = 1,
+           group: str | None = None) -> tuple[DataFrame, list]:
+    """The one Lloyd E/M loop: ``iters`` rounds over the checkpointed
+    ``points`` relation ``(_id, [group,] _v)``, clustering each of its
+    ``groups`` groups independently — the PQ subspaces (``group`` is
+    the subspace column), or the whole vector as one group.
 
-    Spark-first shape per iteration:
+    * **Seeds** — per group, the vectors of the k lowest non-null ids
+      (what the strict SQL audits compute: DuckDB sorts NULLs last);
+      k shrinks to the number of seeds, and no seed is a ValueError.
+    * **E-step** — row-local argmin against the group's centroids,
+      inlined into the plan as one literal (no join, no shuffle); ties
+      go to the lowest cluster index.
+    * **M-step** — ``posexplode`` → exact decimal mean per (group,
+      cluster, dim) cell: ONE shuffle of at most groups·k·d cells
+      whatever the corpus size, then a collect of those cells (the
+      only driver traffic). An empty cluster keeps its centroid.
 
-    * **E-step** — assignment is a row-local ``argmin`` over a
-      broadcast-literal centroid array (k·d doubles inlined into the
-      plan; no join, no shuffle, whole-stage codegen).
-    * **M-step** — new centroids via ``posexplode`` → exact decimal
-      mean per (cluster, dim) cell: ONE shuffle bounded by k·d cells
-      regardless of corpus size, then a k·d-row collect to the driver
-      (the only driver traffic; centroids are intrinsically tiny).
-
-    Determinism: seeds are the k lowest-id vectors, argmin breaks ties
-    toward the lowest cluster index, and the decimal M-step is
-    partition-order-independent — so repeated runs produce identical
-    assignments (asserted in tests) even though float distances keep
-    the op out of the strict SQL-oracle class.
-
-    At 100 TB: per-iteration cost is one scan + one k·d-cell shuffle;
-    the scan dominates, so cache the assigned frame (or checkpoint
-    every few iterations) and raise k·d freely — the M-step keyspace
-    is skew-proof by construction.
-    """
-    from data_eng_taxi_ibis_dagster_spark.functions.exact import davg
-
-    # materialize the normalized vector relation ONCE: the dim/seed
-    # probes and every iteration's E-step + M-step action would
-    # otherwise each re-run the parquet scan + double-cast (iters + 2
-    # corpus scans instead of 1) — the "cache the assigned frame"
-    # advice below, applied to the loop-invariant input
-    vecs = df.select(F.col(id_col).alias("_id"),
-                     as_double(vec_col).alias("_v")).localCheckpoint(eager=True)
-    dim = len(vecs.select("_v").first()[0])
-    centroids = [r["_v"] for r in vecs.orderBy("_id").limit(k).collect()]
+    The decimal M-step is partition-order-independent, so repeated
+    runs produce identical centroids and assignments. Returns the last
+    E-step's ``(_id, [group,] _v, cluster, _d2)`` relation (``_d2`` is
+    the squared distance to the assigned centroid) and the centroids
+    after the last M-step, ``books[g][cluster]``."""
+    key = (lambda r: r[group]) if group else (lambda r: 0)
+    gcols = [group] if group else []
+    seeds = (points.filter(F.col("_id").isNotNull()).orderBy("_id")
+             .limit(k * groups).collect())  # k lowest ids × groups
+    books: list[list[list[float]]] = [[] for _ in range(groups)]
+    for r in sorted(seeds, key=lambda r: (key(r), r["_id"])):
+        if len(books[key(r)]) < k:
+            books[key(r)].append(list(r["_v"]))
+    k = min(len(b) for b in books)
+    if k == 0:
+        raise ValueError("Lloyd input has no row with a non-null id")
+    books = [b[:k] for b in books]
+    d = len(books[0][0])
 
     assigned = None
     for _ in range(iters):
-        dists = F.array(*[
-            squared_l2(F.col("_v"),
-                       F.array(*[F.lit(float(x)) for x in c]))
-            for c in centroids
-        ])
-        cluster = (F.array_position(dists, F.array_min(dists)) - 1
-                   ).cast("int")
-        assigned = vecs.select(
-            "_id", "_v", cluster.alias("cluster"),
-            F.array_min(dists).alias("_d2"),  # dist to assigned centroid
-        )
+        per_group = [F.array(*[F.array(*[F.lit(float(x)) for x in c])
+                               for c in b]) for b in books]
+        cands = F.array(*per_group)[F.col(group)] if group else per_group[0]
+        # the distances get their own projection, read by the argmin and
+        # _d2: higher-order functions escape subexpression elimination,
+        # so inlining them would copy the centroid literal (and the
+        # fold) into the plan once per reference
+        dists = points.withColumn("_dists", F.transform(
+            cands, lambda c: squared_l2(F.col("_v"), c)))
+        assigned = dists.select(
+            "_id", *gcols, "_v",
+            (F.array_position("_dists", F.array_min("_dists")) - 1)
+            .cast("int").alias("cluster"),
+            F.array_min("_dists").alias("_d2"))
         cells = (
-            assigned.select("cluster", F.posexplode("_v").alias("pos", "x"))
-            .groupBy("cluster", "pos")
+            assigned.select(*gcols, "cluster",
+                            F.posexplode("_v").alias("pos", "x"))
+            .groupBy(*gcols, "cluster", "pos")
             .agg(davg("x", 8).alias("m"))
             .collect()
         )
-        by_cluster: dict[int, list[float]] = {}
-        for row in cells:
-            by_cluster.setdefault(row["cluster"], [0.0] * dim)[row["pos"]] \
-                = row["m"]
-        # empty clusters keep their previous centroid
-        centroids = [by_cluster.get(j, centroids[j]) for j in range(k)]
-
-    return assigned
+        new: dict[tuple[int, int], list[float]] = {}
+        for r in cells:
+            new.setdefault((key(r), r["cluster"]), [0.0] * d)[r["pos"]] = r["m"]
+        books = [[new.get((g, j), c) for j, c in enumerate(b)]
+                 for g, b in enumerate(books)]
+    return assigned, books
 
 
-def kmeans_lloyd(df: DataFrame, *, vec_col: str = "embedding",
-                 id_col: str = "vec_id", k: int = 4,
-                 iters: int = 3) -> DataFrame:
+def lloyd_assignments(df: DataFrame, *, k: int = 4,
+                      iters: int = 3) -> DataFrame:
+    """Lloyd over whole vectors: the post-final-E-step assignment
+    relation ``(_id, _v, cluster, _d2)`` of :func:`_lloyd` — shared by
+    the k-means summary query and SemDeDup's cluster-blocked pruning
+    stage (the two consumers must agree on assignments, so they share
+    the loop). Float distances keep the op out of the strict
+    SQL-oracle class except in the configurations the audits pin.
+
+    At 100 TB: per-iteration cost is one scan + one k·d-cell shuffle;
+    the scan dominates, so the normalized input is materialized once
+    (the seed probe and every E-step + M-step action would otherwise
+    each re-run the parquet scan + double-cast), and k·d can rise
+    freely — the M-step keyspace is skew-proof by construction."""
+    vecs = df.select(F.col(ID_COL).alias("_id"),
+                     as_double(VEC_COL).alias("_v")).localCheckpoint(eager=True)
+    return _lloyd(vecs, k, iters)[0]
+
+
+def kmeans_lloyd(df: DataFrame, *, k: int = 4, iters: int = 3) -> DataFrame:
     """Fixed-iteration Lloyd k-means summary — the registry's
     representative *iterative* algorithm (driver loop of deterministic
     DataFrame rounds; the class the oracle harness checks rows-only,
-    like SGD/PageRank/label-propagation). The E/M loop itself lives in
-    :func:`lloyd_assignments`; this wrapper reduces the assignment
-    relation to the per-cluster summary."""
-    from data_eng_taxi_ibis_dagster_spark.functions.exact import dsum
-
-    assigned = lloyd_assignments(
-        df, vec_col=vec_col, id_col=id_col, k=k, iters=iters)
+    like SGD/PageRank/label-propagation). The E/M loop itself is
+    :func:`_lloyd` (through :func:`lloyd_assignments`); this wrapper
+    reduces the assignment relation to the per-cluster summary."""
+    assigned = lloyd_assignments(df, k=k, iters=iters)
     return (
         assigned.groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n_vectors"),
@@ -445,9 +479,8 @@ def kmeans_lloyd(df: DataFrame, *, vec_col: str = "embedding",
     )
 
 
-def semdedup(df: DataFrame, *, threshold: float = 0.95,
-             vec_col: str = "embedding", id_col: str = "vec_id",
-             k: int = 8, iters: int = 2) -> DataFrame:
+def semdedup(df: DataFrame, *, threshold: float = 0.95, k: int = 8,
+             iters: int = 2) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by k-means clustering + within-cluster cosine
     pruning. A vector is dropped when a LOWER-id vector in the SAME
@@ -470,8 +503,7 @@ def semdedup(df: DataFrame, *, threshold: float = 0.95,
     dup_of)`` where ``dup_of`` is the lowest qualifying lower-id
     neighbor (NULL for keepers).
     """
-    assigned = lloyd_assignments(
-        df, vec_col=vec_col, id_col=id_col, k=k, iters=iters)
+    assigned = lloyd_assignments(df, k=k, iters=iters)
     # Precompute norms once, and checkpoint: this relation feeds the
     # a-side, the b-side, AND the final left join — without truncation
     # each consumer re-runs the full E-step argmin over the corpus.

@@ -15,8 +15,8 @@ this generalizes). Engine-parity notes:
   reconstruction is bit-exact and the result provably equals brute
   force — so the brute-force SQL oracle hash-pins the entire encode/
   reconstruct/score machinery. The production Lloyd configuration
-  (``similarity_pq_topk``) shares every line; only the trainer
-  differs.
+  (``similarity_pq_topk``) shares the encode step and the
+  ``similarity.refine_topk`` tail, and scores with the ADC kernel.
 * The domain cap orders candidates by md5 (the cross-engine hash) so
   "random K per domain" is deterministic and identical in both
   engines.
@@ -67,8 +67,8 @@ from data_eng_taxi_ibis_dagster_spark.sources.tables import load_table
     tags=("E11", "audit"),
 )
 def similarity_pq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PQ search pipeline (operators/pq.pq_topk — the SAME
-    function the production Lloyd query runs) with the lossless
+    """The PQ search pipeline (operators/pq.pq_topk — encode, then
+    ``cosine_topk`` over the reconstructions) with the lossless
     identity codebook: every distinct subvector is its own centroid,
     so encode→reconstruct round-trips bit-exactly and the top-10 is
     PROVABLY the brute-force exact answer the oracle states. Any
@@ -224,36 +224,22 @@ def similarity_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring, shortlist cut, full re-rank, final ordering — is
     hash-checked against DuckDB, shortlist boundary ties included.
 
-    Scale shape: stage 1 is the brute-force probe-broadcast scan on
-    quarter-width vectors (or an ANN/PQ variant — composable); stage 2
-    touches |Q|·25 rows. No corpus-wide shuffle in either stage."""
+    Stage 1 is :func:`operators.similarity.cosine_topk` on the
+    prefixes, stage 2 the shared :func:`operators.similarity.refine_topk`
+    (as in ``operators/pq.retrieval_stack`` stage 1 and the PQ
+    searches' refine). Scale shape: stage 1 is the brute-force
+    probe-broadcast scan on quarter-width vectors (or an ANN/PQ variant
+    — composable); stage 2 touches |Q|·25 rows. No corpus-wide shuffle
+    in either stage."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = F.broadcast(emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        S.as_double("embedding").alias("qv")))
-    c = emb.select(F.col("vec_id").alias("match_id"),
-                   S.as_double("embedding").alias("cv"))
-    s16 = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("match_id"))
-        .select("query_id", "match_id",
-                S.cosine(F.slice("qv", 1, 16), F.slice("cv", 1, 16))
-                .alias("sim16"))
-    )
-    w16 = Window.partitionBy("query_id").orderBy(
-        F.col("sim16").desc(), F.col("match_id").asc())
-    short = (s16.withColumn("srnk", F.row_number().over(w16))
-             .filter(F.col("srnk") <= 25).select("query_id", "match_id"))
-    rer = (
-        short.join(q, "query_id").join(c, "match_id")
-        .select("query_id", "match_id",
-                S.cosine(F.col("qv"), F.col("cv")).alias("cosine_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("match_id").asc())
+    queries = emb.filter(F.col("vec_id") < 5)
+
+    def prefix(df: DataFrame) -> DataFrame:
+        return df.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
+
+    short = S.cosine_topk(prefix(queries), prefix(emb), k=25)
     return (
-        rer.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
+        S.refine_topk(short, queries, emb, k=5, refine=5)
         .orderBy("query_id", "rnk")
     )
 

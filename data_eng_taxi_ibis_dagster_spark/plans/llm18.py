@@ -252,7 +252,8 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     curated mixture (DiverseEvol/SemDeDup-style diversity sampling).
 
     Assignment reuses the strictly-audited seed E-step
-    (:func:`operators.similarity.lloyd_assignments` with iters=1 —
+    (:func:`operators.similarity.lloyd_assignments` with iters=1, the
+    first E-step of the shared ``operators.similarity._lloyd`` loop —
     the configuration ``kmeans_estep_audit`` pins to SQL ground
     truth): row-local argmin against broadcast-literal seed
     centroids, no join, no shuffle. The per-cluster cap is one

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_eng_taxi_ibis_dagster_spark.functions.exact import lsum, sql_lsum
+from data_eng_taxi_ibis_dagster_spark.operators import pq as PQ
 from data_eng_taxi_ibis_dagster_spark.operators import similarity as S
 from data_eng_taxi_ibis_dagster_spark.plans.registry import query
 from data_eng_taxi_ibis_dagster_spark.sources.tables import load_table
@@ -32,10 +33,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning + equi-join candidates. Zero false negatives, so the result
     is bit-identical to the all-pairs oracle — but the corpus is never
     broadcast and per-task memory is bounded by block size, not corpus
-    size. n_blocks derives from the corpus count at plan build
-    (round 9 — the k-scaling contract; see the operator docstring):
-    at every fixture SF the derived value is 8, the former literal, so
-    the executed plan is unchanged."""
+    size. n_blocks derives from the corpus count at plan build (the
+    k-scaling contract; see the operator docstring): at every fixture
+    SF the derived value is 8."""
     e = load_table(spark, sf_dir, "embeddings")
     return S.cosine_threshold_pairs_blocked(e, 0.4)
 
@@ -47,32 +47,12 @@ def ivf_topk(e: DataFrame, *, n_centroids: int = 8, nprobe: int = 2,
     (``similarity_ivf_audit``, nprobe=n_centroids ⇒ provably exact) —
     one implementation, so a regression in assignment, probe-list join,
     dedup, or re-rank breaks the hash-checked audit."""
-    # deterministic quantizer: the n lowest-id vectors serve as centroids
-    # (a real deployment trains k-means offline and broadcasts it; the
-    # engine-side join shape is identical)
-    centroids = F.broadcast(
-        e.orderBy("vec_id").limit(n_centroids)
-        .select(F.col("vec_id").alias("centroid_id"),
-                S.as_double("embedding").alias("cv"))
-    )
-
-    def assign(df: DataFrame, idname: str, keep_vec: str, topn: int) -> DataFrame:
-        scored = df.select(
-            F.col("vec_id").alias(idname), S.as_double("embedding").alias(keep_vec)
-        ).crossJoin(centroids).select(
-            idname, keep_vec, "centroid_id",
-            S.cosine(F.col(keep_vec), F.col("cv")).alias("_csim"),
-        )
-        w = Window.partitionBy(idname).orderBy(
-            F.col("_csim").desc(), F.col("centroid_id").asc())
-        return (
-            scored.withColumn("_crnk", F.row_number().over(w))
-            .filter(F.col("_crnk") <= topn)
-            .drop("_csim", "_crnk")
-        )
-
-    corpus = assign(e, "match_id", "mv", 1)          # each vector in 1 list
-    queries_df = assign(e.filter(F.col("vec_id") < 5), "query_id", "qv", nprobe)
+    # deterministic quantizer and nearest-list assignment: the shared
+    # IVF steps of operators/pq.py
+    cents = PQ.coarse_centroids(e, n_centroids=n_centroids)
+    corpus = PQ.assign_lists(e, cents, "match_id", "mv", 1)  # 1 list each
+    queries_df = PQ.assign_lists(e.filter(F.col("vec_id") < 5), cents,
+                                 "query_id", "qv", nprobe)
     cands = (
         queries_df.join(corpus, "centroid_id")
         .filter(F.col("query_id") != F.col("match_id"))

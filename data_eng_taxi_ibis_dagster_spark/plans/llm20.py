@@ -124,7 +124,8 @@ def retrieval_stack_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 provably equals a full-precision cosine re-rank and the entire
     three-stage composition — quarter-width shortlist, candidate
     semi-joins, encode/min_by/reconstruct, facet MaxSim with the
-    fixed-order sum, and all three window tie-breaks — is hash-checked
+    fixed-order sum, and all three per-query cuts (the shared
+    ``operators.similarity._topk`` tie-break) — is hash-checked
     against one DuckDB rendering. Any drift anywhere in the stack
     (a lost tie-break, a facet boundary off-by-one, an encode join
     regression) breaks this twin."""

@@ -55,8 +55,6 @@ BROADCAST_BOUNDS = {
                         "and takes the hash-join path"),
     ("operators/order.py", "global_sort_index"):
         (1, "artifact", "<=buckets-row cumulative-offset relation"),
-    ("operators/pq.py", "_refine_topk"):
-        (1, "probe", "query vectors: |Q| rows by input contract"),
     ("operators/pq.py", "coarse_centroids"):
         (1, "artifact", "n_centroids x d literal centroid table"),
     ("operators/pq.py", "ivfpq_topk"):
@@ -65,8 +63,6 @@ BROADCAST_BOUNDS = {
         (1, "artifact", "PQ codebook: m_subspaces x 2^bits x d_sub cells"),
     ("operators/pq.py", "pq_reconstruct"):
         (1, "artifact", "PQ codebook: m_subspaces x 2^bits x d_sub cells"),
-    ("operators/pq.py", "pq_topk"):
-        (1, "probe", "query vectors: |Q| rows by input contract"),
     ("operators/pq.py", "retrieval_stack"):
         (4, "probe", "query set, stage-1/2 candidate ids (<=|Q| * k per "
                      "stage via WindowGroupLimit), query facets"),
@@ -76,6 +72,8 @@ BROADCAST_BOUNDS = {
         (4, "artifact", "k-centroid table + B-row per-block radii (x2) + "
                         "B^2-row surviving block-pair list"),
     ("operators/similarity.py", "cosine_topk"):
+        (1, "probe", "query vectors: |Q| rows by input contract"),
+    ("operators/similarity.py", "refine_topk"):
         (1, "probe", "query vectors: |Q| rows by input contract"),
     ("plans/advanced.py", "local_supplier_volume"):
         (2, "fixed-dim", "nation (25) and filtered region (1 row)"),
@@ -98,8 +96,6 @@ BROADCAST_BOUNDS = {
         (1, "probe", "anchor set: fixed small id filter"),
     ("plans/llm13.py", "embedding_covariance"):
         (4, "artifact", "d-row per-dimension sum/variance tables (x4)"),
-    ("plans/llm16.py", "similarity_matryoshka_topk"):
-        (1, "probe", "5-query probe set"),
     ("plans/llm16.py", "similarity_maxsim_topk"):
         (2, "probe", "query facet set (|Q| x facets rows)"),
     ("plans/llm17.py", "dsir_importance_topk"):
@@ -107,8 +103,6 @@ BROADCAST_BOUNDS = {
     ("plans/llm17.py", "retrieval_bm25_topk"):
         (4, "probe", "query terms, per-query-term df (vocab restricted "
                      "to |Q| terms), 1-row corpus stats"),
-    ("plans/llm2.py", "ivf_topk"):
-        (1, "artifact", "n_centroids-row centroid table"),
     ("plans/llm3.py", "bpe_learn_merges"):
         (1, "scalar", "1-row vocab stats"),
     ("plans/llm4.py", "decontaminate_ngram"):

@@ -6,6 +6,8 @@ every vector must land in exactly one cluster, and more Lloyd
 iterations must not increase the clustering objective.
 """
 
+import pytest
+
 from data_eng_taxi_ibis_dagster_spark.operators.similarity import kmeans_lloyd
 from data_eng_taxi_ibis_dagster_spark.sources.tables import load_table
 
@@ -41,3 +43,17 @@ def test_kmeans_objective_nonincreasing(spark, sf_dir):
     ]
     assert js[1] <= js[0] + 1e-9
     assert js[2] <= js[1] + 1e-9
+
+
+def test_kmeans_fewer_rows_than_k_shrinks_k(spark):
+    """A corpus with fewer ids than k seeds fewer centroids: k shrinks
+    to the seed count (the PQ codebook rule), so 3 distinct vectors
+    with k=4 form 3 singleton clusters instead of failing; a corpus
+    with nothing to seed from is a ValueError."""
+    df = spark.createDataFrame(
+        [(i, [float(i == d) for d in range(4)]) for i in range(3)],
+        "vec_id long, embedding array<float>")
+    rows = _rows(kmeans_lloyd(df, k=4, iters=2))
+    assert [(r[1], r[2]) for r in rows] == [(1, 0), (1, 1), (1, 2)]
+    with pytest.raises(ValueError):
+        kmeans_lloyd(df.limit(0), k=4, iters=1)

@@ -2,6 +2,7 @@
 exact-codebook configuration, code-shape invariants, Lloyd-codebook
 determinism, and refined-search recall vs exact brute force."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_eng_taxi_ibis_dagster_spark.operators import pq as PQ
@@ -10,6 +11,16 @@ from data_eng_taxi_ibis_dagster_spark.operators.similarity import (
     cosine_topk,
 )
 from data_eng_taxi_ibis_dagster_spark.sources.tables import load_table
+
+
+@pytest.fixture(scope="module")
+def lloyd_book(spark, sf_dir):
+    """The production-shaped Lloyd codebook (m=8, k=16, iters=2) over
+    the whole embeddings table, trained once for the tests that each
+    used to train this identical book. The codebook is a DataFrame of
+    driver-side rows, so sharing it changes nothing the tests check."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return PQ.train_codebooks_lloyd(emb, m=8, dim=64, k=16, iters=2)
 
 
 def test_exact_codebook_roundtrip_is_lossless(spark, sf_dir):
@@ -45,12 +56,11 @@ def test_lloyd_codebook_deterministic(spark, sf_dir):
     assert [tuple(r) for r in b1] == [tuple(r) for r in b2]
 
 
-def test_pq_refined_recall_vs_exact(spark, sf_dir):
+def test_pq_refined_recall_vs_exact(spark, sf_dir, lloyd_book):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     exact = cosine_topk(queries, emb, k=10).toPandas()
-    book = PQ.train_codebooks_lloyd(emb, m=8, dim=64, k=16, iters=2)
-    approx = PQ.pq_topk(queries, emb, book, k=10, m=8, dim=64,
+    approx = PQ.pq_topk(queries, emb, lloyd_book, k=10, m=8, dim=64,
                         refine=8).toPandas()
     e = set(zip(exact["query_id"], exact["match_id"]))
     p = set(zip(approx["query_id"], approx["match_id"]))
@@ -109,15 +119,17 @@ def test_ivfpq_index_partition_pruning(spark, sf_dir, tmp_path):
     assert (out.groupby("query_id").size() == 5).all()
 
 
-def test_ivfpq_index_search_matches_inmemory_exact_config(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("nprobe", [1, 4])
+def test_ivfpq_index_search_matches_inmemory_exact_config(spark, sf_dir, tmp_path,
+                                                         nprobe):
     emb = load_table(spark, sf_dir, "embeddings").limit(150)
     book = PQ.train_codebooks_exact(emb, m=8, dim=64)
     path = str(tmp_path / "ivfpq2")
     PQ.write_ivfpq_index(emb, book, path, n_centroids=4)
     queries = emb.filter(F.col("vec_id") < 3)
-    idx = PQ.search_ivfpq_index(spark, path, queries, nprobe=4, k=5) \
+    idx = PQ.search_ivfpq_index(spark, path, queries, nprobe=nprobe, k=5) \
         .orderBy("query_id", "rnk").toPandas()
-    mem = PQ.ivfpq_topk(queries, emb, book, n_centroids=4, nprobe=4,
+    mem = PQ.ivfpq_topk(queries, emb, book, n_centroids=4, nprobe=nprobe,
                         k=5, m=8, dim=64) \
         .orderBy("query_id", "rnk").toPandas()
     assert idx[["query_id", "match_id", "rnk"]].values.tolist() == \
@@ -180,16 +192,15 @@ def test_adc_kernel_exact_config_equals_brute_force(spark, sf_dir):
     assert (adc["cosine_sim"] == bf["cosine_sim"]).all()
 
 
-def test_adc_kernel_matches_join_backend_lloyd(spark, sf_dir):
+def test_adc_kernel_matches_join_backend_lloyd(spark, sf_dir, lloyd_book):
     """Both PQ search backends implement the same semantics: with the
     same Lloyd codebook and refinement they must pick the same final
     top-k (exact re-rank makes the survivors' scores identical)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    book = PQ.train_codebooks_lloyd(emb, m=8, dim=64, k=16, iters=2)
-    a = PQ.pq_topk_adc(queries, emb, book, k=10, m=8, dim=64,
+    a = PQ.pq_topk_adc(queries, emb, lloyd_book, k=10, m=8, dim=64,
                        refine=8).orderBy("query_id", "rnk").toPandas()
-    j = PQ.pq_topk(queries, emb, book, k=10, m=8, dim=64,
+    j = PQ.pq_topk(queries, emb, lloyd_book, k=10, m=8, dim=64,
                    refine=8).orderBy("query_id", "rnk").toPandas()
     assert a[["query_id", "match_id", "rnk"]].values.tolist() == \
         j[["query_id", "match_id", "rnk"]].values.tolist()
@@ -218,7 +229,8 @@ def test_retrieval_stack_audit_equals_exact_composition(spark, sf_dir):
     assert set(zip(got["query_id"], got["match_id"])) <= short
 
 
-def test_retrieval_stack_lloyd_recall_vs_lossless_stack(spark, sf_dir):
+def test_retrieval_stack_lloyd_recall_vs_lossless_stack(spark, sf_dir,
+                                                       lloyd_book):
     """Production (Lloyd) stack vs the identity-codebook stack: the
     two differ ONLY in stage 2's quantization, so their top-5 overlap
     measures exactly the recall cost of the PQ approximation. (Recall
@@ -230,9 +242,8 @@ def test_retrieval_stack_lloyd_recall_vs_lossless_stack(spark, sf_dir):
     winnow relies on.)"""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    lloyd = PQ.train_codebooks_lloyd(emb, m=8, dim=64, k=16, iters=2)
     ident = PQ.train_codebooks_exact(emb, m=8, dim=64)
-    got = PQ.retrieval_stack(queries, emb, lloyd, m=8, dim=64,
+    got = PQ.retrieval_stack(queries, emb, lloyd_book, m=8, dim=64,
                              shortlist=50, pq_keep=15, k=5).toPandas()
     ref = PQ.retrieval_stack(queries, emb, ident, m=8, dim=64,
                              shortlist=50, pq_keep=15, k=5).toPandas()
