@@ -58,7 +58,7 @@ def main() -> None:
     # plan-build time under AQE (serial stage jobs), so three rounds
     # of records for dedup_containment and the distributed_prefix_*
     # family were missing their checkpoint-subtree cost (the
-    # checkpoints are removed; OPTIMIZATION_r12.md has the numbers).
+    # checkpoints are removed).
     # The guard below fails LOUDLY (stderr + nonzero task count in the
     # report) whenever an undeclared builder launches a multi-task
     # job, so the next regression of this class costs minutes, not
@@ -67,7 +67,7 @@ def main() -> None:
     eager_build = {"curation_stack"}
     # Benched queries whose builders are DECLARED to run Spark jobs at
     # plan-build time, enumerated by the round-12 audit (task-counted
-    # per builder in its own job group; OPTIMIZATION_r12.md):
+    # per builder in its own job group):
     # Every remaining name carries a SEMANTIC justification (the work
     # is genuinely the offline half of the operator), not a record-
     # comparability one — round 13 removed the three materialize-once
@@ -95,8 +95,8 @@ def main() -> None:
     tracker = sc.statusTracker()
     timings: dict[str, float] = {name: float("inf") for name in specs}
     # Per-query max CONCURRENT tasks observed during the timed write —
-    # the $SPARK_GRAFT_CPUS evidence PERF_r12 asked for (the driver
-    # could not distinguish "honors CPUs but overhead-bound at this
+    # the $SPARK_GRAFT_CPUS evidence (a total wall alone cannot
+    # distinguish "honors CPUs but overhead-bound at this
     # SF" from "ignores CPUs"): a sampler thread polls the status
     # tracker's active stages while each query runs.  A query whose
     # max concurrency tracks the core count proves the session
@@ -205,8 +205,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
-        # $SPARK_GRAFT_CPUS evidence (round 13, PERF_r12
-        # suspect_cpus_ignored): the session's effective parallelism
+        # $SPARK_GRAFT_CPUS evidence: the session's effective parallelism
         # plus each query's max concurrent tasks observed during its
         # timed write — "qconc" is an array aligned with
         # sorted(queries) to keep the contract line inside the

@@ -129,7 +129,7 @@ def train_codebooks_lloyd(df: DataFrame, *, m: int = 8, dim: int = 64,
     centroids as the ``(sub, code, cvec)`` codebook; a corpus with
     fewer than k ids yields fewer codes per subspace."""
     longf = explode_subvectors(df, m=m, dim=dim).localCheckpoint(eager=True)
-    _, books = _lloyd(longf, k, iters, groups=m, group="sub")
+    books = _lloyd(longf, k, iters, groups=m, group="sub")
     return df.sparkSession.createDataFrame(
         [(s, j, c) for s, b in enumerate(books) for j, c in enumerate(b)],
         "sub int, code int, cvec array<double>")

@@ -371,29 +371,48 @@ def squared_l2(a: Column, b: Column) -> Column:
     )
 
 
+def _assign(points: DataFrame, books: list, group: str | None = None
+            ) -> DataFrame:
+    """The Lloyd E-step: row-local argmin of each ``(_id, [group,] _v)``
+    row against its group's centroids ``books[g]``, inlined into the
+    plan as one literal (no join, no shuffle); ties go to the lowest
+    cluster index. Returns ``(_id, [group,] _v, cluster, _d2)``, where
+    ``_d2`` is the squared distance to the assigned centroid."""
+    per_group = [F.array(*[F.array(*[F.lit(float(x)) for x in c])
+                           for c in b]) for b in books]
+    cands = F.array(*per_group)[F.col(group)] if group else per_group[0]
+    # the distances get their own projection, read by the argmin and
+    # _d2: higher-order functions escape subexpression elimination, so
+    # inlining them would copy the centroid literal (and the fold) into
+    # the plan once per reference
+    dists = points.withColumn("_dists", F.transform(
+        cands, lambda c: squared_l2(F.col("_v"), c)))
+    return dists.select(
+        "_id", *([group] if group else []), "_v",
+        (F.array_position("_dists", F.array_min("_dists")) - 1)
+        .cast("int").alias("cluster"),
+        F.array_min("_dists").alias("_d2"))
+
+
 def _lloyd(points: DataFrame, k: int, iters: int, *, groups: int = 1,
-           group: str | None = None) -> tuple[DataFrame, list]:
-    """The one Lloyd E/M loop: ``iters`` rounds over the checkpointed
+           group: str | None = None) -> list:
+    """The one Lloyd loop: ``iters`` E/M rounds over the checkpointed
     ``points`` relation ``(_id, [group,] _v)``, clustering each of its
     ``groups`` groups independently — the PQ subspaces (``group`` is
-    the subspace column), or the whole vector as one group.
+    the subspace column), or the whole vector as one group. Returns
+    the centroids after the last M-step, ``books[g][cluster]``.
 
     * **Seeds** — per group, the vectors of the k lowest non-null ids
       (what the strict SQL audits compute: DuckDB sorts NULLs last);
       k shrinks to the number of seeds, and no seed is a ValueError.
-    * **E-step** — row-local argmin against the group's centroids,
-      inlined into the plan as one literal (no join, no shuffle); ties
-      go to the lowest cluster index.
+    * **E-step** — :func:`_assign`.
     * **M-step** — ``posexplode`` → exact decimal mean per (group,
       cluster, dim) cell: ONE shuffle of at most groups·k·d cells
       whatever the corpus size, then a collect of those cells (the
       only driver traffic). An empty cluster keeps its centroid.
 
     The decimal M-step is partition-order-independent, so repeated
-    runs produce identical centroids and assignments. Returns the last
-    E-step's ``(_id, [group,] _v, cluster, _d2)`` relation (``_d2`` is
-    the squared distance to the assigned centroid) and the centroids
-    after the last M-step, ``books[g][cluster]``."""
+    runs produce identical centroids."""
     key = (lambda r: r[group]) if group else (lambda r: 0)
     gcols = [group] if group else []
     seeds = (points.filter(F.col("_id").isNotNull()).orderBy("_id")
@@ -408,25 +427,10 @@ def _lloyd(points: DataFrame, k: int, iters: int, *, groups: int = 1,
     books = [b[:k] for b in books]
     d = len(books[0][0])
 
-    assigned = None
     for _ in range(iters):
-        per_group = [F.array(*[F.array(*[F.lit(float(x)) for x in c])
-                               for c in b]) for b in books]
-        cands = F.array(*per_group)[F.col(group)] if group else per_group[0]
-        # the distances get their own projection, read by the argmin and
-        # _d2: higher-order functions escape subexpression elimination,
-        # so inlining them would copy the centroid literal (and the
-        # fold) into the plan once per reference
-        dists = points.withColumn("_dists", F.transform(
-            cands, lambda c: squared_l2(F.col("_v"), c)))
-        assigned = dists.select(
-            "_id", *gcols, "_v",
-            (F.array_position("_dists", F.array_min("_dists")) - 1)
-            .cast("int").alias("cluster"),
-            F.array_min("_dists").alias("_d2"))
         cells = (
-            assigned.select(*gcols, "cluster",
-                            F.posexplode("_v").alias("pos", "x"))
+            _assign(points, books, group)
+            .select(*gcols, "cluster", F.posexplode("_v").alias("pos", "x"))
             .groupBy(*gcols, "cluster", "pos")
             .agg(davg("x", 8).alias("m"))
             .collect()
@@ -436,13 +440,14 @@ def _lloyd(points: DataFrame, k: int, iters: int, *, groups: int = 1,
             new.setdefault((key(r), r["cluster"]), [0.0] * d)[r["pos"]] = r["m"]
         books = [[new.get((g, j), c) for j, c in enumerate(b)]
                  for g, b in enumerate(books)]
-    return assigned, books
+    return books
 
 
 def lloyd_assignments(df: DataFrame, *, k: int = 4,
                       iters: int = 3) -> DataFrame:
-    """Lloyd over whole vectors: the post-final-E-step assignment
-    relation ``(_id, _v, cluster, _d2)`` of :func:`_lloyd` — shared by
+    """Lloyd over whole vectors: the ``iters``-th E-step's assignment
+    relation ``(_id, _v, cluster, _d2)`` (:func:`_assign` over the
+    centroids of ``iters - 1`` :func:`_lloyd` rounds) — shared by
     the k-means summary query and SemDeDup's cluster-blocked pruning
     stage (the two consumers must agree on assignments, so they share
     the loop). Float distances keep the op out of the strict
@@ -455,7 +460,7 @@ def lloyd_assignments(df: DataFrame, *, k: int = 4,
     freely — the M-step keyspace is skew-proof by construction."""
     vecs = df.select(F.col(ID_COL).alias("_id"),
                      as_double(VEC_COL).alias("_v")).localCheckpoint(eager=True)
-    return _lloyd(vecs, k, iters)[0]
+    return _assign(vecs, _lloyd(vecs, k, iters - 1))
 
 
 def kmeans_lloyd(df: DataFrame, *, k: int = 4, iters: int = 3) -> DataFrame:

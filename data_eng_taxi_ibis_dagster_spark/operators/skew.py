@@ -70,17 +70,6 @@ def write_bucketed(df: DataFrame, name: str, *, key: str, buckets: int = 32,
     writer.saveAsTable(name)
 
 
-def count_exchanges(df: DataFrame) -> int:
-    """Number of shuffle Exchange nodes in the final physical plan —
-    the metric the bucketing/broadcast choices are made on."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # AQE plan strings append the pre-adaptive "Initial Plan" — count
-    # only the final (executed) section
-    plan = plan.split("== Initial Plan ==")[0]
-    return sum(1 for line in plan.splitlines()
-               if "Exchange" in line and "BroadcastExchange" not in line)
-
-
 def salted_join(big: DataFrame, small: DataFrame, big_key: str,
                 small_key: str, *, salt: int = 8,
                 how: str = "inner") -> DataFrame:

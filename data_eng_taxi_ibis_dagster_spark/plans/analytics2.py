@@ -99,8 +99,7 @@ def graph_triangle_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explicit no-op isNotNull on tok: the three triangle join sides
     # push isnotnull on DIFFERENT columns (b / a,c) into their copies
     # of the e0 subtree, and asymmetric filters defeat the AQE stage
-    # reuse that evaluates the co-occurrence aggregate once (the
-    # round-13 containment/dsir finding)
+    # reuse that evaluates the co-occurrence aggregate once
     from data_eng_taxi_ibis_dagster_spark.operators.dedup import (
         _right_size,
     )
@@ -112,11 +111,9 @@ def graph_triangle_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
           .distinct())
     a = dt.select("doc_id", F.col("tok").alias("ta"))
     b = dt.select("doc_id", F.col("tok").alias("tb"))
-    # Round 13: the localCheckpoint(eager=False) "materialize once"
-    # here executed at PLAN-BUILD time under AQE — real work outside
-    # bench.py's timed window (round-12 order.py finding; kept one
-    # round for record comparability, now re-based).  Honest sharing:
-    # every consumer (the threshold rank pass's three references, the
+    # No localCheckpoint "materializes once" here: under AQE it runs
+    # at PLAN-BUILD time, real work before the query's own action.
+    # Sharing: every consumer (the threshold rank pass's three references, the
     # edge filter, the three triangle join sides) prunes identically
     # below the (ta, tb) aggregate — grouping keys are not prunable —
     # so AQE stage reuse evaluates the exploded co-occurrence self-join
@@ -129,7 +126,7 @@ def graph_triangle_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Exact 60th-percentile weight cut — the threshold adapts to corpus
     # density instead of hard-coding an absolute co-occurrence count.
-    # Round 13: the cut no longer RANKS every edge.  The oracle's
+    # The cut does not RANK every edge.  The oracle's
     # row_number orders by (w, ta, tb), so the w at global rank
     # ceil(0.6·N) is fully determined by the per-weight HISTOGRAM:
     # it is the smallest w whose cumulative edge count reaches the
@@ -139,9 +136,9 @@ def graph_triangle_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reuse — same subtree), and the prefix machinery now runs over
     # |distinct w| rows (a count-distribution support, ~sqrt-ish of
     # the edge count) instead of the full edge relation: the previous
-    # distributed_rank shuffled EVERY edge through its bucket windows
-    # just to read one row back (round-12: ~6 serial stage rounds over
-    # edge-scale data; now over histogram-scale data).
+    # distributed_rank would shuffle EVERY edge through its bucket
+    # windows just to read one row back (~6 serial stage rounds over
+    # edge-scale data, here over histogram-scale data).
     hw = e0.groupBy("w").agg(F.count(F.lit(1)).alias("_hn"))
     target = F.ceil(F.lit(0.6) * F.col("_n"))
     thr = (
@@ -211,7 +208,7 @@ def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_price = p.groupBy("p_retailprice").agg(F.max("p_size").alias("_ms"))
     frontier = (
         # bounds from one raw-scan min/max instead of a third
-        # evaluation of the per_price aggregate (round 13 — see
+        # evaluation of the per_price aggregate (see
         # weighted_median_price)
         distributed_prefix_max(
             per_price, F.col("p_retailprice"), F.col("_ms"), name="_prev",

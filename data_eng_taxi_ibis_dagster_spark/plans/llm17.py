@@ -145,16 +145,12 @@ def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # terms): the candidate chain's join pushes isnotnull(term) into
     # ITS copy of this subtree but not into dfr's, and the asymmetric
     # filter defeats the AQE stage reuse that shares the tokenize pass
-    # (the round-13 containment/dsir finding)
     toks = (d.select("doc_id", F.explode(T.tokens("text")).alias("term"))
             .filter(F.col("term").isNotNull()))
     # Doc length is row-local (array size) — no corpus-wide groupBy.
-    # Round 13: the localCheckpoint(eager=False) that used to
-    # "materialize once" here executed at PLAN-BUILD time under AQE —
-    # real corpus work outside bench.py's timed window (the round-12
-    # order.py finding; this site was kept one round for record
-    # comparability and is now re-based).  The two consumers (corpus
-    # statistics, candidate join) re-derive the row-local projection
+    # No localCheckpoint "materializes once" here: under AQE it runs
+    # at PLAN-BUILD time, real corpus work before the query's own
+    # action.  The two consumers (corpus statistics, candidate join) re-derive the row-local projection
     # concurrently inside the action — the order.py A/B precedent
     # (a wash) applies: the subtree is one scan + a tokenize.
     dl = d.select("doc_id",
@@ -165,8 +161,8 @@ def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qterms = q.select("term").distinct()
     # Prune exploded tokens to query terms BELOW the tf aggregation:
     # the (doc, term) exchange then carries only the |Q| query terms'
-    # postings, never the corpus vocabulary.  Checkpoint removed
-    # (round 13, as for ``dl``): the two consumers (df stats,
+    # postings, never the corpus vocabulary.  No checkpoint (as for
+    # ``dl``): the two consumers (df stats,
     # candidate scoring) prune identically below the (doc_id, term)
     # aggregate — grouping keys are not prunable — so AQE stage reuse
     # shares the single corpus tokenization pass at runtime.
@@ -312,12 +308,9 @@ def dsir_importance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One corpus explode feeds everything: the (doc, lang, bucket)
     # aggregate (lang is doc-functional, so cardinality is unchanged)
     # rolls up to the 256-row bucket stats, the 1-row totals, and the
-    # per-doc weights.  Round 13: the two localCheckpoint(eager=False)
-    # "materialize once" calls here executed at PLAN-BUILD time under
-    # AQE — real corpus work outside bench.py's timed window (the
-    # round-12 order.py finding; kept one round for record
-    # comparability, now re-based).  Honest sharing comes from AQE
-    # stage reuse instead: grouping keys are not prunable, so every
+    # per-doc weights.  No localCheckpoint "materializes once" here:
+    # under AQE it runs at PLAN-BUILD time, real corpus work before the
+    # query's own action.  Sharing comes from AQE stage reuse instead: grouping keys are not prunable, so every
     # consumer of ndb sees the IDENTICAL (doc_id, lang, b) aggregate
     # exchange — the corpus explode runs once at runtime — and both
     # bs consumers likewise share its (b,) exchange.

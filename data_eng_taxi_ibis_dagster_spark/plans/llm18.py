@@ -123,10 +123,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the shingle column is minted as the operator-owned ``_ct_s`` so
     # the plan lint's window bound is keyed to a name only this query
-    # mints (the ``_wf`` precedent) — with the round-12 checkpoint
-    # removal the df-cap window below is visible to the lint again.
+    # mints (the ``_wf`` precedent); no checkpoint truncates the plan,
+    # so the df-cap window below is visible to the lint.
     #
-    # Round 13, guide §2.3 "narrower types": the shingle travels as
+    # Narrower types: the shingle travels as
     # its 16-byte md5 BINARY from birth — the key is only ever
     # compared for equality (df window, pair equi-join), never emitted,
     # so the lossless narrowing (~17-40-byte strings → 16 bytes) cuts
@@ -140,12 +140,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The explicit isNotNull filters are result-no-ops (doc_id and the
     # shingle are non-null by construction, and NULL keys never survive
     # the equi-joins) — they exist so every consumer's plan carries
-    # the IDENTICAL filter below the _ct_s exchange: round 12's plan
-    # showed the pair join pushing isnotnull into its two sides but
-    # not into the size-aggregate branch, so the four consumers
-    # canonicalized differently and the explode+window pipeline
-    # executed FOUR times (a side, broadcast b side, size_a, size_b —
-    # plans/r12/dedup_containment_after.txt).
+    # the IDENTICAL filter below the _ct_s exchange: without them the
+    # pair join pushes isnotnull into its two sides but not into the
+    # size-aggregate branch, so the four consumers canonicalize
+    # differently and the explode+window pipeline executes FOUR times
+    # (a side, broadcast b side, size_a, size_b).
     # _right_size: with the pipeline now evaluated ONCE (below), the
     # tokenize+shingle+md5 pass runs on the scan's file-count
     # parallelism — 2 tasks at sf0.1, measured 2.6 s of the wall.
@@ -161,12 +160,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE exchange of the shingle relation instead of the groupBy-df +
     # join-back pair (measured 2.2× at sf0.1). WindowExec spills, so a
     # pathologically hot shingle degrades to disk, not OOM — and its
-    # rows are exactly the ones the cap then drops.  Round 12 removed
-    # the localCheckpoint that used to pin this relation to one
-    # evaluation (it materialized at plan-build time, escaping the
-    # bench's timed window); round 13 pins it to one evaluation the
-    # honest way: identical sub-plans under every consumer (the
-    # filters above) + a SHUFFLE_HASH hint on the pair join so AQE
+    # rows are exactly the ones the cap then drops.  No
+    # localCheckpoint pins this relation to one evaluation (it would
+    # run the corpus work at plan-build time, before the query's own
+    # action). One evaluation comes instead from identical sub-plans
+    # under every consumer (the filters above) + a SHUFFLE_HASH hint on the pair join so AQE
     # cannot broadcast side b as a separately-evaluated relation — the
     # join sides and the size aggregate all read ONE shared _ct_s
     # exchange stage (AQE stage reuse; the window's output partitioning
@@ -252,8 +250,8 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     curated mixture (DiverseEvol/SemDeDup-style diversity sampling).
 
     Assignment reuses the strictly-audited seed E-step
-    (:func:`operators.similarity.lloyd_assignments` with iters=1, the
-    first E-step of the shared ``operators.similarity._lloyd`` loop —
+    (:func:`operators.similarity.lloyd_assignments` with iters=1: the
+    E-step ``operators.similarity._assign`` over the seed centroids —
     the configuration ``kmeans_estep_audit`` pins to SQL ground
     truth): row-local argmin against broadcast-literal seed
     centroids, no join, no shuffle. The per-cluster cap is one

@@ -651,13 +651,11 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     appending never re-prefixes history) and the guarantee survives
     the grown-index cycle.
 
-    BENCHED (round 8): bench.py's standard timed window (plan build
-    excluded, noop write timed) measures exactly the PROBE half — the
-    two band-partition-pruned parquet index reads plus
-    batch-proportional candidate verification; index build/append is
-    the offline maintenance half and runs untimed at plan build. This
-    makes the batch-proportional ingest claim a regression-tracked
-    number (round-7 verdict ask #2)."""
+    Executing the returned frame runs exactly the PROBE half — the two
+    band-partition-pruned parquet index reads plus batch-proportional
+    candidate verification; index build/append is the offline
+    maintenance half and runs at plan build, so a timing of the
+    query's action measures the batch-proportional ingest cost."""
     import hashlib
     import os
     import tempfile
@@ -741,11 +739,9 @@ def _curation_pairs_oracle() -> str:
 def curation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LAZY half of the curation pipeline — gate → exact fp dedup →
     MinHash-LSH banding → exact-Jaccard pair verification — split out
-    of ``curation_stack`` so the tier's dominant cost is MEASURED
-    (round-6 verdict: the full stack's connected-components loop runs
-    eagerly at plan build, outside bench.py's timed noop write, so the
-    stack itself was deliberately unbenched; bench.py now also times
-    ``curation_stack`` build+execute as the eager total). Everything
+    of ``curation_stack`` so the tier's dominant cost is measurable
+    from the query's own action (the full stack's connected-components
+    loop runs eagerly at plan build, before that action). Everything
     here is one lazy plan: row-local gating, the compact fp-key
     shuffle, the banded bucket self-join with the hot-bucket cap, and
     candidates-only shingle verification — the stages that scale with

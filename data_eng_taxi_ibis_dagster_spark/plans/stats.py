@@ -173,14 +173,14 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         distributed_prefix_sum,
     )
 
-    # Pre-aggregate per DISTINCT price before the prefix machinery
-    # (round 12): the selection is provably invariant — within one
+    # Pre-aggregate per DISTINCT price before the prefix machinery:
+    # the selection is provably invariant — within one
     # price's tie group the running sum is monotone, so SOME row of
     # price p passes ``2·cw ≥ tw`` iff the group's LAST row does, and
     # that row's cw is exactly the inclusive prefix over per-price
     # totals; MIN(price) over the passing rows is therefore identical,
-    # and tw is the same global sum.  The honest accounting (measured
-    # round 12): l_extendedprice is ~97% DISTINCT at sf0.1 — and the
+    # and tw is the same global sum.  The honest accounting:
+    # l_extendedprice is ~97% DISTINCT at sf0.1 — and the
     # qty×retailprice lattice grows linearly with SF just like rows,
     # so the groupBy never meaningfully compresses at ANY scale and
     # total shuffle bytes actually rise ~10% (one extra exchange).
@@ -192,13 +192,12 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_extendedprice", F.col("l_quantity").cast("long").alias("w"))
     per_price = li.groupBy("l_extendedprice").agg(F.sum("w").alias("w"))
-    # Round 13: the bucket range comes from one RAW-scan min/max
-    # (``bounds``) instead of min/max over per_price — which
-    # re-evaluated the groupBy subtree a third time just to learn the
-    # price range (min/max of the raw column ≡ min/max of its distinct
-    # values). With identical prunings on the two remaining per_price
-    # consumers, AQE stage reuse shares their exchange: the aggregate
-    # runs ONCE (plans/r13/weighted_median_price_after.txt).
+    # The bucket range comes from one RAW-scan min/max (``bounds``),
+    # not min/max over per_price — that would re-evaluate the groupBy
+    # subtree a third time just to learn the price range (min/max of
+    # the raw column ≡ min/max of its distinct values). With identical
+    # prunings on the two remaining per_price consumers, AQE stage
+    # reuse shares their exchange, so the aggregate runs ONCE.
     ranked = distributed_prefix_sum(
         per_price, F.col("l_extendedprice"), F.col("w"),
         name="cw", total_name="tw",

@@ -135,15 +135,16 @@ def cum_revenue_by_orderdate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``floor(x*100+0.5)``) so the running sum is exact under
     reordering, per the repo float discipline.
 
-    Round 13 (guide §2.1/§2.4): ``bounded_scores=True`` — the distinct
+    ``bounded_scores=True``: the distinct
     scores are CALENDAR DAYS, bounded by wall-clock span at any corpus
     size (a century is <37k rows — the forecast_seasonal_naive lint
     precedent), so the cross-date prefix is one window over the
     per-date aggregate and the offsets join back to orders is a
     broadcast; ``tie_bounds`` supplies the global order-key range from
     one raw-scan min/max, replacing the per-day (min, max) groupBy and
-    its corpus-side join inside the within-date bucketing. Plan: 7
-    orders-scans/13 exchanges → 4 scans/8 exchanges (plans/r13/)."""
+    its corpus-side join inside the within-date bucketing (4 orders
+    scans and 8 exchanges, where the per-day groupBy plan had 7 and
+    13)."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate",
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")

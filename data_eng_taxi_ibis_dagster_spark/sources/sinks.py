@@ -60,14 +60,14 @@ def track_temp_dir(path: str, key: str | None = None) -> None:
     incremental sketch rollup, ...): atexit reclamation + a per-KEY
     LRU so a long-lived interpreter rebuilding such plans repeatedly
     (notebook, server, parametrized sweeps) cannot grow tempdir
-    unboundedly within one session (round-8 advisor). ``key`` defaults
+    unboundedly within one session. ``key`` defaults
     to the dir basename minus its trailing uniqueness segment (the
     ``<name>_<tag>_<uuid>`` convention every caller uses), so eviction
     only ever reclaims SUPERSEDED BUILDS OF THE SAME QUERY — a sweep
     that builds many different queries before executing any of them
-    evicts nothing (the round-9 review's cross-query hazard: a global
-    count-based LRU deleted query A's still-unexecuted dir because
-    queries B..I registered after it). A holder of a plan more than
+    evicts nothing (a global count-based LRU would delete query A's
+    still-unexecuted dir because queries B..I registered after it).
+    A holder of a plan more than
     TEMP_DIR_LRU_CAP rebuilds stale of the SAME query sees a
     missing-path read — the documented, narrow staleness window.
     One process-wide atexit sweep replaces the per-call
@@ -87,7 +87,7 @@ def track_temp_dir(path: str, key: str | None = None) -> None:
         # follows the <name>_<tag>_<hexuuid> convention; a
         # nonconforming caller keeps its full basename as the key, so
         # it can never alias into (and evict from) another query's LRU
-        # bucket (round-9 advisor). Such callers should pass ``key``
+        # bucket. Such callers should pass ``key``
         # explicitly to get the superseded-builds LRU bound.
         import re
 

@@ -2,14 +2,14 @@
 """Derive an ADVERSARIAL fixture directory: sf0.001 plus planted
 boundary cases, written to ``.sfdata/adv/`` (gitignored).
 
-Round-12 rationale (VERDICT r11 ask #5): the two latent wrong-answer
-classes found so far — the dsum 2^53 double-rounding (r10) and the
-borderline-J LSH recall gap (r11) — were both caught by SCALE sweeps,
-not fixtures, because the driver fixtures are too friendly: no
+Rationale: two latent wrong-answer classes — the dsum 2^53
+double-rounding and the borderline-J LSH recall gap — were both caught
+by scale sweeps, not fixtures, because the generated fixtures are too
+friendly: no
 near-threshold similarity pairs, no day-boundary timestamps, ASCII-only
 text, moderate float magnitudes.  This generator plants exactly those
 regimes so ``scripts/strict_sweep.py .sfdata/adv`` exercises every
-strict oracle against them once per round:
+strict oracle against them:
 
 * documents — unicode edges (NFC/NFD combining chars, astral-plane
   emoji, zero-width joiners, RTL runs) through tokenizers / shingles /

@@ -34,10 +34,8 @@ def plan_cache(spark, sf_dir):
     the artifact their one build wrote. The miss path holds a per-name
     lock, so concurrent seeding from the threaded analyze sweep builds
     each name exactly once even if two threads ever race on the same
-    name (round-9 advisor: the old check-then-build relied on the
-    sweep's one-thread-per-name partitioning, and a double build of a
-    side-effectful plan could LRU-evict the temp dir the first cached
-    plan still reads).
+    name (a double build of a side-effectful plan could LRU-evict the
+    temp dir the first cached plan still reads).
 
     The physical-plan STRING is captured at build time, before any
     consumer executes the DataFrame: parity (file-ordered first) runs
@@ -49,6 +47,7 @@ def plan_cache(spark, sf_dir):
     import threading
 
     from data_eng_taxi_ibis_dagster_spark.plans.registry import all_specs
+    from data_eng_taxi_ibis_dagster_spark.plans.shape import physical_plan
 
     cache = {}
     locks: dict = {}
@@ -61,9 +60,7 @@ def plan_cache(spark, sf_dir):
             with lock:
                 if name not in cache:
                     df = all_specs()[name].builder(spark, sf_dir)
-                    plan = (df._jdf.queryExecution()
-                            .executedPlan().toString())
-                    cache[name] = (df, plan)
+                    cache[name] = (df, physical_plan(df))
         return cache[name][0]
 
     def get_plan(name: str) -> str:

@@ -6,6 +6,7 @@ import pytest
 
 from data_eng_taxi_ibis_dagster_spark.operators.order import global_sort_index
 from data_eng_taxi_ibis_dagster_spark.plans.registry import get
+from data_eng_taxi_ibis_dagster_spark.plans.shape import physical_plan
 
 
 def test_exact_linear_stats_match_native(spark, sf_dir):
@@ -63,7 +64,7 @@ def test_global_sort_index_no_single_partition_scan(spark):
     naive global row_number would)."""
     df = spark.range(0, 1000).select(F.col("id").alias("k"))
     h = F.md5(F.col("k").cast("string"))
-    plan = global_sort_index(df, h, F.col("k"))._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(global_sort_index(df, h, F.col("k")))
     # the per-row window runs partitioned by the bucket column, not empty
     assert "_gsi_bucket" in plan
 

@@ -8,10 +8,7 @@ candidates only, never a cross product)."""
 from pyspark.sql import functions as F
 
 from data_eng_taxi_ibis_dagster_spark.plans.llm18 import dedup_containment
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from data_eng_taxi_ibis_dagster_spark.plans.shape import physical_plan
 
 
 def test_planted_twins_score_exactly_one(spark, sf_dir):
@@ -36,7 +33,7 @@ def test_threshold_is_exact_integer_compare(spark, sf_dir):
 
 
 def test_pair_join_is_equi_not_cross(spark, sf_dir):
-    plan = _plan(dedup_containment(spark, sf_dir))
+    plan = physical_plan(dedup_containment(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

@@ -11,6 +11,7 @@ from data_eng_taxi_ibis_dagster_spark.operators.dedup import (
     pick_cluster_representatives,
     simhash_near_dup_pairs,
 )
+from data_eng_taxi_ibis_dagster_spark.plans.shape import physical_plan
 from data_eng_taxi_ibis_dagster_spark.sources.tables import from_rows
 from data_eng_taxi_ibis_dagster_spark.sources.tables import load_table
 
@@ -288,8 +289,7 @@ def test_incremental_dedup_probes_materialized_index(spark, sf_dir, tmp_path):
     assert g == w and g  # identical, and non-trivial on the fixture
 
     # a single-band probe must reach the scan as a partition filter
-    plan = persisted.filter(F.col("band") == 3) \
-        ._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(persisted.filter(F.col("band") == 3))
     assert "PartitionFilters: [isnotnull(band" in plan
 
 

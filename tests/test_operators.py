@@ -15,6 +15,7 @@ from data_eng_taxi_ibis_dagster_spark.operators.relational import (
     asof_join,
     band_join_bucketized,
 )
+from data_eng_taxi_ibis_dagster_spark.plans.shape import physical_plan
 from data_eng_taxi_ibis_dagster_spark.sources.sinks import export_parquet
 from data_eng_taxi_ibis_dagster_spark.sources.tables import from_rows, load_table
 
@@ -460,8 +461,7 @@ def test_domain_cap_two_stage_equals_single_window(spark, sf_dir):
     )
     assert got == want
     # and the thinned plan really carries the local pre-rank window
-    plan = (all_specs()["domain_cap_sample"].builder(spark, sf_dir)
-            ._jdf.queryExecution().executedPlan().toString())
+    plan = physical_plan(all_specs()["domain_cap_sample"].builder(spark, sf_dir))
     assert "_pid" in plan
 
 

@@ -19,6 +19,7 @@ from data_eng_taxi_ibis_dagster_spark.operators.similarity import (
     cosine_threshold_pairs_blocked,
     cosine_topk,
 )
+from data_eng_taxi_ibis_dagster_spark.plans.shape import physical_plan
 
 
 def _rows(spark, vals):
@@ -140,7 +141,7 @@ def test_cosine_block_k_scaling(spark, sf_dir):
             e.select((F.col("vec_id") + rep * 1_000_000).alias("vec_id"),
                      "embedding"))
     pairs = cosine_threshold_pairs_blocked(big, 0.999)
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(pairs)
     want_k = max(8, math.ceil(10 * n1 / COSINE_BLOCK_TARGET_ROWS))
     limits = [int(m) for m in
               re.findall(r"TakeOrderedAndProject\(limit=(\d+)", plan)]

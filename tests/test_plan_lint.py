@@ -21,6 +21,7 @@ import pytest
 
 from data_eng_taxi_ibis_dagster_spark.operators.order import BUCKET_COL
 from data_eng_taxi_ibis_dagster_spark.plans.registry import all_specs
+from data_eng_taxi_ibis_dagster_spark.plans.shape import PY_NODES, physical_plan
 
 #: Queries where a BroadcastNestedLoopJoin is the *intended* physical
 #: shape (theta join / brute-force similarity / 1-row scalar subquery).
@@ -162,12 +163,6 @@ WINDOW_KEY_BOUNDS = {
 #: Tags whose queries may cross the JVM→Python boundary.
 PY_TAGS = {"E13", "E15"}
 
-PY_NODES = (
-    "BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
-    "MapInPandas", "PythonMapInArrow", "AggregateInPandas",
-    "FlatMapGroupsInPandasWithState", "FlatMapGroupsInArrow",
-)
-
 ALL = sorted(all_specs())
 
 #: Bucket-id columns of the operators/order machinery — an
@@ -200,81 +195,49 @@ _BOUNDED_OFFSET_PREFIXES = ("_gsi_bucket",
                             "_qs_bin", "_qs_g_")
 
 
-def _unpartitioned_window_orders(plan: str) -> list[str]:
-    """Return the first ORDER BY expression of every unpartitioned
-    ``windowspecdefinition`` in a physical-plan string. A window spec
-    renders as ``windowspecdefinition(part..., order ASC/DESC...,
-    frame)``; partition columns print bare, order columns carry an
-    ASC/DESC direction — so a spec whose FIRST top-level argument has
-    a direction suffix has an empty partition clause (the
-    all-rows-to-one-task shape WindowExec warns about)."""
-    hits = []
+def _window_specs(plan: str) -> list[list[str]]:
+    """Top-level arguments of every ``windowspecdefinition`` in a
+    physical-plan string. A spec renders as
+    ``windowspecdefinition(part..., order ASC/DESC..., frame)``:
+    partition columns print bare, order columns carry an ASC/DESC
+    direction, and the frame prints as ``specifiedwindowframe(...)``."""
+    specs = []
     key = "windowspecdefinition("
-    i = 0
-    while True:
-        j = plan.find(key, i)
-        if j < 0:
-            break
-        depth, cur, first = 0, [], None
+    j = plan.find(key)
+    while j >= 0:
+        depth, cur, args = 0, [], []
         k = j + len(key)
         while k < len(plan):
             c = plan[k]
-            if c == "(":
-                depth += 1
-                cur.append(c)
-            elif c == ")" and depth == 0:
-                break
-            elif c == ")":
-                depth -= 1
-                cur.append(c)
-            elif c == "," and depth == 0:
-                if first is None:
-                    first = "".join(cur).strip()
-                cur = []
-            else:
-                cur.append(c)
-            k += 1
-        if first is None:
-            first = "".join(cur).strip()
-        i = k
-        if " ASC" in first or " DESC" in first:
-            hits.append(first)
-    return hits
-
-
-def _partitioned_window_keys(plan: str) -> set[tuple[str, ...]]:
-    """Return the partition-column tuple of every PARTITIONED
-    ``windowspecdefinition`` in a physical-plan string (normalized:
-    ``#123`` expression-id suffixes stripped). Partition columns print
-    bare; order columns carry ASC/DESC; the frame arg prints as
-    ``specifiedwindowframe(...)``."""
-    keys = set()
-    marker = "windowspecdefinition("
-    i = 0
-    while True:
-        j = plan.find(marker, i)
-        if j < 0:
-            break
-        depth, cur, args = 0, [], []
-        k = j + len(marker)
-        while k < len(plan):
-            c = plan[k]
-            if c == "(":
-                depth += 1
-                cur.append(c)
-            elif c == ")" and depth == 0:
-                break
-            elif c == ")":
-                depth -= 1
-                cur.append(c)
-            elif c == "," and depth == 0:
+            if c == "," and depth == 0:
                 args.append("".join(cur).strip())
                 cur = []
+            elif c == ")" and depth == 0:
+                break
             else:
+                depth += (c == "(") - (c == ")")
                 cur.append(c)
             k += 1
         args.append("".join(cur).strip())
-        i = k
+        specs.append(args)
+        j = plan.find(key, k)
+    return specs
+
+
+def _unpartitioned_window_orders(plan: str) -> list[str]:
+    """Return the first ORDER BY expression of every unpartitioned
+    window spec: a spec whose FIRST top-level argument has a direction
+    suffix has an empty partition clause (the all-rows-to-one-task
+    shape WindowExec warns about)."""
+    return [args[0] for args in _window_specs(plan)
+            if " ASC" in args[0] or " DESC" in args[0]]
+
+
+def _partitioned_window_keys(plan: str) -> set[tuple[str, ...]]:
+    """Return the partition-column tuple of every PARTITIONED window
+    spec (normalized: ``#123`` expression-id suffixes stripped)."""
+    keys = set()
+    for args in _window_specs(plan):
         # A window ORDERED BY a range-bucket column of the
         # operators/order machinery is one of its offsets windows: the
         # input relation is the post-aggregate (group, bucket) rollup,
@@ -436,8 +399,7 @@ def test_rfm_has_no_global_ntile_window(spark, sf_dir):
     single-partition ntile window; quartiles come from
     operators.order.distributed_ntile (bucket-partitioned rank windows
     + ≤256-row offset windows)."""
-    df = all_specs()["rfm_segmentation"].builder(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(all_specs()["rfm_segmentation"].builder(spark, sf_dir))
     assert "ntile" not in plan
     assert f"windowspecdefinition({BUCKET_COL}" in plan
 
@@ -459,9 +421,8 @@ def test_window_bound_lint_flags_naive_group_window(spark):
         [(1, "A", 2.0), (2, "N", 3.0)], "k long, flag string, p double")
 
     def offending(frame):
-        plan = frame._jdf.queryExecution().executedPlan().toString()
         return [
-            part for part in _partitioned_window_keys(plan)
+            part for part in _partitioned_window_keys(physical_plan(frame))
             if not any(c.startswith(_BOUNDED_OFFSET_PREFIXES) for c in part)
             and WINDOW_KEY_BOUNDS.get(part) is None
         ]
@@ -491,7 +452,7 @@ def test_wgl_bound_is_checked_per_window_tuple(spark):
         .filter(F.col("r") <= 1)
     sneaky = limited.withColumn("r2", F.row_number().over(
         Window.partitionBy("match_id").orderBy("sim", "query_id")))
-    plan = sneaky._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(sneaky)
 
     wgl = _wgl_partition_tuples(plan)
     assert ("query_id",) in wgl          # the limited window pushed WGL

@@ -10,6 +10,7 @@ from data_eng_taxi_ibis_dagster_spark.operators.similarity import (
     as_double,
     cosine_topk,
 )
+from data_eng_taxi_ibis_dagster_spark.plans.shape import physical_plan
 from data_eng_taxi_ibis_dagster_spark.sources.tables import load_table
 
 
@@ -109,7 +110,7 @@ def test_ivfpq_index_partition_pruning(spark, sf_dir, tmp_path):
     PQ.write_ivfpq_index(emb, book, path, n_centroids=4)
     queries = emb.filter(F.col("vec_id") < 2)
     res = PQ.search_ivfpq_index(spark, path, queries, nprobe=1, k=5)
-    plan = res._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(res)
     # the probed list ids must reach the lists scan as a partition
     # filter — unprobed partitions are never read
     assert "PartitionFilters: [centroid_id" in plan.replace("#", " #") or \
@@ -145,7 +146,7 @@ def test_pq_encode_plan_shape(spark, sf_dir):
     book = PQ.train_codebooks_exact(emb, m=8, dim=64)
     codes = PQ.pq_encode(emb, book, m=8, dim=64)
     codes.collect()
-    plan = codes._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(codes)
     assert "BroadcastHashJoin" in plan
     # the codebook must never arrive via a shuffled (sort-merge) join
     assert "SortMergeJoin" not in plan
@@ -162,7 +163,7 @@ def test_ivfpq_search_reads_codes_not_vectors(spark, sf_dir, tmp_path):
     res = PQ.search_ivfpq_index(spark, path, emb.filter(F.col("vec_id") < 2),
                                 nprobe=1, k=5)
     res.collect()
-    plan = res._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(res)
     code_scans = [ln for ln in plan.splitlines()
                   if "FileScan parquet" in ln and "codes" in ln]
     assert code_scans, plan[:1500]

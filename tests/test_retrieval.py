@@ -14,11 +14,8 @@ from data_eng_taxi_ibis_dagster_spark.plans.llm17 import (
     dsir_importance_topk,
     retrieval_bm25_topk,
 )
+from data_eng_taxi_ibis_dagster_spark.plans.shape import physical_plan
 from data_eng_taxi_ibis_dagster_spark.sources.tables import load_table
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_bm25_candidates_contain_query_terms(spark, sf_dir):
@@ -50,7 +47,7 @@ def test_bm25_candidates_contain_query_terms(spark, sf_dir):
 
 
 def test_bm25_prunes_postings_via_broadcast(spark, sf_dir):
-    plan = _plan(retrieval_bm25_topk(spark, sf_dir))
+    plan = physical_plan(retrieval_bm25_topk(spark, sf_dir))
     # Query terms, df stats, and corpus stats all join broadcast; the
     # only shuffles carry pruned postings / doc lengths.
     assert plan.count("BroadcastHashJoin") >= 3, plan
@@ -76,7 +73,7 @@ def test_dsir_prefers_target_language(spark, sf_dir):
 
 
 def test_dsir_bucket_table_is_broadcast(spark, sf_dir):
-    plan = _plan(dsir_importance_topk(spark, sf_dir))
+    plan = physical_plan(dsir_importance_topk(spark, sf_dir))
     # The 256-row log-ratio relation and the 1-row totals both ride
     # broadcast joins; TakeOrderedAndProject (not a global Sort) caps
     # the output.

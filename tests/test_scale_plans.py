@@ -12,11 +12,8 @@ fact table and scanning all of it.
 import pytest
 from pyspark.sql import functions as F
 
+from data_eng_taxi_ibis_dagster_spark.plans.shape import physical_plan
 from data_eng_taxi_ibis_dagster_spark.sources.tables import load_table
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):
@@ -37,7 +34,7 @@ def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):
         fact.join(dim, fact.o_orderpriority == dim.p)
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    plan = _plan(joined)
+    plan = physical_plan(joined)
     assert "dynamicpruning" in plan, plan
     # The pruned scan must be the partitioned fact table's.
     assert "PartitionFilters" in plan
@@ -78,7 +75,7 @@ def test_runtime_bloom_filter_join(spark, sf_dir):
             line.join(sel, line.l_orderkey == sel.o_orderkey)
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        plan = _plan(joined)
+        plan = physical_plan(joined)
         assert "might_contain" in plan, plan
 
         expected = (
@@ -148,13 +145,13 @@ def test_join_strategy_hints_are_honored(spark, sf_dir):
     c = load_table(spark, sf_dir, "customer")
 
     bc = o.join(c.hint("broadcast"), o.o_custkey == c.c_custkey)
-    assert "BroadcastHashJoin" in _plan(bc)
+    assert "BroadcastHashJoin" in physical_plan(bc)
 
     sh = o.join(c.hint("shuffle_hash"), o.o_custkey == c.c_custkey)
-    assert "ShuffledHashJoin" in _plan(sh)
+    assert "ShuffledHashJoin" in physical_plan(sh)
 
     mg = o.join(c.hint("merge"), o.o_custkey == c.c_custkey)
-    assert "SortMergeJoin" in _plan(mg)
+    assert "SortMergeJoin" in physical_plan(mg)
 
 
 def test_cbo_table_stats_via_analyze(spark, sf_dir, tmp_path):
@@ -204,8 +201,7 @@ def test_pair_stage_is_winnow_blocked(spark, sf_dir, name):
     )
     from data_eng_taxi_ibis_dagster_spark.plans.registry import get
 
-    plan = (get(name).builder(spark, sf_dir)
-            ._jdf.queryExecution().executedPlan().toString())
+    plan = physical_plan(get(name).builder(spark, sf_dir))
     # the self-join keys on the fingerprint, not on metadata
     assert re.search(r"hashpartitioning\(_wf#\d+", plan), (
         f"{name}: pair join no longer keyed on the winnowing "
