@@ -349,8 +349,9 @@ def quantile_sketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest writes ≤ groups × range/width sketch rows; a percentile
     read costs a grid scan, never a corpus scan. Sketch writes run at
     plan build (the offline ingest half, same convention as the
-    persisted LSH index); the timed plan is the grid-only read —
-    bench.py tracks exactly the without-rescan claim."""
+    persisted LSH index); the executed plan is the grid-only read, so
+    ``scripts/profile_query.py`` reports the writes as ``build_s`` and
+    ``build_jobs`` and the without-rescan read as ``exec_s``."""
     import hashlib
     import os
     import tempfile

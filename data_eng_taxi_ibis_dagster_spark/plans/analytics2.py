@@ -95,11 +95,10 @@ def graph_triangle_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, and all three joins are hash equi-joins on vertex keys. The
     co-occurrence relation itself is one exploded self-join shuffled on
     doc_id with per-doc fan-out bounded by distinct-token count."""
-    # _right_size (scan-parallelism fan-out, no-op at scale) +
-    # explicit no-op isNotNull on tok: the three triangle join sides
-    # push isnotnull on DIFFERENT columns (b / a,c) into their copies
-    # of the e0 subtree, and asymmetric filters defeat the AQE stage
-    # reuse that evaluates the co-occurrence aggregate once
+    # _right_size: scan-parallelism fan-out, no-op at scale.  The
+    # isNotNull on tok is a no-op, and stage reuse does not need it:
+    # the physical plan is the same without it, and the executed plan
+    # scans the corpus once either way.
     from data_eng_taxi_ibis_dagster_spark.operators.dedup import (
         _right_size,
     )

@@ -10,6 +10,9 @@ property Spark-first: every query is a :class:`QuerySpec` pairing
 * ``oracle``  — the equivalent ANSI SQL executed by DuckDB over the same
   parquet (None for non-SQL-expressible ops → rows-only check)
 
+``bench=True`` marks the queries ``scripts/profile_query.py`` profiles
+when it is given no query names.
+
 Column names are part of the contract: every computed column is aliased
 identically in both renderings (the harness sorts columns by name before
 hashing values).

@@ -65,10 +65,10 @@ def get_session(app_name: str = "data-eng-taxi-ibis-dagster-spark",
         .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # UI stays off for the timed/test paths (its status listener is
-        # overhead the longitudinal wall-clock record never paid);
-        # bench's separate metrics subprocess opts in to expose the
-        # REST /api/v1 status endpoints for shuffle-byte accounting.
+        # UI stays off for the timed and test paths (its status
+        # listener is overhead); scripts/profile_query.py and
+        # perfbench's traced mode (``--trace 1``) switch it on for the
+        # REST /api/v1 status endpoints their engine counters come from.
         .config("spark.ui.enabled",
                 os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.ui.port", "0")

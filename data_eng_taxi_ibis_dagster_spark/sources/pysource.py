@@ -21,8 +21,10 @@ Python reader.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterator, Sequence
 
+from pyspark import cloudpickle
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -83,7 +85,13 @@ class SyntheticTelemetrySource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent registration of the custom format."""
+    """Idempotent registration of the custom format.
+
+    The module imports nothing from the package, so it is pickled by
+    value: Spark's Python workers rebuild the source without importing
+    the package, which they cannot do when the driver found it only
+    through its own ``sys.path``."""
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(SyntheticTelemetrySource)
 
 

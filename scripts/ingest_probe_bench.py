@@ -16,9 +16,9 @@ Needs the sf1 stretch fixture (``python scripts/make_sf1.py`` →
   {"batch": B, "corpus_small": N1, "corpus_large": N2,
    "small_sec": s, "large_sec": l, "ratio": l/s}
 
-Timing discipline mirrors bench.py: index build (the offline half of
-ingest) is untimed; the timed window is the probe plan's noop write;
-min over SPARK_GRAFT_BENCH_PASSES (default 2) separated passes.
+Timing rule: the index build (the offline half of ingest) is untimed;
+the timed window is the probe plan's noop write; each side reports the
+minimum over SPARK_GRAFT_BENCH_PASSES (default 2) separated passes.
 """
 
 from __future__ import annotations

@@ -1,12 +1,21 @@
-"""Per-stage profile of one benched query: wall, shuffle, tasks.
+"""Per-query profile of registry queries: plan-build and execution time
+plus the engine counters Spark's status API reports for them.
 
-Usage: python scripts/profile_query.py <query> [passes]
+Usage: python scripts/profile_query.py [query ...]
 
-Runs the named registry query in a UI-enabled session (noop sink,
-warmup pass first), then prints per-stage rows from the REST status
-API sorted by executorRunTime — the guide §1 "which stage is slow"
-loop without the interactive UI. Throwaway-friendly but committed so
-optimization rounds share one instrument.
+With no names it runs every ``bench=True`` registry query. Inputs are
+read from ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 directory named in
+``TESTDATA.md``); the session's UI is switched on here, because the
+counters come from its REST API.
+
+Each query runs ``WARMUP`` unmeasured and ``PASSES`` measured times,
+each time inside an ``op`` span with ``plans.build`` and ``query.exec``
+children (the spans perfbench's ``analytics_queries`` opens), executing
+into the ``noop`` sink. Every span has its own job group, so jobs a
+builder runs are billed to ``plans.build``. The fastest measured pass
+is printed as one JSON line: ``build_s``, ``exec_s``, ``build_jobs``, the
+pass's ``jobs``, ``stages``, ``tasks``, ``task_cpu_s``, shuffle and spill
+bytes, and ``parallelism`` (summed task run time over the pass's wall).
 """
 
 from __future__ import annotations
@@ -14,86 +23,60 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from perfbench.gen import fixture_dir  # noqa: E402
+from perfbench.trace import Tracer  # noqa: E402
+
+WARMUP = 1
+PASSES = 2
+COUNTS = ("jobs", "stages", "tasks", "shuffle_read_bytes",
+          "shuffle_write_bytes", "spill_bytes")
 
 
-def _get(url: str):
-    with urllib.request.urlopen(url, timeout=30) as resp:
-        return json.loads(resp.read())
+def profile(spark, tracer: Tracer, name: str, builder, sf_dir: str) -> dict:
+    passes = []
+    for _ in range(WARMUP + PASSES):
+        with tracer.span("op", query=name) as op:
+            with tracer.span("plans.build", query=name) as build:
+                df = builder(spark, sf_dir)
+            with tracer.span("query.exec", query=name) as exe:
+                df.write.mode("overwrite").format("noop").save()
+        passes.append((op, build, exe))
+    # Bills every retained job, so earlier queries' spans are billed
+    # again; only this query's spans, billed here for the first time,
+    # are read.
+    tracer.collect_engine()
+    op, build, exe = min(passes[WARMUP:], key=lambda p: p[0].dur)
+    total = tracer.totals(op)
+    return {"query": name, "build_s": round(build.dur, 4),
+            "exec_s": round(exe.dur, 4),
+            "build_jobs": int(tracer.totals(build).get("jobs", 0)),
+            **{key: int(total.get(key, 0)) for key in COUNTS},
+            "task_cpu_s": round(total.get("task_cpu_s", 0), 4),
+            "parallelism": round(total.get("task_run_s", 0) / op.dur, 3)}
 
 
-def main() -> None:
-    name = sys.argv[1]
-    passes = int(sys.argv[2]) if len(sys.argv) > 2 else 2
+def main(names: list[str]) -> None:
     os.environ["SPARK_GRAFT_UI"] = "true"
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # Spark's Python workers import the package too (UDF bodies).
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR") or fixture_dir(ROOT, "0.1")
     from data_eng_taxi_ibis_dagster_spark.plans.registry import all_specs
     from data_eng_taxi_ibis_dagster_spark.session import get_session
 
-    spark = get_session(app_name=f"profile-{name}")
-    sc = spark.sparkContext
-    api = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-    spec = all_specs()[name]
-
-    # warmup (scan caches, codegen)
-    spec.builder(spark, sf_dir).write.mode("overwrite").format("noop").save()
-
-    best, best_group = float("inf"), None
-    for i in range(passes):
-        group = f"profile-{name}-{i}"
-        sc.setJobGroup(group, name)
-        t_build = time.perf_counter()
-        df = spec.builder(spark, sf_dir)
-        build_secs = time.perf_counter() - t_build
-        tracker = sc.statusTracker()
-        heavy_tasks = 0
-        for jid in tracker.getJobIdsForGroup(group):
-            info = tracker.getJobInfo(jid)
-            for sid in (info.stageIds if info else ()):
-                st = tracker.getStageInfo(sid)
-                if st and st.numTasks > 1:
-                    heavy_tasks += st.numTasks
-        t0 = time.perf_counter()
-        df.write.mode("overwrite").format("noop").save()
-        wall = time.perf_counter() - t0
-        # bench.py round-12 rule: multi-task build jobs (eager loops,
-        # plan-build materializations) bill build+write; the 1-task
-        # parquet schema-inference job every scan fires is exempt
-        if heavy_tasks:
-            wall += build_secs
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        print(f"pass {i}: {wall:.3f}s"
-              + (f" (build {build_secs:.3f}s, {heavy_tasks} heavy "
-                 f"build tasks)" if heavy_tasks else ""))
-        if wall < best:
-            best, best_group = wall, group
-
-    stage_ids = set()
-    for job in _get(f"{api}/jobs"):
-        if job.get("jobGroup") == best_group:
-            stage_ids.update(job["stageIds"])
-    rows = []
-    for st in _get(f"{api}/stages"):
-        if st["stageId"] in stage_ids and st["status"] != "PENDING":
-            rows.append(st)
-            stage_ids.discard(st["stageId"])
-    rows.sort(key=lambda s: -s.get("executorRunTime", 0))
-    print(f"\nbest pass: {best:.3f}s — stages by executorRunTime (ms):")
-    hdr = (f"{'stage':>6} {'run_ms':>8} {'cpu_ms':>8} {'tasks':>5} "
-           f"{'in_rec':>9} {'sh_r_MB':>8} {'sh_w_MB':>8}  name")
-    print(hdr)
-    for st in rows:
-        print(f"{st['stageId']:>6} {st.get('executorRunTime', 0):>8} "
-              f"{st.get('executorCpuTime', 0) // 1_000_000:>8} "
-              f"{st.get('numCompleteTasks', 0):>5} "
-              f"{st.get('inputRecords', 0):>9} "
-              f"{st.get('shuffleReadBytes', 0) / 1e6:>8.2f} "
-              f"{st.get('shuffleWriteBytes', 0) / 1e6:>8.2f}  "
-              f"{st.get('name', '')[:60]}")
+    specs = all_specs()
+    names = names or sorted(n for n, s in specs.items() if s.bench)
+    spark = get_session(app_name="profile-query")
+    tracer = Tracer(enabled=True)
+    tracer.bind(spark)
+    for name in names:
+        print(json.dumps(profile(spark, tracer, name, specs[name].builder, sf_dir)),
+              flush=True)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

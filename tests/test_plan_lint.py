@@ -144,11 +144,8 @@ WINDOW_KEY_BOUNDS = {
                  "before the inverted-index self-join; WindowExec "
                  "spills, so a pathologically hot shingle degrades to "
                  "disk, and its rows are exactly the ones the cap then "
-                 "drops.  Visible to the lint since round 12: the "
-                 "localCheckpoint that used to truncate the captured "
-                 "plan above this window was removed (it materialized "
-                 "at plan-build time, escaping the bench's timed "
-                 "window)"),
+                 "drops.  Visible to the lint because no localCheckpoint "
+                 "truncates the captured plan above this window"),
     ("source",): ("bounded", "domain cap: exact window runs AFTER the "
                   "(source, partition-id) map-side top-K pre-thin — "
                   "<= K*n_partitions rows per domain"),

@@ -304,6 +304,28 @@ def test_python_datasource_partition_planning(spark):
     assert pdf.equals(again)
 
 
+def test_python_datasource_pickles_by_value(spark, tmp_path):
+    """Spark's Python workers rebuild the source from its pickle without
+    importing the package, so a driver that finds the package only
+    through ``sys.path`` can still read from it."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from data_eng_taxi_ibis_dagster_spark.sources import pysource
+
+    pysource.register(spark)
+    # -I: no PYTHONPATH and no working-directory entry on sys.path.
+    out = subprocess.run(
+        [sys.executable, "-I", "-c",
+         "import pickle, sys; print(pickle.loads(sys.stdin.buffer.read()).name())"],
+        input=cloudpickle.dumps(pysource.SyntheticTelemetrySource),
+        cwd=tmp_path, capture_output=True, timeout=120)
+    assert out.returncode == 0, out.stderr.decode()[-2000:]
+    assert out.stdout.decode().strip() == "synthetic_telemetry"
+
+
 def test_iceberg_sinks_gated_or_roundtrip(spark, sf_dir, tmp_path):
     """Iceberg sinks activate only with the runtime jar on the
     classpath; without it the probe must be False and the entry points
