@@ -51,7 +51,7 @@ from __future__ import annotations
 from functools import reduce
 from operator import add
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -978,8 +978,8 @@ def dedup_clusters(pairs: DataFrame, *,
         .distinct()
         # materialize the loop-invariant edge relation ONCE: pairs
         # usually come from the full MinHash pipeline (corpus-scale
-        # lineage), and every round below runs an action (the
-        # convergence check) — without truncation each round would
+        # lineage), and every round below runs an action (its
+        # checkpoint) — without truncation each round would
         # re-run signature generation + banding + verification
         .localCheckpoint(eager=True)
     )
@@ -1006,11 +1006,12 @@ def dedup_clusters(pairs: DataFrame, *,
             )
         )
         # localCheckpoint truncates the growing lineage — without it,
-        # iteration i re-executes all i-1 predecessor joins
-        updated = updated.localCheckpoint(eager=True)
-        changed = updated.filter(F.col("_changed")).limit(1).count()
-        labels = updated.drop("_changed")
-        if changed == 0:
+        # iteration i re-executes all i-1 predecessor joins; the
+        # convergence count is observed on that same job
+        obs = Observation()
+        labels = updated.observe(obs, F.count_if("_changed").alias("n")) \
+            .localCheckpoint(eager=True).drop("_changed")
+        if obs.get["n"] == 0:
             break
     return labels.select(F.col("id").alias("doc_id"),
                          F.col("label").alias("canonical_id"))

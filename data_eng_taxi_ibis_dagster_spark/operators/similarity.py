@@ -34,7 +34,7 @@ ID_COL, VEC_COL = "vec_id", "embedding"
 
 def as_double(vec: str | Column) -> Column:
     v = F.col(vec) if isinstance(vec, str) else vec
-    return F.transform(v, lambda x: x.cast("double"))
+    return v.cast("array<double>")
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -10,10 +10,17 @@ run, per-asset observability. This module provides exactly that as a
 dependency-free mini-framework: an ``@asset`` decorator + a topological
 runner.
 
+Each asset runs its data once. A DataFrame asset ends in one action, a
+``localCheckpoint`` whose row count is an ``Observation`` on that same
+job, and its consumers read the checkpoint instead of re-deriving the
+lineage; a sink asset's ``WriteReport`` already carries the rows it
+wrote. So an asset's logged time includes its execution, and nothing
+runs after it to count rows.
+
 Unlike the reference, assets share ONE SparkSession (the reference
 stops and restarts the JVM per asset — a measurement and latency bug we
-deliberately do not reproduce), and asset handoff can be in-memory
-DataFrames rather than files, though file handoff (parquet) remains the
+deliberately do not reproduce), and asset handoff is in-memory
+checkpoints rather than files, though file handoff (parquet) remains the
 default between *pipelines* for restartability at scale.
 """
 
@@ -27,6 +34,8 @@ from graphlib import TopologicalSorter
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_eng_taxi_ibis_dagster_spark.sources.sinks import WriteReport, observe_rows
 
 logger = logging.getLogger("data_eng_taxi_ibis_dagster_spark.pipeline")
 
@@ -58,14 +67,15 @@ class Definitions:
               name: str | None = None) -> Callable:
         """Register a function as an asset. The function receives the
         SparkSession and the materialized values of its declared deps,
-        in declaration order."""
+        in declaration order. The registered ``Asset.fn`` runs it and
+        then the asset's one action, returning ``(value, rows)``."""
 
         def deco(fn: Callable) -> Callable:
             asset_name = name or fn.__name__
             if asset_name in self.assets:
                 raise ValueError(f"duplicate asset: {asset_name}")
             self.assets[asset_name] = Asset(
-                name=asset_name, fn=fn, deps=tuple(deps),
+                name=asset_name, fn=_run_once(fn), deps=tuple(deps),
                 compute_kind=compute_kind,
                 description=(fn.__doc__ or "").strip(),
             )
@@ -80,8 +90,8 @@ class Definitions:
     def materialize(self, spark: SparkSession,
                     selection: list[str] | None = None) -> dict[str, AssetResult]:
         """Run assets in dependency order (the reference's ``dagster
-        materialize``), logging per-asset wall-clock and row counts —
-        the O2 observability contract."""
+        materialize``), logging per-asset wall-clock (build and
+        execution) and row counts — the O2 observability contract."""
         wanted = set(selection or self.assets)
         # pull in transitive deps of the selection
         frontier = list(wanted)
@@ -99,12 +109,11 @@ class Definitions:
             dep_values = [results[d].value for d in asset.deps]
             start = time.perf_counter()
             try:
-                value = asset.fn(spark, *dep_values)
+                value, rows = asset.fn(spark, *dep_values)
             except Exception:
                 logger.exception("asset %s failed", name)
                 raise
             seconds = time.perf_counter() - start
-            rows = value.count() if isinstance(value, DataFrame) else None
             results[name] = AssetResult(name, value, seconds, rows)
             logger.info(
                 "asset %s (%s) materialized in %.2fs%s",
@@ -112,6 +121,21 @@ class Definitions:
                 f", rows={rows}" if rows is not None else "",
             )
         return results
+
+
+def _run_once(fn: Callable[..., Any]) -> Callable[..., tuple[Any, int | None]]:
+    """Wrap an asset function with the asset's one action: a DataFrame
+    result is checkpointed with its row count observed on the same job;
+    a sink's ``WriteReport`` carries its rows already."""
+
+    def run(spark: SparkSession, *deps: Any) -> tuple[Any, int | None]:
+        value = fn(spark, *deps)
+        if isinstance(value, DataFrame):
+            value, obs = observe_rows(value)
+            return value.localCheckpoint(eager=True), obs.get["rows"]
+        return value, value.rows if isinstance(value, WriteReport) else None
+
+    return run
 
 
 def training_data_definitions(sf_dir: str, out_dir: str, *,
@@ -301,11 +325,9 @@ def taxi_pipeline_definitions(sf_dir: str, out_dir: str) -> Definitions:
 
     @defs.asset(compute_kind="pyspark")
     def ingest_trips(spark: SparkSession) -> DataFrame:
-        """S1/K1: glob-scan the source parquet, materialize the working
-        table (temp view here; saveAsTable in a warehouse deployment)."""
-        df = scan_parquet(spark, f"{sf_dir}/lineitem.parquet")
-        df.createOrReplaceTempView("trips")
-        return df
+        """S1/K1: glob-scan the source parquet into the working table
+        (a checkpoint here; saveAsTable in a warehouse deployment)."""
+        return scan_parquet(spark, f"{sf_dir}/lineitem.parquet")
 
     @defs.asset(deps=("ingest_trips",), compute_kind="pyspark")
     def export_trips(spark: SparkSession, trips: DataFrame):
@@ -324,7 +346,9 @@ def taxi_pipeline_definitions(sf_dir: str, out_dir: str) -> Definitions:
 
     @defs.asset(deps=("ingest_trips",), compute_kind="spark_sql")
     def analyse_sql(spark: SparkSession, trips: DataFrame) -> DataFrame:
-        """The flagship analysis, SQL path over the registered view."""
+        """The flagship analysis, SQL path over a view of the working
+        table."""
+        trips.createOrReplaceTempView("trips")
         return spark.sql("""
             SELECT l_quantity,
                    CAST(CAST(SUM(CAST(CAST(FLOOR(l_extendedprice * 100 + 0.5)

@@ -352,23 +352,13 @@ def quantile_sketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted LSH index); the executed plan is the grid-only read, so
     ``scripts/profile_query.py`` reports the writes as ``build_s`` and
     ``build_jobs`` and the without-rescan read as ``exec_s``."""
-    import hashlib
-    import os
-    import tempfile
-    import uuid
-
     from data_eng_taxi_ibis_dagster_spark.operators import qsketch as Q
-    from data_eng_taxi_ibis_dagster_spark.sources.sinks import (
-        track_temp_dir,
-    )
+    from data_eng_taxi_ibis_dagster_spark.sources.sinks import scratch_dir
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag",
         F.col("l_quantity").cast("long").alias("qty"))
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(),
-                        f"sg_qsk_rollup_{tag}_{uuid.uuid4().hex[:12]}")
-    track_temp_dir(path)
+    path = scratch_dir("sg_qsk_rollup", sf_dir)
     for cycle, keep in enumerate((0, 1)):
         batch = li.filter(F.pmod(F.col("l_orderkey"), F.lit(2)) == keep)
         sk = Q.histogram_sketch(batch, F.col("qty"), width=1,

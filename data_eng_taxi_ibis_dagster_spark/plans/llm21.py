@@ -276,23 +276,13 @@ def kmv_incremental_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     never events. Sketch writes run at plan build (the offline ingest
     half, the persisted-LSH-index convention); the timed plan is the
     array-only read."""
-    import hashlib
-    import os
-    import tempfile
-    import uuid
-
-    from data_eng_taxi_ibis_dagster_spark.sources.sinks import (
-        track_temp_dir,
-    )
+    from data_eng_taxi_ibis_dagster_spark.sources.sinks import scratch_dir
 
     e = load_table(spark, sf_dir, "events").select(
         "event_id", F.date_trunc("day", F.col("ts")).alias("day"),
         "user_id")
     k = _kmv_k_for(spark, sf_dir)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(),
-                        f"sg_kmv_inc_{tag}_{uuid.uuid4().hex[:12]}")
-    track_temp_dir(path)
+    path = scratch_dir("sg_kmv_inc", sf_dir)
     for cycle, keep in enumerate((0, 1)):
         batch = e.filter(F.pmod(F.col("event_id"), F.lit(2)) == keep)
         sk = K.kmv_sketch(batch, F.col("user_id"), k=k,
@@ -424,20 +414,10 @@ def cms_incremental_heavy_hitters(spark: SparkSession,
     convention); the probe side (exact top-20, est-vs-exact output)
     scans raw rows by design — it is the verification surface, not
     the maintained state."""
-    import hashlib
-    import os
-    import tempfile
-    import uuid
-
-    from data_eng_taxi_ibis_dagster_spark.sources.sinks import (
-        track_temp_dir,
-    )
+    from data_eng_taxi_ibis_dagster_spark.sources.sinks import scratch_dir
 
     d = load_table(spark, sf_dir, "documents")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(),
-                        f"sg_cms_inc_{tag}_{uuid.uuid4().hex[:12]}")
-    track_temp_dir(path)
+    path = scratch_dir("sg_cms_inc", sf_dir)
     for cycle, keep in enumerate((0, 1)):
         batch = (d.filter(F.pmod(F.col("doc_id"), F.lit(2)) == keep)
                  .select("source", F.explode(T.tokens("text")).alias("tok")))

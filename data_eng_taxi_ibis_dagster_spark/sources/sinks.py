@@ -10,16 +10,27 @@ The reference's single-file export is a local-pipeline quirk; at scale a
 single output file serializes the whole job through one task, so
 ``single_file`` defaults to False and multi-part output (one file per
 partition) is the norm. Writers return basic observability facts (rows,
-bytes) mirroring the reference's Loguru logging (O2).
+bytes) mirroring the reference's Loguru logging (O2): ``rows`` is the
+number of rows the call wrote, counted by an ``Observation`` on the write
+job itself, never by reading the output back. For the partition-replacing
+writers (``overwrite_partitions``, ``merge_upsert_partitioned``) that is
+the rows of the replaced partitions, not of the whole table; ``bytes`` is
+the size of the whole output tree.
 """
 
 from __future__ import annotations
 
+import atexit
 import glob
+import hashlib
 import os
-from dataclasses import dataclass
+import shutil
+import tempfile
+import uuid
+from dataclasses import dataclass, replace
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 @dataclass(frozen=True)
@@ -27,6 +38,24 @@ class WriteReport:
     path: str
     rows: int
     bytes: int
+
+
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count observed as ``obs.get["rows"]`` once the
+    first action on the returned frame has run — no job of its own."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def _write(out: DataFrame, path: str,
+           partition_by: tuple[str, ...] = ()) -> WriteReport:
+    """Every parquet sink's one action: write ``out`` with its row count
+    observed on the write job. ``out`` is the frame exactly as handed to
+    the writer: an observation below a range exchange would also count
+    the rows of the exchange's bounds-sampling job."""
+    out, obs = observe_rows(out)
+    out.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+    return WriteReport(path=path, rows=obs.get["rows"], bytes=_tree_bytes(path))
 
 
 def _tree_bytes(path: str) -> int:
@@ -39,74 +68,48 @@ def _tree_bytes(path: str) -> int:
     )
 
 
-#: Max live scratch dirs PER BUILDER KEY (one key ≈ one query × one
-#: sf_dir); older same-key dirs are rmtree'd on the next registration,
-#: and one process-wide atexit sweep reclaims whatever is live at exit.
+#: Max live scratch dirs per builder key (one query name × one sf_dir);
+#: older same-key dirs are removed by the next ``scratch_dir`` call, and
+#: one atexit sweep removes whatever is live at exit.
 TEMP_DIR_LRU_CAP = 2
 _TEMP_DIRS: dict[str, list[str]] = {}
-_TEMP_DIRS_ATEXIT_ARMED = False
 
 
+@atexit.register
 def _sweep_temp_dirs() -> None:
-    import shutil
-
     for dirs in _TEMP_DIRS.values():
         for p in dirs:
             shutil.rmtree(p, ignore_errors=True)
 
 
-def track_temp_dir(path: str, key: str | None = None) -> None:
-    """Register a per-plan-build scratch dir (a persisted LSH index, an
-    incremental sketch rollup, ...): atexit reclamation + a per-KEY
-    LRU so a long-lived interpreter rebuilding such plans repeatedly
-    (notebook, server, parametrized sweeps) cannot grow tempdir
-    unboundedly within one session. ``key`` defaults
-    to the dir basename minus its trailing uniqueness segment (the
-    ``<name>_<tag>_<uuid>`` convention every caller uses), so eviction
-    only ever reclaims SUPERSEDED BUILDS OF THE SAME QUERY — a sweep
-    that builds many different queries before executing any of them
-    evicts nothing (a global count-based LRU would delete query A's
-    still-unexecuted dir because queries B..I registered after it).
-    A holder of a plan more than
-    TEMP_DIR_LRU_CAP rebuilds stale of the SAME query sees a
-    missing-path read — the documented, narrow staleness window.
-    One process-wide atexit sweep replaces the per-call
-    ``atexit.register`` closures (which grew without bound in exactly
-    the long-lived-process scenario the LRU targets)."""
-    import atexit
-    import os
-    import shutil
-
-    global _TEMP_DIRS_ATEXIT_ARMED
-    if not _TEMP_DIRS_ATEXIT_ARMED:
-        atexit.register(_sweep_temp_dirs)
-        _TEMP_DIRS_ATEXIT_ARMED = True
-    if key is None:
-        base = os.path.basename(path.rstrip("/"))
-        # Only strip the trailing segment when the basename actually
-        # follows the <name>_<tag>_<hexuuid> convention; a
-        # nonconforming caller keeps its full basename as the key, so
-        # it can never alias into (and evict from) another query's LRU
-        # bucket. Such callers should pass ``key``
-        # explicitly to get the superseded-builds LRU bound.
-        import re
-
-        if re.fullmatch(r".+_[0-9a-f]{8,32}", base):
-            key = base.rsplit("_", 1)[0]
-        else:
-            key = base
+def scratch_dir(name: str, sf_dir: str) -> str:
+    """A fresh path ``<tempdir>/<name>_<tag>_<uuid>`` (``tag`` hashes
+    ``sf_dir``) for the data one plan build persists (an LSH index, an
+    incremental sketch rollup, ...). A fresh dir per build keeps every
+    returned plan self-contained and safe against concurrent builders;
+    it must outlive the lazily-read plan it backs, so it is removed at
+    interpreter exit, or once TEMP_DIR_LRU_CAP newer dirs of the same
+    key ``<name>_<tag>`` exist. That bounds a long-lived session that
+    rebuilds plans (notebook, server, parametrized sweeps), while a
+    sweep that builds many different queries before executing any of
+    them evicts nothing. A holder of a plan more than TEMP_DIR_LRU_CAP
+    rebuilds stale of the same query sees a missing-path read."""
+    key = f"{name}_{hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]}"
+    path = os.path.join(tempfile.gettempdir(), f"{key}_{uuid.uuid4().hex[:12]}")
     dirs = _TEMP_DIRS.setdefault(key, [])
     dirs.append(path)
     while len(dirs) > TEMP_DIR_LRU_CAP:
         shutil.rmtree(dirs.pop(0), ignore_errors=True)
+    return path
 
 
 def materialize_table(df: DataFrame, name: str, mode: str = "overwrite") -> int:
     """K1 — idempotent full-refresh materialization into the session
     catalog (parquet-backed managed table). Equivalent of the reference's
-    drop-then-CTAS ingest."""
-    df.write.mode(mode).format("parquet").saveAsTable(name)
-    return df.sparkSession.table(name).count()
+    drop-then-CTAS ingest. Returns the rows written."""
+    out, obs = observe_rows(df)
+    out.write.mode(mode).format("parquet").saveAsTable(name)
+    return obs.get["rows"]
 
 
 def export_parquet(df: DataFrame, path: str, single_file: bool = False,
@@ -117,13 +120,7 @@ def export_parquet(df: DataFrame, path: str, single_file: bool = False,
     (coalesce(1) — fine for small local outputs, wrong at scale);
     ``partition_by`` writes a hive-partitioned tree, the 100 TB shape.
     """
-    out = df.coalesce(1) if single_file else df
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    rows = df.sparkSession.read.parquet(path).count()
-    return WriteReport(path=path, rows=rows, bytes=_tree_bytes(path))
+    return _write(df.coalesce(1) if single_file else df, path, partition_by)
 
 
 def write_clustered(df: DataFrame, path: str, *, cluster_by: str,
@@ -153,12 +150,7 @@ def write_clustered(df: DataFrame, path: str, *, cluster_by: str,
         else df.repartitionByRange(n_parts, *partition_by, cluster_by)
         .sortWithinPartitions(*partition_by, cluster_by)
     )
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    rows = df.sparkSession.read.parquet(path).count()
-    return WriteReport(path=path, rows=rows, bytes=_tree_bytes(path))
+    return _write(out, path, partition_by)
 
 
 def overwrite_partitions(df: DataFrame, path: str,
@@ -175,11 +167,9 @@ def overwrite_partitions(df: DataFrame, path: str,
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+        return _write(df, path, partition_by)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    rows = spark.read.parquet(path).count()
-    return WriteReport(path=path, rows=rows, bytes=_tree_bytes(path))
 
 
 def merge_upsert_partitioned(spark, path: str, updates: DataFrame, *,
@@ -216,8 +206,7 @@ def merge_upsert_partitioned(spark, path: str, updates: DataFrame, *,
     parts = [r.asDict() for r in
              updates.select(*partition_by).distinct().collect()]
     if not parts:
-        return WriteReport(path=path, rows=spark.read.parquet(path).count(),
-                           bytes=_tree_bytes(path))
+        return WriteReport(path=path, rows=0, bytes=_tree_bytes(path))
     touched = reduce(
         lambda a, b: a | b,
         (reduce(and_, (F.col(c) == F.lit(v) for c, v in p.items()))
@@ -244,9 +233,6 @@ def compact_parquet(spark, path: str, *, target_file_bytes: int = 128 << 20,
     In-place by default (write to a temp sibling, swap); pass
     ``out_path`` to compact into a new location instead.
     """
-    import shutil
-    import tempfile
-
     src_bytes = _tree_bytes(path)
     n_files = max(1, round(src_bytes / target_file_bytes))
     df = spark.read.parquet(path)
@@ -256,13 +242,12 @@ def compact_parquet(spark, path: str, *, target_file_bytes: int = 128 << 20,
     # repartition (round-robin) balances bytes across files regardless of
     # upstream partitioning; coalesce would skip the shuffle but inherits
     # upstream skew and can't *increase* partition count.
-    df.repartition(n_files).write.mode("overwrite").parquet(dest)
+    report = _write(df.repartition(n_files), dest)
     if in_place:
         shutil.rmtree(path)
         os.rename(dest, path)
-        dest = path
-    rows = spark.read.parquet(dest).count()
-    return WriteReport(path=dest, rows=rows, bytes=_tree_bytes(dest))
+        report = replace(report, path=path)
+    return report
 
 
 def export_orc(df: DataFrame, path: str, mode: str = "overwrite") -> int:
@@ -329,6 +314,4 @@ def write_zorder(df: DataFrame, path: str, *, cols: tuple[str, str],
         .sortWithinPartitions("_z")
         .drop("_z")
     )
-    out.write.mode("overwrite").parquet(path)
-    rows = df.sparkSession.read.parquet(path).count()
-    return WriteReport(path=path, rows=rows, bytes=_tree_bytes(path))
+    return _write(out, path)

@@ -363,32 +363,30 @@ def test_lsh_fixture_bucket_bounds(spark):
             f"oracles assume NO bucket is ever dropped on the fixtures")
 
 
-def test_index_dir_lru_bounds_session_growth(tmp_path):
-    """Round-8 advisor: per-build index dirs were reclaimed only at
-    atexit, so a long-lived interpreter rebuilding the plan repeatedly
-    accumulated tempdir disk for the whole session. Round-9 review
-    hardening: the LRU is PER BUILDER KEY — rebuilding the SAME query
-    evicts its own superseded dirs, while registering many DIFFERENT
-    queries' dirs (a sweep building everything before executing
-    anything) evicts nothing across keys. Basenames follow the real
-    callers' <name>_<tag>_<hexuuid> convention — round-10 hardening
-    derives a shared key only for that shape (a nonconforming name
-    keeps its full basename as key and is never LRU-pooled)."""
+def test_index_dir_lru_bounds_session_growth(tmp_path, monkeypatch):
+    """Per-build scratch dirs are removed at exit, so a long-lived
+    interpreter rebuilding a plan repeatedly would accumulate them for
+    the whole session. The LRU is PER BUILDER KEY (name × sf_dir):
+    rebuilding the SAME query evicts its own superseded dirs, while
+    registering many DIFFERENT queries' dirs (a sweep building
+    everything before executing anything) evicts nothing across
+    keys."""
     import os
+    import tempfile
 
     from data_eng_taxi_ibis_dagster_spark.sources import sinks
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     made, other = [], []
     try:
         for i in range(sinks.TEMP_DIR_LRU_CAP + 3):
-            p = str(tmp_path / f"sg_same_query_{i:012x}")
+            p = sinks.scratch_dir("sg_same_query", "/data/sf")
             os.makedirs(p)
-            sinks.track_temp_dir(p)
             made.append(p)
-            q = str(tmp_path / f"sg_other_{i}_{i:012x}")  # distinct keys
+            q = sinks.scratch_dir(f"sg_other_{i}", "/data/sf")  # distinct keys
             os.makedirs(q)
-            sinks.track_temp_dir(q)
             other.append(q)
+        assert all(os.path.dirname(p) == str(tmp_path) for p in made + other)
         live = [p for p in made if os.path.isdir(p)]
         assert len(live) == sinks.TEMP_DIR_LRU_CAP
         assert live == made[-sinks.TEMP_DIR_LRU_CAP:], (

@@ -4,6 +4,7 @@ DataFrame-vs-SQL result equivalence."""
 
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 
 from data_eng_taxi_ibis_dagster_spark.pipeline import (
     Definitions,
@@ -21,10 +22,52 @@ def test_dependency_order_and_results(spark, sf_dir, tmp_path):
     assert all(r.seconds >= 0 for r in results.values())
     assert results["ingest_trips"].rows == 6000
     assert results["export_trips"].value.rows == 6000
+    _assert_rows_match_values(results)
     # the reference's engine-equivalence thesis: DF path == SQL path
     df_res = results["analyse_dataframe"].value.toPandas().sort_values("l_quantity").reset_index(drop=True)
     sql_res = results["analyse_sql"].value.toPandas().sort_values("l_quantity").reset_index(drop=True)
     pd.testing.assert_frame_equal(df_res, sql_res)
+
+
+def _assert_rows_match_values(results):
+    for r in results.values():
+        if isinstance(r.value, DataFrame):
+            assert r.rows == r.value.count(), r.name
+
+
+def test_asset_lineage_runs_once(spark):
+    """A DataFrame asset's lineage runs exactly once per materialize:
+    its row count is observed on the one action that materializes it,
+    and its consumers read that materialization instead of re-deriving
+    it. Every evaluation of the source rows bumps an accumulator."""
+    from pyspark.sql import functions as F
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def keep(x):
+        seen.add(1)
+        return True
+
+    defs = Definitions()
+
+    @defs.asset()
+    def source(spark):
+        return spark.range(0, 100, numPartitions=2).filter(keep("id"))
+
+    @defs.asset(deps=("source",))
+    def evens(spark, src):
+        return src.filter(F.col("id") % 2 == 0)
+
+    @defs.asset(deps=("source",))
+    def total(spark, src):
+        return src.agg(F.sum("id").alias("s"))
+
+    results = defs.materialize(spark)
+    assert results["evens"].value.count() == 50
+    assert results["total"].value.collect()[0]["s"] == 4950
+    assert results["source"].rows == 100
+    assert seen.value == results["source"].rows
 
 
 def test_selection_pulls_transitive_deps(spark, sf_dir, tmp_path):
@@ -78,6 +121,7 @@ def test_training_data_pipeline_end_to_end(spark, sf_dir, tmp_path):
     assert n_gated < n_filtered
     # the fixture plants exact + near duplicates: both stages must bite
     assert n_exact < n_filtered or n_final < n_exact
+    _assert_rows_match_values(results)
     stats = results["corpus_stats"].value.toPandas()
     assert stats["n_docs"].sum() == n_final
     assert (stats["n_tokens"] > 0).all()

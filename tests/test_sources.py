@@ -114,7 +114,8 @@ def test_overwrite_partitions_is_incremental(spark, sf_dir, tmp_path):
     n_one = one.count()
     # re-process one partition with a marker value
     redo = one.withColumn("o_totalprice", F.lit(-1.0))
-    overwrite_partitions(redo, path, partition_by=("o_orderpriority",))
+    report = overwrite_partitions(redo, path, partition_by=("o_orderpriority",))
+    assert report.rows == n_one  # rows written, not the table's rows
     after = spark.read.parquet(path)
     assert after.count() == n_total  # siblings untouched
     assert after.filter("o_totalprice = -1.0").count() == n_one
@@ -213,10 +214,16 @@ def test_merge_upsert_partitioned(spark, sf_dir, tmp_path):
          (10_000_000, 42.0, "1-URGENT")],               # insert
         ["o_orderkey", "o_totalprice", "o_orderpriority"],
     )
-    merge_upsert_partitioned(spark, path, updates, key="o_orderkey",
-                             partition_by=("o_orderpriority",))
+    report = merge_upsert_partitioned(spark, path, updates, key="o_orderkey",
+                                      partition_by=("o_orderpriority",))
     after = spark.read.parquet(path)
     assert after.count() == n_total + 1
+    # rows written = the rewritten partition, not the whole table
+    assert report.rows == after.filter("o_orderpriority = '1-URGENT'").count()
+    noop = merge_upsert_partitioned(spark, path, updates.limit(0),
+                                    key="o_orderkey",
+                                    partition_by=("o_orderpriority",))
+    assert noop.rows == 0
     assert after.filter(
         F.col("o_orderkey") == victim["o_orderkey"]
     ).select("o_totalprice").first()[0] == -7.0
