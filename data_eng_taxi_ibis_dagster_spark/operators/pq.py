@@ -26,7 +26,13 @@ Every search here is one pipeline; the codebook is a *DataFrame*
    persisted one read with partition pruning (``search_ivfpq_index``
    over ``write_ivfpq_index``), or a matryoshka prefix shortlist
    (``retrieval_stack``). The inverted file is built by one
-   ``_inverted_file`` and probed by one ``_probe_scores``.
+   ``_inverted_file`` and probed by one ``_probe_scores``. Its coarse
+   quantizer is the Lloyd E-step's: the n lowest-id vectors
+   (``similarity._seeds``), collected once, and each row's nearest
+   list — or a query's ``nprobe`` nearest — by the row-local
+   literal-centroid kernel ``similarity._nearest``: no cross join, no
+   window, nothing shuffled. The persisted index stores that centroid
+   list as its side table and probes against it the same way.
 4. **score** — reconstruct row-locally from the broadcast codebook and
    take the sequential-fold cosine against the full-precision query,
    bit-compatible with DuckDB ``list_dot_product`` so the audit twins
@@ -52,12 +58,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from data_eng_taxi_ibis_dagster_spark.operators.similarity import (
     ID_COL,
     VEC_COL,
     _lloyd,
+    _nearest,
+    _seeds,
     _topk,
     as_double,
     cosine,
@@ -214,39 +221,33 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
 # IVF-PQ: coarse inverted lists over PQ codes (FAISS IVFPQ shape)
 # ---------------------------------------------------------------------------
 
-def coarse_centroids(corpus: DataFrame, *, n_centroids: int = 8) -> DataFrame:
-    """Deterministic coarse quantizer ``(centroid_id, cent)``: the n
-    lowest-id corpus vectors (a real deployment trains k-means offline
-    — ``lloyd_assignments`` — and broadcasts the result; the join shape
-    downstream is identical either way)."""
-    return F.broadcast(
-        corpus.orderBy(ID_COL).limit(n_centroids)
-        .select(F.col(ID_COL).alias("centroid_id"),
-                as_double(VEC_COL).alias("cent")))
+def coarse_centroids(corpus: DataFrame, *, n_centroids: int = 8) -> list:
+    """Deterministic coarse quantizer, collected once: ``[(centroid_id,
+    cent)]``, the ``similarity._seeds`` rule over the corpus vectors —
+    the n lowest non-null ids, ``centroid_id`` being the seed's id (a
+    real deployment trains k-means offline — ``lloyd_assignments`` —
+    and inlines the result the same way)."""
+    return _seeds(corpus.select(F.col(ID_COL).alias("_id"),
+                                as_double(VEC_COL).alias("_v")),
+                  n_centroids)[0]
 
 
-def assign_lists(df: DataFrame, cents: DataFrame, idname: str, vecname: str,
+def assign_lists(df: DataFrame, cents: list, idname: str, vecname: str,
                  topn: int) -> DataFrame:
     """Nearest-``topn`` coarse lists per row, ``(idname, vecname,
-    centroid_id)`` with the row's vector as ``vecname``: row-relative
-    window over the broadcast centroid cross product (groups are
-    n_centroids-sized — bounded by construction)."""
-    scored = (
-        df.select(F.col(ID_COL).alias(idname), as_double(VEC_COL).alias(vecname))
-        .crossJoin(cents)
-        .select(idname, vecname, "centroid_id",
-                cosine(F.col(vecname), F.col("cent")).alias("_csim"))
-    )
-    w = Window.partitionBy(idname).orderBy(
-        F.col("_csim").desc(), F.col("centroid_id").asc())
-    return (
-        scored.withColumn("_crnk", F.row_number().over(w))
-        .filter(F.col("_crnk") <= topn)
-        .drop("_csim", "_crnk")
-    )
+    centroid_id)`` with the row's vector as ``vecname``: the row-local
+    ``similarity._nearest`` kernel by cosine against the literal
+    centroids ``cents`` (ties to the lower centroid id) — no join, no
+    window, nothing shuffled."""
+    ids = F.array(*[F.lit(i) for i, _ in cents])
+    near = _nearest(
+        df.select(F.col(ID_COL).alias(idname), as_double(VEC_COL).alias(vecname)),
+        vecname, [[c for _, c in cents]], lambda v, c: -cosine(v, c), topn)
+    return near.select(idname, vecname, F.explode(
+        F.transform("_near", lambda x: ids[x["c"]])).alias("centroid_id"))
 
 
-def _inverted_file(corpus: DataFrame, codebook: DataFrame, cents: DataFrame,
+def _inverted_file(corpus: DataFrame, codebook: DataFrame, cents: list,
                    m: int, dim: int) -> DataFrame:
     """The inverted file ``(match_id, centroid_id, codes)``: every
     corpus vector in its one nearest coarse list, with its PQ codes."""
@@ -309,28 +310,30 @@ def write_ivfpq_index(corpus: DataFrame, codebook: DataFrame, path: str,
     a probe reads ONLY its lists' partitions (Spark partition pruning;
     asserted in tests via ``PartitionFilters``), so search I/O is
     nprobe/n_centroids of the code bytes, which are themselves 32×
-    smaller than the raw vectors. The codebook and coarse centroids
-    persist as small side tables under the same root."""
+    smaller than the raw vectors. The codebook and the coarse
+    centroids, collected once for the lists, persist as small side
+    tables under the same root."""
     cents = coarse_centroids(corpus, n_centroids=n_centroids)
     (_inverted_file(corpus, codebook, cents, m, dim)
      .write.mode("overwrite").partitionBy("centroid_id")
      .parquet(f"{path}/lists"))
     codebook.write.mode("overwrite").parquet(f"{path}/codebook")
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
+    corpus.sparkSession.createDataFrame(cents, corpus.select(
+        F.col(ID_COL).alias("centroid_id"), as_double(VEC_COL).alias("cent")
+    ).schema).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
 def search_ivfpq_index(spark: SparkSession, path: str, queries: DataFrame,
                        *, nprobe: int = 2, k: int = 10) -> DataFrame:
-    """Search a materialized IVF-PQ index. The probed list ids are
-    resolved first (bounded collect: |queries|·nprobe ints) and pushed
-    into the scan as a ``centroid_id IN (...)`` partition filter, so
-    unprobed partitions are never listed, opened, or read."""
-    cents = F.broadcast(spark.read.parquet(f"{path}/centroids"))
-    # materialize once: the probe relation feeds both the probe-id
-    # collect and the search join — without truncation the
-    # query-scan + centroid window would execute twice
-    probes = assign_lists(queries, cents, "query_id", "qv", nprobe) \
-        .localCheckpoint(eager=True)
+    """Search a materialized IVF-PQ index. The probes are assigned
+    against the persisted centroids (a collect of n_centroids rows),
+    and the probed list ids are resolved first (bounded collect:
+    |queries|·nprobe ints) and pushed into the scan as a
+    ``centroid_id IN (...)`` partition filter, so unprobed partitions
+    are never listed, opened, or read."""
+    cents = sorted(tuple(r) for r in
+                   spark.read.parquet(f"{path}/centroids").collect())
+    probes = assign_lists(queries, cents, "query_id", "qv", nprobe)
     probe_ids = [r["centroid_id"] for r in
                  probes.select("centroid_id").distinct().collect()]
     inv = (spark.read.parquet(f"{path}/lists")

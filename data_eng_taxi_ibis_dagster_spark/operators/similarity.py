@@ -2,8 +2,11 @@
 verifiable baseline, sign-random-projection LSH as the scale path, and
 the steps every vector search in this package shares — the per-query
 top-k cut (:func:`_topk`), the exact shortlist re-rank
-(:func:`refine_topk`) and one grouped Lloyd loop (:func:`_lloyd`,
-behind k-means, SemDeDup and the PQ codebooks of ``pq.py``).
+(:func:`refine_topk`), one seed rule (:func:`_seeds`), one row-local
+nearest-centroid kernel (:func:`_nearest`) and one grouped Lloyd loop
+(:func:`_lloyd`, behind k-means, SemDeDup and the PQ codebooks of
+``pq.py``; the seed rule and kernel are also ``pq.py``'s IVF coarse
+quantizer).
 
 Vector math is expressed with ``zip_with`` / ``aggregate`` higher-order
 functions — JVM-evaluated, no UDF, and the sequential left-fold matches
@@ -258,7 +261,12 @@ def cosine_threshold_pairs_blocked(df: DataFrame, threshold: float, *,
 
     1. ``n_blocks`` deterministic centroids (lowest-id vectors) are
        broadcast; every vector is assigned to its angularly-nearest
-       centroid (row-local argmax over B cosines, no shuffle).
+       centroid by a cross join of every vector with every centroid
+       and a ``row_number`` window partitioned by ``_id`` — a
+       corpus-wide exchange and n·B cosine evaluations, which with
+       the derived B ≈ n/256 is quadratic in the corpus. (A plan
+       literal, as in :func:`_nearest`, does not fit: B grows with the
+       corpus.)
     2. Per-block angular radius ``r = max θ(v, centroid)`` — one tiny
        B-row aggregate.
     3. Block-pair pruning by the spherical triangle inequality:
@@ -371,27 +379,55 @@ def squared_l2(a: Column, b: Column) -> Column:
     )
 
 
-def _assign(points: DataFrame, books: list, group: str | None = None
-            ) -> DataFrame:
-    """The Lloyd E-step: row-local argmin of each ``(_id, [group,] _v)``
-    row against its group's centroids ``books[g]``, inlined into the
-    plan as one literal (no join, no shuffle); ties go to the lowest
-    cluster index. Returns ``(_id, [group,] _v, cluster, _d2)``, where
-    ``_d2`` is the squared distance to the assigned centroid."""
+def _seeds(points: DataFrame, k: int, *, groups: int = 1,
+           group: str | None = None) -> list:
+    """The one seed rule of every quantizer here: per group of the
+    ``(_id, [group,] _v)`` relation, the ``(_id, _v)`` of the k lowest
+    non-null ids, in id order, from one collect of k·groups rows. This
+    is what the strict SQL audits compute (DuckDB sorts NULLs last). k
+    shrinks to the number of seeds; no seed is a ValueError."""
+    books: list[list[tuple]] = [[] for _ in range(groups)]
+    for r in (points.filter(F.col("_id").isNotNull()).orderBy("_id")
+              .limit(k * groups).collect()):
+        books[r[group] if group else 0].append((r["_id"], list(r["_v"])))
+    k = min(k, *map(len, books))
+    if k == 0:
+        raise ValueError("quantizer input has no row with a non-null id")
+    return [b[:k] for b in books]
+
+
+def _nearest(points: DataFrame, v: str, books: list, dist, n: int,
+             group: str | None = None) -> DataFrame:
+    """The one row-local quantizer kernel: ``points`` plus ``_near``,
+    the ``n`` centroids of ``books`` nearest to the vector column ``v``
+    as ``array<struct<d, c>>`` — ``d = dist(v, centroid)`` (smaller is
+    nearer), ``c`` the centroid's index — ordered by (d, c), so ties go
+    to the earliest seed. ``books`` is one list of centroids, or one
+    per group (indexed by the ``group`` column), inlined into the plan
+    as one literal: no join, no shuffle.
+
+    ``_near`` gets its own projection for its readers: higher-order
+    functions escape subexpression elimination, so inlining it would
+    copy the centroid literal (and the folds) into the plan once per
+    reference."""
     per_group = [F.array(*[F.array(*[F.lit(float(x)) for x in c])
                            for c in b]) for b in books]
-    cands = F.array(*per_group)[F.col(group)] if group else per_group[0]
-    # the distances get their own projection, read by the argmin and
-    # _d2: higher-order functions escape subexpression elimination, so
-    # inlining them would copy the centroid literal (and the fold) into
-    # the plan once per reference
-    dists = points.withColumn("_dists", F.transform(
-        cands, lambda c: squared_l2(F.col("_v"), c)))
-    return dists.select(
+    cents = F.array(*per_group)[F.col(group)] if group else per_group[0]
+    return points.withColumn("_near", F.slice(F.sort_array(F.transform(
+        cents, lambda c, i: F.struct(dist(F.col(v), c).alias("d"),
+                                     i.alias("c")))), 1, n))
+
+
+def _assign(points: DataFrame, books: list, group: str | None = None
+            ) -> DataFrame:
+    """The Lloyd E-step: :func:`_nearest` by squared distance, n = 1,
+    for each ``(_id, [group,] _v)`` row against its group's centroids
+    ``books[g]``. Returns ``(_id, [group,] _v, cluster, _d2)``, where
+    ``_d2`` is the squared distance to the assigned centroid."""
+    return _nearest(points, "_v", books, squared_l2, 1, group).select(
         "_id", *([group] if group else []), "_v",
-        (F.array_position("_dists", F.array_min("_dists")) - 1)
-        .cast("int").alias("cluster"),
-        F.array_min("_dists").alias("_d2"))
+        F.col("_near")[0]["c"].alias("cluster"),
+        F.col("_near")[0]["d"].alias("_d2"))
 
 
 def _lloyd(points: DataFrame, k: int, iters: int, *, groups: int = 1,
@@ -402,9 +438,7 @@ def _lloyd(points: DataFrame, k: int, iters: int, *, groups: int = 1,
     the subspace column), or the whole vector as one group. Returns
     the centroids after the last M-step, ``books[g][cluster]``.
 
-    * **Seeds** — per group, the vectors of the k lowest non-null ids
-      (what the strict SQL audits compute: DuckDB sorts NULLs last);
-      k shrinks to the number of seeds, and no seed is a ValueError.
+    * **Seeds** — :func:`_seeds`.
     * **E-step** — :func:`_assign`.
     * **M-step** — ``posexplode`` → exact decimal mean per (group,
       cluster, dim) cell: ONE shuffle of at most groups·k·d cells
@@ -415,16 +449,8 @@ def _lloyd(points: DataFrame, k: int, iters: int, *, groups: int = 1,
     runs produce identical centroids."""
     key = (lambda r: r[group]) if group else (lambda r: 0)
     gcols = [group] if group else []
-    seeds = (points.filter(F.col("_id").isNotNull()).orderBy("_id")
-             .limit(k * groups).collect())  # k lowest ids × groups
-    books: list[list[list[float]]] = [[] for _ in range(groups)]
-    for r in sorted(seeds, key=lambda r: (key(r), r["_id"])):
-        if len(books[key(r)]) < k:
-            books[key(r)].append(list(r["_v"]))
-    k = min(len(b) for b in books)
-    if k == 0:
-        raise ValueError("Lloyd input has no row with a non-null id")
-    books = [b[:k] for b in books]
+    books = [[v for _, v in b]
+             for b in _seeds(points, k, groups=groups, group=group)]
     d = len(books[0][0])
 
     for _ in range(iters):

@@ -244,9 +244,10 @@ def similarity_ivf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     production nprobe=2 query runs) with nprobe = n_centroids: probing
     every inverted list makes the candidate set the full corpus, so the
     result is PROVABLY the exact top-10 and the brute-force oracle
-    checks it hash-for-hash. Any drift in centroid selection, list
-    assignment, the probe-list join, candidate dedup, or re-rank
-    ordering breaks this strict twin."""
+    checks it hash-for-hash. Any drift in list assignment (a vector in
+    no list, or in two), the probe-list join, or re-rank ordering
+    breaks this strict twin; centroid selection, which every list
+    probed makes invisible here, is pinned by tests/test_pq.py."""
     from data_eng_taxi_ibis_dagster_spark.plans.llm2 import ivf_topk
 
     e = load_table(spark, sf_dir, "embeddings")

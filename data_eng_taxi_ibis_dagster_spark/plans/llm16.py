@@ -275,7 +275,7 @@ def similarity_ivfpq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     configuration: nprobe = n_centroids makes the candidate set the
     full corpus, and the identity codebook makes reconstruction
     lossless, so the result IS the brute-force top-10 the oracle
-    states. Drift in the coarse assignment window, the probe-list
+    states. Drift in the coarse assignment kernel, the probe-list
     equi-join, the encode/decode joins, or the re-rank ordering
     breaks this hash-checked twin."""
     emb = load_table(spark, sf_dir, "embeddings")

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from data_eng_taxi_ibis_dagster_spark.functions.exact import lsum, sql_lsum
 from data_eng_taxi_ibis_dagster_spark.operators import pq as PQ
@@ -45,28 +44,23 @@ def ivf_topk(e: DataFrame, *, n_centroids: int = 8, nprobe: int = 2,
     """The IVF pipeline shared by the production query
     (``similarity_ivf``, nprobe=2) and the strict audit twin
     (``similarity_ivf_audit``, nprobe=n_centroids ⇒ provably exact) —
-    one implementation, so a regression in assignment, probe-list join,
-    dedup, or re-rank breaks the hash-checked audit."""
-    # deterministic quantizer and nearest-list assignment: the shared
-    # IVF steps of operators/pq.py
+    one implementation, so a regression in assignment, probe-list join
+    or re-rank breaks the hash-checked audit. The quantizer and list
+    assignment are operators/pq.py's, the cut is ``similarity._topk``.
+    Each vector sits in exactly one list and a query's probes are
+    distinct, so no candidate pair repeats."""
     cents = PQ.coarse_centroids(e, n_centroids=n_centroids)
-    corpus = PQ.assign_lists(e, cents, "match_id", "mv", 1)  # 1 list each
+    corpus = PQ.assign_lists(e, cents, "match_id", "mv", 1)
     queries_df = PQ.assign_lists(e.filter(F.col("vec_id") < 5), cents,
                                  "query_id", "qv", nprobe)
     cands = (
         queries_df.join(corpus, "centroid_id")
         .filter(F.col("query_id") != F.col("match_id"))
-        .dropDuplicates(["query_id", "match_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("match_id").asc())
-    return (
+    return S._topk(
         cands.select("query_id", "match_id",
-                     S.cosine(F.col("qv"), F.col("mv")).alias("cosine_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .orderBy("query_id", "rnk")
-    )
+                     S.cosine(F.col("qv"), F.col("mv")).alias("cosine_sim")),
+        k).orderBy("query_id", "rnk")
 
 
 @query(
@@ -75,12 +69,13 @@ def ivf_topk(e: DataFrame, *, n_centroids: int = 8, nprobe: int = 2,
     tags=("E11",),
 )
 def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: a deterministic coarse quantizer (every nth vector
-    is a centroid — no RNG, no fitted model), vectors assigned to their
-    nearest centroid (inverted lists), queries probe the 2 nearest lists
-    only, exact cosine re-rank inside. The probe-list join replaces the
-    full scan — the IVF scale shape with none of the training
-    nondeterminism. Emits (query_id, match_id, cosine_sim, rnk)."""
+    """IVF-style ANN: a deterministic coarse quantizer (the 8 lowest-id
+    vectors are the centroids — no RNG, no fitted model), vectors
+    assigned to their nearest centroid (inverted lists), queries probe
+    the 2 nearest lists only, exact cosine re-rank inside. The
+    probe-list join replaces the full scan — the IVF scale shape with
+    none of the training nondeterminism. Emits (query_id, match_id,
+    cosine_sim, rnk)."""
     e = load_table(spark, sf_dir, "embeddings")
     return ivf_topk(e, n_centroids=8, nprobe=2, k=10)
 

@@ -72,6 +72,11 @@ def get_session(app_name: str = "data-eng-taxi-ibis-dagster-spark",
         .config("spark.ui.enabled",
                 os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.ui.port", "0")
+        # Python workers import the package too (UDF, mapInArrow and
+        # pandas-function bodies) and see neither the driver's working
+        # directory nor its sys.path: give them the package's parent.
+        .config("spark.executorEnv.PYTHONPATH",
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
     for key, value in SESSION_CONF.items():
         builder = builder.config(key, value)

@@ -61,9 +61,6 @@ def profile(spark, tracer: Tracer, name: str, builder, sf_dir: str) -> dict:
 
 def main(names: list[str]) -> None:
     os.environ["SPARK_GRAFT_UI"] = "true"
-    # Spark's Python workers import the package too (UDF bodies).
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR") or fixture_dir(ROOT, "0.1")
     from data_eng_taxi_ibis_dagster_spark.plans.registry import all_specs
     from data_eng_taxi_ibis_dagster_spark.session import get_session

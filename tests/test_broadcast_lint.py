@@ -4,11 +4,9 @@ so it is only ever safe on a relation whose size is BOUNDED BY
 CONSTRUCTION — fixed-cardinality dims, 1-row scalar aggregates,
 parameter-sized artifacts (codebooks, merge tables, bucket offsets),
 probe/query sets. Forcing it on anything that scales with the corpus is
-a driver/executor OOM at 100 TB: round 6's one scale weak was exactly
-this (``curation_stack`` force-broadcasting a corpus-order drop list),
-and round 7 removed the same class from the TPC-H pack (full
-customer/supplier/part sides now go unhinted; stats/AQE broadcast them
-while they fit).
+a driver/executor OOM at 100 TB — e.g. force-broadcasting a
+corpus-order drop list, or a full TPC-H customer/supplier/part side
+(those go unhinted; stats/AQE broadcast them while they fit).
 
 This lint makes the class unrepresentable: every ``F.broadcast`` call
 site in the package must be covered by a ``BROADCAST_BOUNDS`` entry
@@ -55,8 +53,6 @@ BROADCAST_BOUNDS = {
                         "and takes the hash-join path"),
     ("operators/order.py", "global_sort_index"):
         (1, "artifact", "<=buckets-row cumulative-offset relation"),
-    ("operators/pq.py", "coarse_centroids"):
-        (1, "artifact", "n_centroids x d literal centroid table"),
     ("operators/pq.py", "ivfpq_topk"):
         (1, "probe", "distinct probed centroid ids: <= |Q| * nprobe"),
     ("operators/pq.py", "pq_encode"):
@@ -66,8 +62,6 @@ BROADCAST_BOUNDS = {
     ("operators/pq.py", "retrieval_stack"):
         (4, "probe", "query set, stage-1/2 candidate ids (<=|Q| * k per "
                      "stage via WindowGroupLimit), query facets"),
-    ("operators/pq.py", "search_ivfpq_index"):
-        (1, "artifact", "persisted coarse-centroid table: n_centroids rows"),
     ("operators/similarity.py", "cosine_threshold_pairs_blocked"):
         (4, "artifact", "k-centroid table + B-row per-block radii (x2) + "
                         "B^2-row surviving block-pair list"),
@@ -138,8 +132,8 @@ def _broadcast_sites(pkg: str = PKG) -> tuple[
     or name — ``hint = F.broadcast``, ``b = F.broadcast; b(df)``, a
     broadcast passed as a callback — which detaches the hint from its
     argument so the per-call-site census cannot see what it is applied
-    to (round-7 advisor: ``operators/order.py``'s conditional ``hint``
-    binding was invisible to the lint).  Alias references need their
+    to (a conditional ``hint = F.broadcast if ... else`` binding is
+    invisible to a call-site count).  Alias references need their
     own declared bound covering everything the alias is applied to."""
     calls: dict[tuple[str, str], int] = {}
     aliases: dict[tuple[str, str], int] = {}
@@ -231,7 +225,7 @@ def test_every_broadcast_alias_is_bounded():
     """Aliased hints (``hint = F.broadcast``) detach the hint from its
     arguments, so each alias reference needs its own declared bound —
     without this, ``b = F.broadcast; b(corpus_df)`` would bypass the
-    census entirely (round-7 advisor finding)."""
+    census entirely."""
     _, aliases = _broadcast_sites()
     missing = {k: n for k, n in aliases.items()
                if k not in BROADCAST_ALIASES}
@@ -273,7 +267,7 @@ def test_alias_census_mechanism(tmp_path):
 
 
 def test_no_broadcast_of_raw_sf_scaling_tables():
-    """The specific round-6/7 finding class, pinned textually: no
+    """The forced-broadcast-of-a-base-table class, pinned textually: no
     ``F.broadcast(load_table(...))`` of an SF-scaling base table
     (customer/supplier/part/orders/lineitem/documents/embeddings/
     events), however filtered — a filter changes the constant, not the

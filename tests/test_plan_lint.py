@@ -29,8 +29,6 @@ BNLJ_ALLOWED = {
     "dedup_embedding_cosine",      # threshold join, embeddings broadcast
     "join_band_acctbal",           # band theta-join, small side broadcast
     "similarity_cosine_topk",      # brute-force cosine, probe broadcast
-    "similarity_ivf",              # probe×centroid assignment
-    "similarity_ivf_audit",        # same machinery, full probe list
     "global_sales_opportunity",    # TPC-H Q22: vs 1-row global avg
     "important_part_volume",       # TPC-H Q11: HAVING vs 1-row scalar
     "rfm_segmentation",            # distributed_rank: 1-row (min,max) scalar join ×3
@@ -53,10 +51,7 @@ BNLJ_ALLOWED = {
     "skyline_pareto_parts",        # distributed_prefix_max 1-row (min,max) join
     "bpe_merge_audit",             # 1-row vocab-stats scalar join onto the merge table
     "similarity_pq_audit",         # brute-force scoring stage, probe broadcast
-    "similarity_pq_topk",          # PQ scan scoring, probe broadcast
     "similarity_matryoshka_topk",  # truncated-prefix scan, probe broadcast
-    "similarity_ivfpq_audit",      # n_centroids-row coarse-quantizer broadcast
-    "similarity_ivfpq_topk",       # n_centroids-row coarse-quantizer broadcast
     "similarity_maxsim_topk",      # facet scoring, probe facet set broadcast
     "retrieval_stack_audit",       # stage-1 prefix scan, probe broadcast
     "retrieval_stack_topk",        # stage-1 prefix scan, probe broadcast
@@ -76,22 +71,21 @@ GLOBAL_WINDOW_ALLOWED = {
     # the fixture span — |rows| grows with wall-clock time covered,
     # not with corpus size (a decade of data is ~90k rows).
     "forecast_seasonal_naive",
-    # bounded_scores tie_split (operators/order, round 13): the
-    # cross-date offsets window runs over the per-DAY aggregate — one
-    # row per calendar day of the fixture span (a century is <37k
-    # rows), the same wall-clock-not-corpus bound as
+    # bounded_scores tie_split (operators/order): the cross-date
+    # offsets window runs over the per-DAY aggregate — one row per
+    # calendar day of the fixture span (a century is <37k rows), the
+    # same wall-clock-not-corpus bound as
     # forecast_seasonal_naive's hourly grid.
     "cum_revenue_by_orderdate",
     "running_peak_price_by_orderdate",
 }
 
 #: Declared scale bound for every PARTITIONED window key in the
-#: registry — round 5's `domain_cap_sample` showed a partitioned
-#: window can still be unbounded per group (one mega-domain through
-#: one task), so every partition key must name its bound here. Keyed
-#: by the FULL partition-column tuple of the window spec (round-6
-#: advisor: first-column keying let a second window reuse a
-#: whitelisted leading column unreviewed); values are
+#: registry — a partitioned window can still be unbounded per group
+#: (a per-domain window sends one mega-domain through one task), so
+#: every partition key must name its bound here. Keyed by the FULL
+#: partition-column tuple of the window spec, so a second window
+#: cannot reuse a declared leading column unreviewed; values are
 #: (kind, justification). Kinds:
 #:   "wgl"     — rank-limit window; the plan MUST contain
 #:               WindowGroupLimit (machine-asserted): each map
@@ -110,8 +104,6 @@ GLOBAL_WINDOW_ALLOWED = {
 #: N_group/buckets) and need no entry.
 WINDOW_KEY_BOUNDS = {
     ("query_id",): ("wgl", "top-k rank windows over scored candidates"),
-    ("match_id",): ("wgl", "coarse-list assignment: rank over n_centroids "
-                    "rows"),
     ("anchor_id",): ("wgl", "contrastive mining: top-k per anchor"),
     ("_id",): ("wgl", "threshold-join dedup: top-k per probe row"),
     ("cluster_id",): ("wgl", "per-cluster cap: rank <= cap"),
@@ -185,10 +177,9 @@ _BOUNDED_OFFSET_PREFIXES = ("_gsi_bucket",
                             # into this namespace so the bound never
                             # whitelists a business column on raw rows.
                             # Concrete names, not the bare "_qs_"
-                            # namespace (round-8 advisor: a future
-                            # plan minting an unrelated _qs_* column
-                            # over raw corpus rows must NOT inherit
-                            # the exemption).
+                            # namespace: a plan minting an unrelated
+                            # _qs_* column over raw corpus rows must
+                            # NOT inherit the exemption.
                             "_qs_bin", "_qs_g_")
 
 
@@ -228,6 +219,13 @@ def _unpartitioned_window_orders(plan: str) -> list[str]:
     shape WindowExec warns about)."""
     return [args[0] for args in _window_specs(plan)
             if " ASC" in args[0] or " DESC" in args[0]]
+
+
+def _global_window_orders(plan: str) -> list[str]:
+    """The unpartitioned windows that need a ``GLOBAL_WINDOW_ALLOWED``
+    entry: those not ordered by a bucket-offsets column."""
+    return [o for o in _unpartitioned_window_orders(plan)
+            if not o.lstrip("(").startswith(_BOUNDED_OFFSET_PREFIXES)]
 
 
 def _partitioned_window_keys(plan: str) -> set[tuple[str, ...]]:
@@ -284,10 +282,7 @@ def test_plan_lint(spark, sf_dir, name, plan_cache):
     assert "CartesianProduct" not in plan, (
         f"{name}: unconstrained cross join — at scale this is |L|×|R|")
 
-    globals_ = [
-        o for o in _unpartitioned_window_orders(plan)
-        if not o.lstrip("(").startswith(_BOUNDED_OFFSET_PREFIXES)
-    ]
+    globals_ = _global_window_orders(plan)
     if globals_:
         assert name in GLOBAL_WINDOW_ALLOWED, (
             f"{name}: unpartitioned window over a non-offsets relation "
@@ -326,17 +321,34 @@ def test_plan_lint(spark, sf_dir, name, plan_cache):
             f"a declared E13/E15 Python-surface query")
 
 
+def test_no_stale_exemption(plan_cache):
+    """Every exemption is used by a registered plan: a ``BNLJ_ALLOWED``
+    name whose plan has no BroadcastNestedLoopJoin, a
+    ``GLOBAL_WINDOW_ALLOWED`` name whose plan has no unpartitioned
+    window, or a ``WINDOW_KEY_BOUNDS`` key that no plan partitions a
+    window by would let a later regression of that shape pass
+    unreviewed, so the entry must go."""
+    plans = {name: plan_cache.plan(name) for name in ALL}
+    stale = [f"BNLJ_ALLOWED {n}" for n in sorted(BNLJ_ALLOWED)
+             if "BroadcastNestedLoopJoin" not in plans.get(n, "")]
+    stale += [f"GLOBAL_WINDOW_ALLOWED {n}" for n in sorted(GLOBAL_WINDOW_ALLOWED)
+              if not _global_window_orders(plans.get(n, ""))]
+    used = set().union(*map(_partitioned_window_keys, plans.values()))
+    stale += [f"WINDOW_KEY_BOUNDS {k}" for k in WINDOW_KEY_BOUNDS
+              if k not in used]
+    assert not stale, f"exemptions no registered plan needs: {stale}"
+
+
 def test_registry_analyzes_at_every_sf_dir(spark, sf_dir, plan_cache):
     """Fixture-drift tripwire: every registered query must BUILD
     against every generated sf dir. Mostly schema resolution, but
     builders of iterative/driver-seeded queries (k-means seeds,
     PageRank vertex counts, CC convergence loops) legitimately run
     bounded Spark jobs at build time — the dominant cost of this test,
-    so the sweep runs through a thread pool (round-7 verdict ask #8:
-    the serial sweep had grown to a large share of the suite's wall
-    clock). Spark plan analysis and job submission are thread-safe on
-    one session; eager build-time jobs from different builders simply
-    interleave on local[32], and the one tempdir-writing builder
+    so the sweep runs through a thread pool (a serial sweep is a large
+    share of the suite's wall clock). Spark plan analysis and job
+    submission are thread-safe on one session; eager build-time jobs
+    from different builders simply interleave on local[32], and the one tempdir-writing builder
     isolates each build under a unique path
     (test_persisted_index_concurrent_builders). Parallelism is WITHIN
     one sf dir at a time — never across dirs: the SQL-path builders
@@ -346,9 +358,9 @@ def test_registry_analyzes_at_every_sf_dir(spark, sf_dir, plan_cache):
     masking (or falsely surfacing) exactly the per-dir schema drift
     this test exists to catch. Within one dir every racing
     registration points at the same parquet, so the race is benign.
-    Same coverage — the price of catching drift like round 2's events
-    `ts` type change in-repo instead of in the driver, at a fraction
-    of the wall."""
+    Same coverage — the price of catching fixture drift (such as a
+    change of the events ``ts`` type) in-repo instead of in the
+    driver, at a fraction of the wall."""
     import os
     from concurrent.futures import ThreadPoolExecutor
 
@@ -358,11 +370,9 @@ def test_registry_analyzes_at_every_sf_dir(spark, sf_dir, plan_cache):
     # generator — so build at the pytest gate and the driver gate
     # (sf0.001, sf0.01) and stop there. Builders with eager build-time
     # jobs (Lloyd training, CC convergence, persisted-sketch writes)
-    # made the sf0.1 leg pay 10x fixture cost for no additional
-    # schema coverage (round-10 suite-budget shave: the suite had
-    # crept from 16:28 to straddling the 20-min line as the registry
-    # grew); sf0.1 and sf1 executed coverage lives in the recorded
-    # `scripts/strict_sweep.py` runs (SCALE.md).
+    # would make an sf0.1 leg pay 10x fixture cost for no additional
+    # schema coverage; sf0.1 and sf1 executed coverage lives in the
+    # recorded `scripts/strict_sweep.py` runs (SCALE.md).
     sf_dirs = [os.path.join(root, d) for d in sorted(os.listdir(root))
                if d.startswith("sf")
                and d.split("sf", 1)[1] in ("0.001", "0.01")]
@@ -403,8 +413,8 @@ def test_rfm_has_no_global_ntile_window(spark, sf_dir):
 
 def test_window_bound_lint_flags_naive_group_window(spark):
     """The lint mechanism itself: a naive corpus window partitioned by
-    a low-cardinality key with NO declared bound must be flagged (the
-    round-5 `domain_cap_sample` regression class), while the same
+    a low-cardinality key with NO declared bound must be flagged (a
+    per-domain window over raw rows), while the same
     logical rank computed via grouped_rank passes GENERICALLY (its
     windows self-identify through the range-bucket column in the
     partition tuple / offsets order key) — no per-key whitelist entry
@@ -433,8 +443,8 @@ def test_window_bound_lint_flags_naive_group_window(spark):
 
 
 def test_wgl_bound_is_checked_per_window_tuple(spark):
-    """Round-6 advisor: the 'wgl' kind must bind to the SPECIFIC window,
-    not to WindowGroupLimit-appears-anywhere. A plan that contains a
+    """The 'wgl' kind must bind to the SPECIFIC window, not to
+    WindowGroupLimit-appears-anywhere. A plan that contains a
     genuinely rank-limited window on one whitelisted wgl key plus an
     UNLIMITED window on a different whitelisted wgl key must flag the
     latter: its tuple has no matching WindowGroupLimit node."""
@@ -443,20 +453,20 @@ def test_wgl_bound_is_checked_per_window_tuple(spark):
 
     df = spark.createDataFrame(
         [(1, 10, 0.5), (1, 11, 0.7), (2, 10, 0.1)],
-        "query_id long, match_id long, sim double")
+        "query_id long, anchor_id long, sim double")
     limited = df.withColumn("r", F.row_number().over(
-        Window.partitionBy("query_id").orderBy("sim", "match_id"))) \
+        Window.partitionBy("query_id").orderBy("sim", "anchor_id"))) \
         .filter(F.col("r") <= 1)
     sneaky = limited.withColumn("r2", F.row_number().over(
-        Window.partitionBy("match_id").orderBy("sim", "query_id")))
+        Window.partitionBy("anchor_id").orderBy("sim", "query_id")))
     plan = physical_plan(sneaky)
 
     wgl = _wgl_partition_tuples(plan)
     assert ("query_id",) in wgl          # the limited window pushed WGL
-    assert ("match_id",) not in wgl      # the sneaky one did not
+    assert ("anchor_id",) not in wgl     # the sneaky one did not
     flagged = [part for part in _partitioned_window_keys(plan)
                if not any(c.startswith(_BOUNDED_OFFSET_PREFIXES)
                           for c in part)
                and WINDOW_KEY_BOUNDS.get(part, ("", ""))[0] == "wgl"
                and part not in wgl]
-    assert flagged == [("match_id",)]
+    assert flagged == [("anchor_id",)]

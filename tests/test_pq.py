@@ -103,6 +103,40 @@ def test_ivfpq_exact_config_equals_brute_force(spark, sf_dir):
     assert (res["cosine_sim"] == bf["cosine_sim"]).all()
 
 
+@pytest.mark.parametrize("topn", [1, 3])
+def test_coarse_quantizer_matches_brute_force(spark, topn):
+    """The coarse quantizer against a brute-force reference (cross join
+    with the seeds + ``row_number`` per row): seeds are the lowest
+    NON-NULL ids, and exact cosine ties (ids 1 and 2 carry the same
+    vector) go to the lower centroid id, for one list and for
+    ``nprobe`` lists. A NULL id never seeds — as the first row of an
+    ascending sort it used to become a list no probe could join."""
+    from pyspark.sql import Window
+
+    from data_eng_taxi_ibis_dagster_spark.operators.similarity import cosine
+
+    df = spark.createDataFrame(
+        [(None, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 1.0, 0.0]),
+         (3, [0.0, 0.0, 1.0]), (4, [1.0, 0.1, 0.0]), (5, [0.0, 1.0, 1.0]),
+         (6, [1.0, 1.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    got = PQ.assign_lists(df, PQ.coarse_centroids(df, n_centroids=3),
+                          "_id", "_v", topn).select("_id", "centroid_id").collect()
+
+    seeds = df.filter(F.col("vec_id").isNotNull()).orderBy("vec_id").limit(3) \
+        .select(F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cent"))
+    w = Window.partitionBy("_id").orderBy(F.col("_csim").desc(),
+                                          F.col("centroid_id").asc())
+    ref = (df.crossJoin(seeds)
+           .select(F.col("vec_id").alias("_id"), "centroid_id",
+                   cosine(F.col("embedding"), F.col("cent")).alias("_csim"))
+           .withColumn("_rn", F.row_number().over(w))
+           .filter(F.col("_rn") <= topn).select("_id", "centroid_id"))
+    assert sorted(got, key=str) == sorted(ref.collect(), key=str)
+    assert sorted({r["centroid_id"] for r in got}) == \
+        ([1, 3] if topn == 1 else [1, 2, 3])
+
+
 def test_ivfpq_index_partition_pruning(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings").limit(200)
     book = PQ.train_codebooks_exact(emb, m=8, dim=64)

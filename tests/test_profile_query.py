@@ -1,7 +1,7 @@
 """``scripts/profile_query.py`` run as a user runs it: from a directory
 outside the repository, which is absent from ``PYTHONPATH``, so the
-script itself must make the package importable to the driver and to
-Spark's Python workers."""
+script itself must make the package importable to the driver (the
+session does so for Spark's Python workers)."""
 
 import json
 import os
